@@ -43,9 +43,6 @@ class IngestConfig:
         "__bulker_full_attempts",
         "__received_at",
     )
-    # max attempts before an event is dead-lettered for good
-    # (reference: Bull attempts: 5, src/main.ts:502-507)
-    max_attempts: int = 5
     # storage layout fixed at table creation: directory partitioning
     # (scale addition; the reference has none) and in-file sort order
     # (the MergeTree ORDER BY sent_at analog, D2)

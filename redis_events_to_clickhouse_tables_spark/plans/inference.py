@@ -61,26 +61,6 @@ def _is_date_string(col: Column) -> Column:
     )
 
 
-def infer_leaf_types(df: DataFrame) -> dict[str, T.DataType]:
-    """Refine string columns to TimestampType where *every* non-null
-    value is a date-string (full-batch scan, one aggregate job)."""
-    string_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
-    if not string_cols:
-        return {}
-    aggs = [
-        (
-            F.min(F.when(F.col(c).isNotNull(), _is_date_string(F.col(c)).cast("int")))
-        ).alias(c)
-        for c in string_cols
-    ]
-    row = df.agg(*aggs).collect()[0]
-    return {
-        c: T.TimestampType()
-        for c in string_cols
-        if row[c] == 1  # None => column never present; stays string
-    }
-
-
 def apply_leaf_types(df: DataFrame, refinements: dict[str, T.DataType]) -> DataFrame:
     out = []
     for f in df.schema.fields:
@@ -100,17 +80,13 @@ def parse_events(spark: SparkSession, raw: DataFrame, json_col: str = "value") -
     after flattening (see streaming/normalize.py) so nested leaves get
     the same treatment as top-level ones.
 
-    Fast path: hand the single string column to the JVM's
-    ``DataFrameReader.json(Dataset[String])`` overload directly —
-    inference and parsing stay entirely JVM-side. The public PySpark
+    The single string column goes to the JVM's
+    ``DataFrameReader.json(Dataset[String])`` overload directly, so
+    inference and parsing stay entirely JVM-side. (The public PySpark
     signature only accepts an RDD[str], which round-trips every row
-    through Python pickling; that path is kept as the fallback.
+    through Python pickling.)
     """
-    try:
-        jds = getattr(raw.select(json_col)._jdf, "as")(
-            spark._jvm.org.apache.spark.sql.Encoders.STRING()
-        )
-        return DataFrame(spark._jsparkSession.read().json(jds), spark)
-    except Exception:  # py4j surface changed: use the public API
-        rdd = raw.select(json_col).rdd.map(lambda r: r[0])
-        return spark.read.json(rdd)
+    jds = getattr(raw.select(json_col)._jdf, "as")(
+        spark._jvm.org.apache.spark.sql.Encoders.STRING()
+    )
+    return DataFrame(spark._jsparkSession.read().json(jds), spark)

@@ -100,6 +100,7 @@ scale the queue would be fronted by Kafka and read with
 
 from __future__ import annotations
 
+import hashlib
 import json
 
 from pyspark.sql import DataFrame, SparkSession
@@ -436,16 +437,30 @@ class RedisBullSource:
             {**event, "__single_retry_attempts": n}, delay_ms=delay_ms
         )
 
-    def run_once(self, engine, batch_id: int | None = None):
+    def run_once(self, engine, batch_id: int | str | None = None):
         """One poll -> process -> ack cycle against an ``IngestEngine``.
 
         The ack happens ONLY if ``process_raw_batch`` returns (commit);
         on any exception the jobs stay in the processing list for
         ``salvage()`` to re-deliver — the at-least-once contract.
+
+        Without a ``batch_id`` the batch is keyed by a content hash of
+        its payloads: a crash AFTER commit but BEFORE ack redelivers
+        the identical job set, reproduces the same id, and the store's
+        commit log absorbs the replay — no counter to persist, no reuse
+        hazard after restart (a fresh counter would collide with a
+        committed id and LOSE the new batch). The flip side is
+        deliberate: a producer re-sending a byte-identical batch
+        deduplicates.
         """
         df = self.poll()
         if not self._inflight:
             return None
+        if batch_id is None:
+            digest = hashlib.sha256(
+                "\x00".join(self._inflight_payloads).encode("utf-8")
+            ).hexdigest()[:24]
+            batch_id = f"redis-{digest}"
         report = engine.process_raw_batch(df, batch_id=batch_id)
         self.ack()
         return report
@@ -460,36 +475,20 @@ class RedisBullSource:
         """Supervised polling loop: the Redis-source equivalent of the
         file-source worker (__main__.run_worker). On startup, salvage
         a crashed predecessor's processing list and (env-gated) the
-        old queue; then poll -> process -> ack until ``shutdown`` is
-        set, sleeping ``interval_s`` between empty polls (the
-        reference's BULKER_REPEAT_INTERVAL). Batch ids are
-        monotonically assigned so the store's commit log stays
-        idempotent across THIS worker's batches; cross-restart replay
-        safety comes from the processing-list protocol itself.
-        Returns the number of batches committed."""
-        import hashlib
-
+        old queue; then ``run_once`` until ``shutdown`` is set,
+        sleeping ``interval_s`` between empty polls (the reference's
+        BULKER_REPEAT_INTERVAL). Batch ids are content hashes of the
+        polled payloads (see ``run_once``), so a batch redelivered
+        after a crash — by this worker or a restarted one — replays to
+        a no-op. Returns the number of batches committed."""
         self.salvage()
         if config is not None:
             self.maybe_salvage_old_queue(config)
         batches = 0
         while not shutdown.is_set():
-            df = self.poll()
-            if not self._inflight:  # empty poll: idle tick
+            if self.run_once(engine) is None:  # empty poll: idle tick
                 shutdown.wait(interval_s)
                 continue
-            # batch id = content hash: a crash AFTER commit but BEFORE
-            # ack redelivers the identical job set, reproduces the same
-            # id, and the store's commit log absorbs the replay — no
-            # counter to persist, no reuse hazard after restart (a
-            # fresh counter would collide with a committed id and LOSE
-            # the new batch). The flip side is deliberate: a producer
-            # re-sending a byte-identical batch deduplicates.
-            digest = hashlib.sha256(
-                "\x00".join(self._inflight_payloads).encode("utf-8")
-            ).hexdigest()[:24]
-            engine.process_raw_batch(df, batch_id=f"redis-{digest}")
-            self.ack()
             batches += 1
         return batches
 

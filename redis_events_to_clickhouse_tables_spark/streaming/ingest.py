@@ -153,11 +153,10 @@ class IngestReport:
     errors: dict[str, str] = field(default_factory=dict)
     # Wall seconds per pipeline phase (BENCH r6 item 6: a depressed
     # ingest headline must self-attribute). parse_infer is a single
-    # wall span; route is 0.0 by construction (the routing table rides
-    # the same grouped aggregate as the counts — kept as a key for
-    # record continuity); normalize/append are SUMS across the
-    # concurrent per-table flushes, so they can exceed the batch wall
-    # time — they attribute cost, they don't partition the clock.
+    # wall span that includes routing (the routing table rides the same
+    # grouped aggregate as the counts); normalize/append are SUMS across
+    # the concurrent per-table flushes, so they can exceed the batch
+    # wall time — they attribute cost, they don't partition the clock.
     phase_seconds: dict[str, float] = field(default_factory=dict)
 
 
@@ -389,7 +388,6 @@ class IngestEngine:
                 )
             valid = events.filter(F.col(etp).isNotNull())
             types = [r["__etype"] for r in groups if r["__etype"] is not None]
-            _phase("route", 0.0)
 
             def _process_type(etype: str) -> None:
                 sub = valid.filter(F.col(etp) == etype)

@@ -101,7 +101,8 @@ class TableStore:
         )
 
     # -- versioned data layout -------------------------------------------
-    # Rewrites (compact, widening) produce a NEW data directory and flip
+    # Rewrites (compact, widening, delete, upsert) all go through
+    # ``_publish``: they produce a NEW data directory and flip
     # an atomically-replaced CURRENT pointer, keeping the immediately
     # previous version on disk as a grace window. This is the reader
     # snapshot-isolation contract of a table format (Delta/Iceberg keep
@@ -153,6 +154,55 @@ class TableStore:
         for name in superseded:
             if name not in keep:
                 shutil.rmtree(p / name, ignore_errors=True)
+
+    def _publish(
+        self, table: str, df: DataFrame, touched: DataFrame | None = None
+    ) -> Path:
+        """Write ``df`` as the table's next data version in its recorded
+        layout (``partitionBy`` + ``sortWithinPartitions``) and flip
+        CURRENT to it; returns the new version's directory.
+
+        ``touched`` (rows carrying the partition column) prunes the
+        rewrite on a single-level partitioned table: only partitions
+        holding a ``touched`` value are written from ``df``; every other
+        partition directory is copied into the new version as-is —
+        never re-read, never re-encoded (the analog of a manifest-based
+        format rewriting only affected data files). Multi-level or
+        unpartitioned tables rewrite fully."""
+        meta = self._load_meta(table)
+        part_cols = [c for c in meta["partition_by"] if c in df.columns]
+        sort_cols = [c for c in meta["sort_by"] if c in df.columns]
+        new_dir = self._next_version_dir(table)
+        untouched: list[Path] = []
+        if touched is not None and len(part_cols) == 1:
+            pc = part_cols[0]
+            # partition values holding >=1 touched row — a driver
+            # round-trip bounded by the partition-value count (the
+            # store's usual cardinality class)
+            affected = [r[0] for r in touched.select(pc).distinct().collect()]
+            affected_dirs = self._partition_dir_names(touched, pc)
+            df = df.filter(
+                F.col(pc).isin([v for v in affected if v is not None])
+                | (F.col(pc).isNull() if None in affected else F.lit(False))
+            )
+            untouched = [
+                d
+                for d in sorted(self.data_dir(table).iterdir())
+                if d.is_dir() and "=" in d.name and d.name not in affected_dirs
+            ]
+        if sort_cols:
+            # partitionBy sorts its input by the partition columns unless
+            # already so ordered, and that sort replaces (not refines) a
+            # sort on sort_cols alone: lead with the partition columns
+            df = df.sortWithinPartitions(*part_cols, *sort_cols)
+        writer = df.write.mode("overwrite")
+        if part_cols:
+            writer = writer.partitionBy(*part_cols)
+        writer.parquet(str(new_dir))
+        for d in untouched:
+            shutil.copytree(d, new_dir / d.name, dirs_exist_ok=True)
+        self._flip_version(table, new_dir)
+        return new_dir
 
     # -- read -------------------------------------------------------------
     def read(self, table: str) -> DataFrame:
@@ -234,12 +284,13 @@ class TableStore:
             # no shuffle; a no-op when already narrower)
             aligned = aligned.coalesce(coalesce_to)
         sort_cols = [c for c in meta["sort_by"] if c in set(target.fieldNames())]
+        part_cols = [c for c in meta["partition_by"] if c in set(target.fieldNames())]
         if sort_cols:
-            aligned = aligned.sortWithinPartitions(*sort_cols)
+            # partition columns lead: see _publish
+            aligned = aligned.sortWithinPartitions(*part_cols, *sort_cols)
         data_dir = self.data_dir(table)
         data_dir.mkdir(parents=True, exist_ok=True)
         writer = aligned.write.mode("append")
-        part_cols = [c for c in meta["partition_by"] if c in set(target.fieldNames())]
         if part_cols:
             writer = writer.partitionBy(*part_cols)
         writer.parquet(str(data_dir))
@@ -270,26 +321,12 @@ class TableStore:
         n_before = len(files)
         total = sum(f.stat().st_size for f in files)
         n_target = max(1, -(-total // target_file_bytes))  # ceil
-        meta = self._load_meta(table)
-        df = self.read(table)
-        part_cols = meta["partition_by"]
-        if part_cols:
-            # co-locate each partition's rows so partitionBy emits one
-            # file per (task, partition-value) — repartition on the keys
-            df = df.repartition(int(n_target), *part_cols)
-        else:
-            df = df.repartition(int(n_target))
-        sort_cols = [c for c in meta["sort_by"] if c in df.columns]
-        if sort_cols:
-            df = df.sortWithinPartitions(*sort_cols)
-        new_dir = self._next_version_dir(table)
-        writer = df.write.mode("overwrite")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(str(new_dir))
-        self._flip_version(table, new_dir)
-        n_after = len(list(new_dir.rglob("*.parquet")))
-        return (n_before, n_after)
+        # co-locate each partition's rows so partitionBy emits one file
+        # per (task, partition-value) — repartition on the keys
+        part_cols = self._load_meta(table)["partition_by"]
+        df = self.read(table).repartition(int(n_target), *part_cols)
+        new_dir = self._publish(table, df)
+        return (n_before, len(list(new_dir.rglob("*.parquet"))))
 
     def _partition_dir_names(self, values_df, pc: str) -> set[str]:
         """Exact Spark-rendered partition directory names for the
@@ -298,7 +335,6 @@ class TableStore:
         formatting (booleans, timestamps, '%'/':'/'=' characters) can
         never diverge from the data write. Cost: one tiny job over the
         distinct partition values."""
-        import shutil as _shutil
         import tempfile
 
         tmp = Path(tempfile.mkdtemp(prefix="partnames-"))
@@ -315,7 +351,7 @@ class TableStore:
                 d.name for d in tmp.iterdir() if d.is_dir() and "=" in d.name
             }
         finally:
-            _shutil.rmtree(tmp, ignore_errors=True)
+            shutil.rmtree(tmp, ignore_errors=True)
 
     def delete_where(self, table: str, condition) -> int:
         """Targeted row deletion (the GDPR / right-to-be-forgotten
@@ -326,19 +362,12 @@ class TableStore:
         Rows where the condition is NULL (three-valued logic) do NOT
         match and are kept.
 
-        Partition-pruned at scale: when the table is single-level
-        directory-partitioned, only partitions that actually contain
-        matching rows are rewritten; every untouched partition's files
-        move into the new version as an os-level copy — never re-read,
-        never re-encoded (the analog of a manifest-based format
-        rewriting only affected data files; with a manifest layout the
-        copy would be a metadata-only move). Multi-level or
-        unpartitioned tables rewrite fully, which is why
-        deletion-prone tables should partition on the deletion key's
-        natural ancestor (date, tenant).
+        Partition-pruned at scale (``_publish``): on a single-level
+        partitioned table only partitions that contain matching rows
+        are rewritten. Multi-level or unpartitioned tables rewrite
+        fully, which is why deletion-prone tables should partition on
+        the deletion key's natural ancestor (date, tenant).
         """
-        import shutil as _shutil
-
         cond = F.expr(condition) if isinstance(condition, str) else condition
         df = self.read(table)
         if not df.columns:
@@ -350,39 +379,8 @@ class TableStore:
         if n_match == 0:
             matched.unpersist()
             return 0
-        meta = self._load_meta(table)
-        part_cols = list(meta["partition_by"])
-        sort_cols = [c for c in meta["sort_by"] if c in df.columns]
-        new_dir = self._next_version_dir(table)
-
-        def _sorted(s: DataFrame) -> DataFrame:
-            return s.sortWithinPartitions(*sort_cols) if sort_cols else s
-
-        if len(part_cols) == 1:
-            pc = part_cols[0]
-            # partition values holding >=1 matching row — a driver
-            # round-trip bounded by the partition-value count (the
-            # store's usual cardinality class)
-            affected = [r[0] for r in matched.select(pc).distinct().collect()]
-            affected_dirs = self._partition_dir_names(matched, pc)
-            in_affected = F.col(pc).isin(
-                [v for v in affected if v is not None]
-            ) | (F.col(pc).isNull() if None in affected else F.lit(False))
-            survivors = df.filter(~matches).filter(in_affected)
-            _sorted(survivors).write.mode("overwrite").partitionBy(pc).parquet(
-                str(new_dir)
-            )
-            data_dir = self.data_dir(table)
-            for d in sorted(data_dir.iterdir()):
-                if d.is_dir() and "=" in d.name and d.name not in affected_dirs:
-                    _shutil.copytree(d, new_dir / d.name, dirs_exist_ok=True)
-        else:
-            writer = _sorted(df.filter(~matches)).write.mode("overwrite")
-            if part_cols:
-                writer = writer.partitionBy(*part_cols)
-            writer.parquet(str(new_dir))
+        self._publish(table, df.filter(~matches), touched=matched)
         matched.unpersist()
-        self._flip_version(table, new_dir)
         return int(n_match)
 
     def upsert(
@@ -459,42 +457,16 @@ class TableStore:
         survivors = existing.join(
             incoming.select(*keys), list(keys), "left_anti"
         )
-        merged = survivors.unionByName(incoming)
-        part_cols = list(meta["partition_by"])
-        sort_cols = [c for c in meta["sort_by"] if c in merged.columns]
-        new_dir = self._next_version_dir(table)
-
-        def _sorted(s: DataFrame) -> DataFrame:
-            return s.sortWithinPartitions(*sort_cols) if sort_cols else s
-
-        if len(part_cols) == 1:
-            import shutil as _shutil
-
-            pc = part_cols[0]
-            # affected = partitions receiving new rows UNION partitions
-            # holding replaced rows (cross-partition key moves rewrite
-            # BOTH, so the stale copy dies with the old partition)
-            touched = incoming.select(pc).unionByName(matched.select(pc))
-            affected = [r[0] for r in touched.distinct().collect()]
-            affected_dirs = self._partition_dir_names(touched, pc)
-            in_affected = F.col(pc).isin(
-                [v for v in affected if v is not None]
-            ) | (F.col(pc).isNull() if None in affected else F.lit(False))
-            _sorted(merged.filter(in_affected)).write.mode(
-                "overwrite"
-            ).partitionBy(pc).parquet(str(new_dir))
-            data_dir = self.data_dir(table)
-            for d in sorted(data_dir.iterdir()):
-                if d.is_dir() and "=" in d.name and d.name not in affected_dirs:
-                    _shutil.copytree(d, new_dir / d.name, dirs_exist_ok=True)
-        else:
-            writer = _sorted(merged).write.mode("overwrite")
-            if part_cols:
-                writer = writer.partitionBy(*part_cols)
-            writer.parquet(str(new_dir))
+        # touched = partitions receiving new rows UNION partitions
+        # holding replaced rows (cross-partition key moves rewrite BOTH,
+        # so the stale copy dies with the old partition)
+        self._publish(
+            table,
+            survivors.unionByName(incoming),
+            touched=incoming.unionByName(matched),
+        )
         incoming.unpersist()
         matched.unpersist()
-        self._flip_version(table, new_dir)
         if batch_id is not None:
             meta["committed_batches"].append(tag)
             meta["committed_batches"] = meta["committed_batches"][
@@ -512,14 +484,8 @@ class TableStore:
         data_dir = self.data_dir(table)
         if not data_dir.exists() or not any(data_dir.rglob("*.parquet")):
             return
-        meta = self._load_meta(table)
-        new_dir = self._next_version_dir(table)
         old_df = self.spark.read.schema(old).parquet(str(data_dir))
-        writer = _align(old_df, new).write.mode("overwrite")
-        if meta["partition_by"]:
-            writer = writer.partitionBy(*meta["partition_by"])
-        writer.parquet(str(new_dir))
-        self._flip_version(table, new_dir)
+        self._publish(table, _align(old_df, new))
 
 
 def swap_dirs(tmp: Path, live: Path) -> None:

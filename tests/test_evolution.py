@@ -76,6 +76,43 @@ def test_store_widening_rewrites_existing_data(spark, tmp_path):
     assert vals == {1: "42", 2: "str"}  # old data rewritten as text
 
 
+def test_store_widening_keeps_partition_and_sort_layout(spark, tmp_path):
+    """A widening rewrite publishes the new version in the table's
+    recorded layout: the day= directories survive and every file is
+    sorted by k, even when the rewrite packs several appended files
+    into one task."""
+    import pyarrow.parquet as pq
+
+    store = TableStore(spark, tmp_path / "warehouse")
+    # three batches, later ones holding smaller keys, each landing as
+    # many small files per day= directory
+    for b in range(3):
+        lo = (2 - b) * 40
+        rows = [(k, k, f"d{k % 2}") for k in range(lo, lo + 40)]
+        store.write(
+            spark.createDataFrame(rows, "k long, v long, day string"),
+            "t",
+            partition_by=("day",),
+            sort_by=("k",),
+        )
+    before = store.data_dir("t")
+    _write(store, spark, "t", [(500, "wide", "d0")], "k long, v string, day string")
+
+    df = store.read("t")
+    assert df.schema["v"].dataType == T.StringType()
+    vals = {r["k"]: r["v"] for r in df.collect()}
+    assert vals == {**{k: str(k) for k in range(120)}, 500: "wide"}
+
+    root = store.data_dir("t")
+    assert root != before  # the widening published a new version
+    assert sorted(d.name for d in root.iterdir() if d.is_dir()) == ["day=d0", "day=d1"]
+    files = list(root.rglob("*.parquet"))
+    assert files
+    for f in files:
+        ks = pq.ParquetFile(str(f)).read(columns=["k"]).column("k").to_pylist()
+        assert ks == sorted(ks), f.name
+
+
 def test_store_rejects_bad_table_names(spark, tmp_path):
     store = TableStore(spark, tmp_path / "warehouse")
     for bad in ("", "_dlq", "a/b", ".."):

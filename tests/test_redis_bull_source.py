@@ -216,6 +216,31 @@ def test_double_delivery_of_committed_batch_is_idempotent(spark, tmp_path):
     assert store.read("event_session").count() == 3  # not 6
 
 
+def test_run_once_without_batch_id_replays_idempotently(spark, tmp_path, monkeypatch):
+    """``run_once`` with no batch id keys the batch by a content hash of
+    its payloads, so a crash after commit but before ack replays the
+    salvaged batch to a no-op."""
+    fake = FakeRedis()
+    fake.rpush("bull:q:wait", *[_event(i) for i in range(3)])
+    engine, store = _engine(spark, tmp_path)
+
+    first = _source(spark, fake, max_batch=10)
+
+    def crash():
+        raise RuntimeError("worker died before ack")
+
+    monkeypatch.setattr(first, "ack", crash)
+    with pytest.raises(RuntimeError):
+        first.run_once(engine)  # committed, never acked
+    assert store.read("event_session").count() == 3
+
+    second = _source(spark, fake, max_batch=10)
+    assert second.salvage() == 3
+    assert second.run_once(engine) is not None
+    assert fake.llen("bull:q:processing:worker-1") == 0
+    assert store.read("event_session").count() == 3  # not 6
+
+
 def test_empty_queue_returns_empty_dataframe(spark):
     src = _source(spark, FakeRedis())
     df = src.poll()

@@ -64,6 +64,21 @@ def test_sort_within_files(spark, tmp_path):
     assert vals == sorted(vals)
 
 
+def test_sort_within_partitioned_files(spark, tmp_path):
+    """sort_by holds inside every file of a partitioned table too: the
+    writer's own sort on the partition column must not replace it."""
+    import pyarrow.parquet as pq
+
+    store = _store(spark, tmp_path)
+    rows = [(k, f"d{k % 2}") for k in range(20, 0, -1)]
+    store.write(_df(spark, rows).coalesce(1), "t", partition_by=("day",), sort_by=("k",))
+    files = list(store.data_dir("t").rglob("*.parquet"))
+    assert len(files) == 2
+    for f in files:
+        vals = pq.ParquetFile(str(f)).read(columns=["k"]).column("k").to_pylist()
+        assert vals == sorted(vals), f.parent.name
+
+
 def test_compaction_merges_small_files(spark, tmp_path):
     store = _store(spark, tmp_path)
     for i in range(5):  # 5 micro-batches -> many small files
