@@ -116,7 +116,9 @@ def graph_copurchase_jaccard_linkpred(
     # graph). Checkpointing the ALREADY-CACHED frame is one cheap
     # cache scan, and the stats loss is moot: every downstream join
     # carries an explicit broadcast hint.
-    edges = model_checkpoint(edges)
+    cached = edges
+    edges = model_checkpoint(cached)
+    cached.unpersist()  # every reference below reads the leaf
     deg = edges.groupBy(F.col("s").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("deg")
     )
@@ -230,7 +232,9 @@ def graph_copurchase_assortativity(
         .persist()
     )
     edges.count()  # same multi-consumer materialization as linkpred
-    edges = model_checkpoint(edges)  # same post-cache leaf as linkpred
+    cached = edges
+    edges = model_checkpoint(cached)  # same post-cache leaf as linkpred
+    cached.unpersist()
     deg = edges.groupBy(F.col("s").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("deg")
     )

@@ -2330,6 +2330,7 @@ def stats_cochran_q_event_types(
     rows = out.persist()
     rows.count()
     flags.unpersist()
+    cnts.unpersist()
     return rows
 
 

@@ -36,8 +36,6 @@ import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.pipeline import contamination_scores, repetition_scores
 from ..operators.text import gopher_scores
@@ -80,32 +78,3 @@ class CurationLog:
         verdict = contam.join(rep, "doc_id").join(gopher, "doc_id")
         tag = f"b{batch_id}" if batch_id is not None else "adhoc"
         verdict.write.mode("overwrite").parquet(str(self.root / tag))
-
-
-def start_curation_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    log: CurationLog,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """File-source document stream -> curation verdict log.
-
-    ``availableNow`` drains the backlog in bounded micro-batches then
-    stops — the batch-parity harness shape; a live deployment drops
-    that trigger and runs continuously off the same checkpoint.
-    """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: log.process_batch(batch, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

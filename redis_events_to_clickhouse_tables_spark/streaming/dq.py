@@ -26,11 +26,8 @@ Shape — the same delta-partial discipline as ``rollup.py``:
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from .partials import PartialStore
 
@@ -74,26 +71,16 @@ def _merge_partial_rows(partials: DataFrame) -> DataFrame:
     )
 
 
-class ContinuousQualityMonitor:
+class ContinuousQualityMonitor(PartialStore):
     """Parquet-backed, incrementally-maintained per-day quality ledger."""
 
-    def __init__(self, spark: SparkSession, root: str | os.PathLike):
-        self.spark = spark
-        self.store = PartialStore(
-            spark, root, _PARTIAL_SCHEMA, _merge_partial_rows
-        )
-
-    def process_batch(
-        self, events: DataFrame, batch_id: int | None = None
-    ) -> None:
-        self.store.write(quality_partials(events), batch_id)
-
-    def compact(self) -> None:
-        self.store.compact()
+    schema = _PARTIAL_SCHEMA
+    reduce = staticmethod(quality_partials)
+    merge = staticmethod(_merge_partial_rows)
 
     def current(self) -> DataFrame:
         """Merged per-day ledger with violation and duplicate ratios."""
-        merged = _merge_partial_rows(self.store.read())
+        merged = self.merged()
         viol = sum(F.col(c) for c in _RULES)
         est = F.hll_sketch_estimate("id_sketch")
         return merged.select(
@@ -118,27 +105,3 @@ class ContinuousQualityMonitor:
             (F.col("violation_ratio") > max_violation_ratio)
             | (F.col("dup_ratio") > max_dup_ratio)
         )
-
-
-def start_quality_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    monitor: ContinuousQualityMonitor,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """File-source event stream -> continuously maintained ledger."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: monitor.process_batch(batch, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -25,11 +25,8 @@ bucketed prefix scans over the day frame.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.numeric import dec
 from ..operators.stats2 import page_hinkley_from_daily
@@ -51,52 +48,20 @@ def _merge(partials: DataFrame) -> DataFrame:
     return partials.groupBy("d").agg(F.sum("x").cast("long").alias("x"))
 
 
-class ContinuousPageHinkley:
+class ContinuousPageHinkley(PartialStore):
     """Parquet-backed daily-cents ledger with a Page-Hinkley readout
     identical to the batch algebra."""
 
-    def __init__(self, spark: SparkSession, root: str | os.PathLike):
-        self.spark = spark
-        self.store = PartialStore(spark, root, _PARTIAL_SCHEMA, _merge)
-
-    def process_batch(
-        self, events: DataFrame, batch_id: int | None = None
-    ) -> None:
-        self.store.write(daily_cents_partials(events), batch_id)
-
-    def compact(self) -> None:
-        self.store.compact()
+    schema = _PARTIAL_SCHEMA
+    reduce = staticmethod(daily_cents_partials)
+    merge = staticmethod(_merge)
 
     def daily(self) -> DataFrame:
         """Merged ledger: one (d, x) row per day seen so far."""
-        return _merge(self.store.read())
+        return self.merged()
 
     def current(self) -> DataFrame:
         """The Page-Hinkley trace over everything ingested so far —
         identical algebra (and bit-identical output) to the batch
         ``stats_page_hinkley_daily``."""
         return page_hinkley_from_daily(self.spark, self.daily())
-
-
-def start_page_hinkley_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    mon: ContinuousPageHinkley,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """File-source events stream -> continuously maintained detector."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: mon.process_batch(batch, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

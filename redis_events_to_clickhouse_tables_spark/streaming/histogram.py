@@ -21,9 +21,7 @@ key count. The percentile read touches only the merged histogram
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .partials import PartialStore
@@ -84,33 +82,22 @@ def weekly_percentile_bins(partials: DataFrame) -> DataFrame:
     )
 
 
-class HistogramAggregate:
+class HistogramAggregate(PartialStore):
     """Parquet-backed incrementally-maintained histogram rollup.
 
-    Storage, replay idempotence, and crash-safe compaction delegate to
+    Storage, replay idempotence, and crash-safe compaction come from
     :class:`PartialStore` (same durability contract as the daily
     rollup)."""
 
-    def __init__(self, spark: SparkSession, root: str | os.PathLike):
-        self.spark = spark
-        self.store = PartialStore(
-            spark, root, _PARTIAL_SCHEMA, _merge_partial_rows
-        )
-
-    def _raw(self) -> DataFrame:
-        return self.store.read()
+    schema = _PARTIAL_SCHEMA
+    reduce = staticmethod(_partials)
+    merge = staticmethod(_merge_partial_rows)
 
     def current(self) -> DataFrame:
         """Merged (week, event_day, bin, cnt) as of the last batch."""
-        return _merge_partial_rows(self._raw())
+        return self.merged()
 
     def weekly_percentiles(self) -> DataFrame:
         """The dashboard view: weekly P50/P90 bins off the maintained
         histogram — no event-log rescan."""
-        return weekly_percentile_bins(self._raw())
-
-    def process_batch(self, events: DataFrame, batch_id: int | None = None) -> None:
-        self.store.write(_partials(events), batch_id)
-
-    def compact(self) -> None:
-        self.store.compact()
+        return weekly_percentile_bins(self.read())

@@ -33,6 +33,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -484,7 +485,12 @@ class IngestEngine:
             # per-table flushes run concurrently, like the reference's
             # independent bulkers (src/main.ts:463-514) — each submits
             # its own Spark jobs against the shared cached batch, and
-            # distinct types write to distinct table directories
+            # distinct types write to distinct table directories. Each
+            # task carries the caller's local properties (job group,
+            # description, tags), so its jobs are attributed to the
+            # caller. Wrap per task: one wrapper hands every thread the
+            # same Properties object, and a property one task sets
+            # would leak into the others.
             if len(types) <= 1:
                 for etype in sorted(types):
                     _process_type(etype)
@@ -492,7 +498,14 @@ class IngestEngine:
                 with ThreadPoolExecutor(
                     max_workers=min(8, len(types))
                 ) as pool:
-                    list(pool.map(_process_type, sorted(types)))
+                    futures = [
+                        pool.submit(
+                            inheritable_thread_target(self.spark)(_process_type), etype
+                        )
+                        for etype in sorted(types)
+                    ]
+                    for fut in futures:
+                        fut.result()
             return report
         finally:
             events.unpersist()

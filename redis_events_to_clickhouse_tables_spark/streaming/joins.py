@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from .stream import FILES_PER_TRIGGER
+
 # a purchase converts a view if it happens within this many seconds
 ATTRIBUTION_WINDOW_S = 30 * 60
 
@@ -67,7 +69,6 @@ def start_attribution_stream(
     schema,
     output_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
     watermark: str | None = None,
 ) -> StreamingQuery:
     """One event file-stream split into two watermarked sides, interval
@@ -77,7 +78,7 @@ def start_attribution_stream(
     the standard stream-stream join watermark arithmetic."""
     events = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", FILES_PER_TRIGGER)
         .parquet(input_dir)
     )
     wm = watermark or f"{2 * ATTRIBUTION_WINDOW_S} seconds"

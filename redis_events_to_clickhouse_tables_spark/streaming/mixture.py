@@ -18,11 +18,8 @@ approximate).
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.pipeline import waterfill_from_counts
 from .partials import PartialStore
@@ -46,53 +43,19 @@ def _merge_partial_rows(partials: DataFrame) -> DataFrame:
     )
 
 
-class ContinuousMixtureMonitor:
+class ContinuousMixtureMonitor(PartialStore):
     """Parquet-backed, incrementally-maintained per-source token
     ledger with a live water-filling allocation readout."""
 
-    def __init__(self, spark: SparkSession, root: str | os.PathLike):
-        self.spark = spark
-        self.store = PartialStore(
-            spark, root, _PARTIAL_SCHEMA, _merge_partial_rows
-        )
-
-    def process_batch(
-        self, docs: DataFrame, batch_id: int | None = None
-    ) -> None:
-        self.store.write(token_count_partials(docs), batch_id)
-
-    def compact(self) -> None:
-        self.store.compact()
+    schema = _PARTIAL_SCHEMA
+    reduce = staticmethod(token_count_partials)
+    merge = staticmethod(_merge_partial_rows)
 
     def counts(self) -> DataFrame:
         """Merged (source, c) ledger."""
-        return _merge_partial_rows(self.store.read())
+        return self.merged()
 
     def current(self) -> DataFrame:
         """Exact water-filling allocation over everything ingested so
         far — identical algebra to ``pipeline_token_budget_waterfill``."""
         return waterfill_from_counts(self.counts())
-
-
-def start_mixture_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    monitor: ContinuousMixtureMonitor,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """File-source documents stream -> continuously maintained ledger."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: monitor.process_batch(batch, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

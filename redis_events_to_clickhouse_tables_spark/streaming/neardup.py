@@ -53,7 +53,6 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import band_signatures
 
@@ -134,24 +133,3 @@ class NearDupIndex:
             new_sigs.write.mode("overwrite").parquet(str(self.sig_dir / tag))
         finally:
             new_sigs.unpersist()
-
-
-def start_neardup_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema: T.StructType,
-    index: NearDupIndex,
-    checkpoint_dir: str | None = None,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Stream (doc_id, text) parquet files through the incremental index."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    docs = reader.parquet(input_dir)
-    writer = docs.writeStream.foreachBatch(
-        lambda batch_df, batch_id: index.process_batch(batch_df, batch_id)
-    ).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()

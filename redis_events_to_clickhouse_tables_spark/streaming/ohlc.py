@@ -19,11 +19,8 @@ grows with the calendar, not the stream.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from .partials import PartialStore
 
@@ -98,28 +95,18 @@ def _merge_partial_rows(partials: DataFrame) -> DataFrame:
     )
 
 
-class ContinuousOhlcMonitor:
+class ContinuousOhlcMonitor(PartialStore):
     """Parquet-backed, incrementally-maintained weekly candle ledger."""
 
-    def __init__(self, spark: SparkSession, root: str | os.PathLike):
-        self.spark = spark
-        self.store = PartialStore(
-            spark, root, _PARTIAL_SCHEMA, _merge_partial_rows
-        )
-
-    def process_batch(
-        self, events: DataFrame, batch_id: int | None = None
-    ) -> None:
-        self.store.write(ohlc_partials(events), batch_id)
-
-    def compact(self) -> None:
-        self.store.compact()
+    schema = _PARTIAL_SCHEMA
+    reduce = staticmethod(ohlc_partials)
+    merge = staticmethod(_merge_partial_rows)
 
     def current(self) -> DataFrame:
         """(wk, n_events, open_v, high_v, low_v, close_v) over
         everything ingested so far — identical columns and values to
         the batch ``timeseries_ohlc_weekly``."""
-        m = _merge_partial_rows(self.store.read())
+        m = self.merged()
         return m.select(
             "wk",
             "n_events",
@@ -128,27 +115,3 @@ class ContinuousOhlcMonitor:
             "low_v",
             F.col("c_v").alias("close_v"),
         ).orderBy("wk")
-
-
-def start_ohlc_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    monitor: ContinuousOhlcMonitor,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """File-source events stream -> continuously maintained candles."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: monitor.process_batch(batch, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -1,13 +1,17 @@
 """Parquet-backed store of mergeable per-batch partials.
 
-The shared delta-partial discipline behind the continuous rollup
-(streaming/rollup.py) and the continuous count-min sketch
-(streaming/sketch.py): each micro-batch reduces to a small mergeable
-partial frame, partials merge-on-read with one bounded aggregate, and
-a periodic compaction folds them so reads stay O(recent batches).
+The shared delta-partial discipline behind every Layer-B streaming
+monitor (rollup, histogram, HLL and count-min sketches, quality,
+Page-Hinkley, PSI, text drift, mixture, OHLC, retention, SCD2): each
+micro-batch reduces to a small mergeable partial frame, partials
+merge-on-read with one bounded aggregate, and a periodic compaction
+folds them so reads stay O(recent batches). A monitor is a subclass
+that declares its partial ``schema``, ``reduce`` and ``merge`` and adds
+only its readouts; ``stream.start_batch_stream`` feeds it
+``process_batch``.
 
-Durability contract (the part both consumers used to get wrong —
-review finding r5):
+Durability contract (the part the first two consumers, rollup and
+count-min, used to get wrong — review finding r5):
 
 - **Replay idempotence across compaction.** Layout is
   ``root/b<ID>/`` per-batch partials plus at most one live
@@ -46,22 +50,29 @@ _BATCH_RE = re.compile(r"^b(-?\d+)$")
 class PartialStore:
     """Mergeable-partial parquet store with crash-safe compaction.
 
-    ``merge`` folds a frame of partial rows into the same shape (the
-    monoid sum, e.g. groupBy keys + integer sums); it must be
-    idempotent on already-merged frames.
+    ``reduce`` turns one micro-batch into its partial frame (rows of
+    ``schema``). ``merge`` folds a frame of partial rows into the same
+    shape (the monoid sum, e.g. groupBy keys + integer sums); it must
+    be idempotent on already-merged frames. Subclasses define all three
+    as class attributes; a bare store takes ``schema`` and ``merge`` as
+    arguments and is fed with ``write``.
     """
+
+    schema: str
 
     def __init__(
         self,
         spark: SparkSession,
         root: str | os.PathLike,
-        schema: str,
-        merge: Callable[[DataFrame], DataFrame],
+        schema: str | None = None,
+        merge: Callable[[DataFrame], DataFrame] | None = None,
     ):
         self.spark = spark
         self.root = Path(root)
-        self.schema = schema
-        self.merge = merge
+        if schema is not None:
+            self.schema = schema
+        if merge is not None:
+            self.merge = merge
         self.root.mkdir(parents=True, exist_ok=True)
         # sweep compaction temps orphaned by a pre-rename crash
         for orphan in self.root.parent.glob(self.root.name + ".cpt-tmp-*"):
@@ -104,6 +115,20 @@ class PartialStore:
 
     # -- API ------------------------------------------------------------
 
+    def reduce(self, batch: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def merge(self, partials: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def process_batch(self, batch: DataFrame, batch_id: int | None = None) -> None:
+        """Reduce one micro-batch and persist its partial (see ``write``)."""
+        self.write(self.reduce(batch), batch_id)
+
+    def merged(self) -> DataFrame:
+        """Every live partial folded by ``merge`` (merge-on-read)."""
+        return self.merge(self.read())
+
     def write(self, partial: DataFrame, batch_id: int | None) -> None:
         """Persist one batch's partial. Overwrites its own directory on
         replay; skips entirely if the batch is already folded into the
@@ -116,8 +141,7 @@ class PartialStore:
         partial.write.mode("overwrite").parquet(str(self.root / tag))
 
     def read(self) -> DataFrame:
-        """Every live partial row (merge-on-read is the caller's
-        ``merge`` or its own aggregate over this frame)."""
+        """Every live partial row, unmerged (``merged`` folds them)."""
         dirs = [str(p) for p in self._live_dirs() if any(p.rglob("*.parquet"))]
         if not dirs:
             return self.spark.createDataFrame([], self.schema)

@@ -25,11 +25,8 @@ by periodic compaction.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from .partials import PartialStore
 
@@ -54,25 +51,17 @@ def _merge(partials: DataFrame) -> DataFrame:
     )
 
 
-class ContinuousRetention:
+class ContinuousRetention(PartialStore):
     """Parquet-backed (user, day) activity ledger with a retention
     readout identical to the batch algebra."""
 
-    def __init__(self, spark: SparkSession, root: str | os.PathLike):
-        self.spark = spark
-        self.store = PartialStore(spark, root, _PARTIAL_SCHEMA, _merge)
-
-    def process_batch(
-        self, events: DataFrame, batch_id: int | None = None
-    ) -> None:
-        self.store.write(activity_partials(events), batch_id)
-
-    def compact(self) -> None:
-        self.store.compact()
+    schema = _PARTIAL_SCHEMA
+    reduce = staticmethod(activity_partials)
+    merge = staticmethod(_merge)
 
     def activity(self) -> DataFrame:
         """Merged ledger as distinct (user_id, d) activity cells."""
-        return _merge(self.store.read()).select("user_id", "d")
+        return self.merged().select("user_id", "d")
 
     def current(self) -> DataFrame:
         """The retention-curve frame over everything ingested so far —
@@ -81,27 +70,3 @@ class ContinuousRetention:
         from ..operators.events import retention_from_activity
 
         return retention_from_activity(self.spark, self.activity())
-
-
-def start_retention_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    ret: ContinuousRetention,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """File-source events stream -> continuously maintained retention."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: ret.process_batch(batch, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

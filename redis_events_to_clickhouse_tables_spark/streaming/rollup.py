@@ -31,11 +31,8 @@ partition.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from .partials import PartialStore
 
@@ -82,27 +79,21 @@ def _merge_partial_rows(partials: DataFrame) -> DataFrame:
     )
 
 
-class ContinuousAggregate:
+class ContinuousAggregate(PartialStore):
     """Parquet-backed incrementally-maintained daily rollup.
 
     Storage, replay idempotence (including replays racing a
-    compaction) and crash-safe compaction are delegated to
+    compaction) and crash-safe compaction come from
     :class:`PartialStore` — see its docstring for the durability
-    contract (review finding r5: the previous in-class compact had a
-    replay double-count window and a non-atomic root swap)."""
+    contract."""
 
-    def __init__(self, spark: SparkSession, root: str | os.PathLike):
-        self.spark = spark
-        self.store = PartialStore(
-            spark, root, _PARTIAL_SCHEMA, _merge_partial_rows
-        )
-
-    def _raw(self) -> DataFrame:
-        return self.store.read()
+    schema = _PARTIAL_SCHEMA
+    reduce = staticmethod(_partials)
+    merge = staticmethod(_merge_partial_rows)
 
     def current(self) -> DataFrame:
         """The rollup as of the last completed batch (merge-on-read)."""
-        return merge_partials(self._raw())
+        return merge_partials(self.read())
 
     def anomalies(self) -> DataFrame:
         """Trailing-window z-score alerts computed off the maintained
@@ -114,39 +105,7 @@ class ContinuousAggregate:
         batch aggregate by the monoid laws the tests pin."""
         from ..operators.timeseries import zscore_daily
 
-        merged = self._raw().groupBy("event_type", "event_day").agg(
+        merged = self.read().groupBy("event_type", "event_day").agg(
             F.sum("cents").alias("c")
         )
         return zscore_daily(merged.withColumnRenamed("event_day", "day"))
-
-    def process_batch(self, events: DataFrame, batch_id: int | None = None) -> None:
-        self.store.write(_partials(events), batch_id)
-
-    def compact(self) -> None:
-        """Fold every live partial into one compacted run, so
-        merge-on-read stays cheap (crash-safe; see PartialStore)."""
-        self.store.compact()
-
-
-def start_rollup_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    agg: ContinuousAggregate,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """File-source event stream -> incrementally maintained rollup."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: agg.process_batch(batch, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

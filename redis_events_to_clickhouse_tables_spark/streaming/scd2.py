@@ -23,11 +23,8 @@ by periodic compaction.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.numeric import dec
 from ..operators.scd import history_from_monthly
@@ -53,25 +50,17 @@ def _merge(partials: DataFrame) -> DataFrame:
     )
 
 
-class ContinuousScd2Dimension:
+class ContinuousScd2Dimension(PartialStore):
     """Parquet-backed (user, month, cents) ledger with an SCD2
     interval readout identical to the batch algebra."""
 
-    def __init__(self, spark: SparkSession, root: str | os.PathLike):
-        self.spark = spark
-        self.store = PartialStore(spark, root, _PARTIAL_SCHEMA, _merge)
-
-    def process_batch(
-        self, events: DataFrame, batch_id: int | None = None
-    ) -> None:
-        self.store.write(scd2_spend_partials(events), batch_id)
-
-    def compact(self) -> None:
-        self.store.compact()
+    schema = _PARTIAL_SCHEMA
+    reduce = staticmethod(scd2_spend_partials)
+    merge = staticmethod(_merge)
 
     def monthly(self) -> DataFrame:
         """Merged ledger as (user_id, month, mv DECIMAL(14,2))."""
-        return _merge(self.store.read()).select(
+        return self.merged().select(
             "user_id",
             "month",
             (F.col("cents").cast("decimal(16,0)") / 100)
@@ -84,27 +73,3 @@ class ContinuousScd2Dimension:
         identical algebra (and bit-identical output) to the batch
         ``scd2_user_tier_history``."""
         return history_from_monthly(self.monthly())
-
-
-def start_scd2_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    dim: ContinuousScd2Dimension,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """File-source events stream -> continuously maintained SCD2."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: dim.process_batch(batch, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -39,7 +39,6 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from pyspark.sql import types as T
 
@@ -122,27 +121,3 @@ class ShardStore:
             F.min("doc_id").alias("min_doc_id"),
             F.max("doc_id").alias("max_doc_id"),
         )
-
-
-def start_sharding_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    store: ShardStore,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """File-source document stream -> hash-sharded training layout."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: store.process_batch(batch, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -21,7 +21,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.advanced import _cm_probe_array, countmin_cells
 from .partials import PartialStore
@@ -136,30 +135,6 @@ class ContinuousCountMin:
             self.cands.compact()
 
 
-def start_countmin_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    sketch: ContinuousCountMin,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """File-source event stream -> incrementally maintained sketch."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: sketch.process_batch(batch, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 # --------------------------------------------------------------------
 # Continuous distinct-count sketch (HyperLogLog partials)
 # --------------------------------------------------------------------
@@ -173,7 +148,7 @@ def _merge_hll(partials: DataFrame) -> DataFrame:
     )
 
 
-class ContinuousDistinct:
+class ContinuousDistinct(PartialStore):
     """Streaming-maintained distinct-user counts: per-(week, day)
     HyperLogLog sketches, merged upward on read.
 
@@ -193,20 +168,19 @@ class ContinuousDistinct:
     batch size.
     """
 
-    def __init__(self, spark: SparkSession, root: str | os.PathLike):
-        self.spark = spark
-        self.store = PartialStore(spark, root, _HLL_SCHEMA, _merge_hll)
+    schema = _HLL_SCHEMA
+    merge = staticmethod(_merge_hll)
 
-    def process_batch(self, events: DataFrame, batch_id: int | None = None) -> None:
-        part = events.groupBy(
+    @staticmethod
+    def reduce(events: DataFrame) -> DataFrame:
+        return events.groupBy(
             F.date_trunc("week", "ts").alias("week"),
             F.to_date("ts").cast("timestamp").alias("event_day"),
         ).agg(F.hll_sketch_agg("user_id").alias("sk"))
-        self.store.write(part, batch_id)
 
     def daily(self) -> DataFrame:
         """(week, event_day, est_users) from merged daily sketches."""
-        return _merge_hll(self.store.read()).select(
+        return self.merged().select(
             "week",
             "event_day",
             F.hll_sketch_estimate("sk").alias("est_users"),
@@ -215,7 +189,7 @@ class ContinuousDistinct:
     def weekly(self) -> DataFrame:
         """(week, est_users) by unioning the maintained daily sketches."""
         return (
-            _merge_hll(self.store.read())
+            self.merged()
             .groupBy("week")
             .agg(
                 F.hll_sketch_estimate(F.hll_union_agg("sk")).alias(
@@ -223,6 +197,3 @@ class ContinuousDistinct:
                 )
             )
         )
-
-    def compact(self) -> None:
-        self.store.compact()

@@ -14,16 +14,27 @@ harness (SURVEY §2.5):
 The file source stands in for the Redis Bull queue (the driver
 environment has no Redis); ``sources/redis_bull.py`` documents the
 drop-in real source.
+
+``start_batch_stream`` is the same harness for the Layer-B monitors
+(rollup, sketches, drift, quality, curation, sharding, ...): a parquet
+file stream handed micro-batch by micro-batch to a replay-idempotent
+``process(batch, batch_id)``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import IngestConfig
 from .ingest import IngestEngine
 from .store import TableStore
+
+# One file per micro-batch: a backlog of N files drains as N
+# incremental batches, which is what the batch-parity tests exercise.
+FILES_PER_TRIGGER = 1
 
 
 def start_file_ingest(
@@ -56,3 +67,31 @@ def start_file_ingest(
     else:
         writer = writer.trigger(availableNow=available_now)
     return writer.start()
+
+
+def start_batch_stream(
+    spark: SparkSession,
+    input_dir: str,
+    schema,
+    process: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Stream parquet files from ``input_dir`` through
+    ``process(batch, batch_id)`` (typically a monitor's
+    ``process_batch``), one file per micro-batch.
+
+    Offsets commit to ``checkpoint_dir`` only after ``process``
+    returns, so a crash replays the batch under the same id and the
+    idempotent sink absorbs it. ``availableNow`` drains the backlog in
+    bounded micro-batches then stops; a live deployment drops that
+    trigger and runs continuously off the same checkpoint.
+    """
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", FILES_PER_TRIGGER)
+        .parquet(input_dir)
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )

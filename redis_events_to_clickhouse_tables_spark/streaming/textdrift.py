@@ -21,11 +21,8 @@ Shape notes:
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.textstats import jsd_from_counts
 from .partials import PartialStore
@@ -54,53 +51,19 @@ def _merge_partial_rows(partials: DataFrame) -> DataFrame:
     )
 
 
-class ContinuousTextDriftMonitor:
+class ContinuousTextDriftMonitor(PartialStore):
     """Parquet-backed, incrementally-maintained char-distribution
     ledger with a JSD drift readout."""
 
-    def __init__(self, spark: SparkSession, root: str | os.PathLike):
-        self.spark = spark
-        self.store = PartialStore(
-            spark, root, _PARTIAL_SCHEMA, _merge_partial_rows
-        )
-
-    def process_batch(
-        self, docs: DataFrame, batch_id: int | None = None
-    ) -> None:
-        self.store.write(char_count_partials(docs), batch_id)
-
-    def compact(self) -> None:
-        self.store.compact()
+    schema = _PARTIAL_SCHEMA
+    reduce = staticmethod(char_count_partials)
+    merge = staticmethod(_merge_partial_rows)
 
     def counts(self) -> DataFrame:
         """Merged (grp, ch, c) ledger."""
-        return _merge_partial_rows(self.store.read())
+        return self.merged()
 
     def current(self) -> DataFrame:
         """(n_chars, jsd_bits) over everything ingested so far —
         identical algebra to the batch ``text_js_divergence_en_rest``."""
         return jsd_from_counts(self.counts())
-
-
-def start_textdrift_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    monitor: ContinuousTextDriftMonitor,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """File-source documents stream -> continuously maintained ledger."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: monitor.process_batch(batch, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -21,11 +21,8 @@ Shape notes:
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.drift import _PSI_BUCKET_CENTS, _PSI_SPLIT, psi_from_counts
 from .partials import PartialStore
@@ -59,54 +56,20 @@ def _merge_partial_rows(partials: DataFrame) -> DataFrame:
     )
 
 
-class ContinuousValueDriftMonitor:
+class ContinuousValueDriftMonitor(PartialStore):
     """Parquet-backed, incrementally-maintained price-bucket ledger
     with a PSI drift readout."""
 
-    def __init__(self, spark: SparkSession, root: str | os.PathLike):
-        self.spark = spark
-        self.store = PartialStore(
-            spark, root, _PARTIAL_SCHEMA, _merge_partial_rows
-        )
-
-    def process_batch(
-        self, orders: DataFrame, batch_id: int | None = None
-    ) -> None:
-        self.store.write(psi_count_partials(orders), batch_id)
-
-    def compact(self) -> None:
-        self.store.compact()
+    schema = _PARTIAL_SCHEMA
+    reduce = staticmethod(psi_count_partials)
+    merge = staticmethod(_merge_partial_rows)
 
     def counts(self) -> DataFrame:
         """Merged (bucket, ca, cb) ledger."""
-        return _merge_partial_rows(self.store.read())
+        return self.merged()
 
     def current(self) -> DataFrame:
         """(n_buckets, n_a, n_b, psi_bits, psi) over everything
         ingested so far — identical algebra to the batch
         ``stats_psi_price_drift``."""
         return psi_from_counts(self.counts())
-
-
-def start_valuedrift_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    monitor: ContinuousValueDriftMonitor,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """File-source orders stream -> continuously maintained ledger."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: monitor.process_batch(batch, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -418,3 +418,31 @@ def test_k4_trace_env_surface(monkeypatch):
         == "/x/t.log"
     )
     assert IngestConfig.from_env({"DEBUG_STORE_LOG_PATH": "/x/t.log"}).trace_path is None
+
+
+def test_per_type_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """The per-type flushes run on pool threads; every job they launch
+    must carry the caller's job group, like the jobs the caller's own
+    thread launches."""
+    engine, _ = _engine(spark, tmp_path)
+    raw = _raw(
+        spark,
+        [
+            {"event_type": "session", "user": "u1", "n": 1},
+            {"event_type": "click", "target": "#buy"},
+            {"event_type": "purchase", "sku": "a", "qty": 2},
+        ],
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("ingest-job-group-test", "ingest under a job group")
+    try:
+        report = engine.process_raw_batch(raw, batch_id=0)
+    finally:
+        sc._jsc.sc().clearJobGroup()
+    assert set(report.tables) == {"session", "click", "purchase"}
+    grouped = tracker.getJobIdsForGroup("ingest-job-group-test")
+    ungrouped = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
+    assert len(grouped) > 3
+    assert not ungrouped

@@ -20,8 +20,8 @@ from redis_events_to_clickhouse_tables_spark.operators.text import gopher_scores
 from redis_events_to_clickhouse_tables_spark.sources.tables import table
 from redis_events_to_clickhouse_tables_spark.streaming.curation import (
     CurationLog,
-    start_curation_stream,
 )
+from redis_events_to_clickhouse_tables_spark.streaming.stream import start_batch_stream
 
 from .conftest import SF_DIR
 
@@ -51,13 +51,12 @@ def test_streaming_curation_matches_batch(spark, tmp_path):
     _train_docs(spark).repartition(3).write.parquet(str(input_dir))
 
     log = CurationLog(spark, tmp_path / "verdicts", bench_ngram_set(docs))
-    q = start_curation_stream(
+    q = start_batch_stream(
         spark,
         str(input_dir),
         docs.schema,
-        log,
+        log.process_batch,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,  # one file per micro-batch: 3 increments
     )
     q.awaitTermination(300)
     assert len(q.recentProgress) >= 3

@@ -9,8 +9,8 @@ from redis_events_to_clickhouse_tables_spark.sources.tables import table
 from redis_events_to_clickhouse_tables_spark.streaming.dq import (
     _RULES,
     ContinuousQualityMonitor,
-    start_quality_stream,
 )
+from redis_events_to_clickhouse_tables_spark.streaming.stream import start_batch_stream
 
 from .conftest import SF_DIR
 
@@ -47,13 +47,12 @@ def test_streaming_dq_counters_match_batch(spark, tmp_path):
     ev.repartition(4).write.parquet(str(input_dir))
 
     mon = ContinuousQualityMonitor(spark, tmp_path / "dq")
-    q = start_quality_stream(
+    q = start_batch_stream(
         spark,
         str(input_dir),
         ev.schema,
-        mon,
+        mon.process_batch,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,  # 4 incremental micro-batches
     )
     q.awaitTermination(300)
     assert len(q.recentProgress) >= 4

@@ -63,7 +63,7 @@ def test_histogram_replay_and_compaction(spark, tmp_path):
     assert _rows(agg.current()) == before
     agg.compact()
     assert _rows(agg.current()) == before
-    assert agg._raw().count() == len(before)
+    assert agg.read().count() == len(before)
 
 
 def test_streamed_hll_weekly_equals_direct_sketch(spark, tmp_path):

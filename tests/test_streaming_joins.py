@@ -32,7 +32,6 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
         ev.schema,
         output_dir=str(out),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
         # files arrive in random ts order, so use a watermark wider
         # than the corpus span: the join still exercises cross-batch
         # state, and no row can be declared late — making batch parity

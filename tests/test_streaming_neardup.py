@@ -16,8 +16,8 @@ from redis_events_to_clickhouse_tables_spark.operators.dedup import (
 from redis_events_to_clickhouse_tables_spark.sources.tables import table
 from redis_events_to_clickhouse_tables_spark.streaming.neardup import (
     NearDupIndex,
-    start_neardup_stream,
 )
+from redis_events_to_clickhouse_tables_spark.streaming.stream import start_batch_stream
 
 from .conftest import SF_DIR
 
@@ -28,13 +28,12 @@ def test_streaming_neardup_matches_batch(spark, tmp_path):
     docs.repartition(3).write.parquet(str(input_dir))
 
     index = NearDupIndex(spark, tmp_path / "nd_index")
-    q = start_neardup_stream(
+    q = start_batch_stream(
         spark,
         str(input_dir),
         docs.schema,
-        index,
+        index.process_batch,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,  # one file per micro-batch: 3 increments
     )
     q.awaitTermination(300)
     assert len(q.recentProgress) >= 3

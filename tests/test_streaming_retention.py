@@ -13,8 +13,8 @@ from redis_events_to_clickhouse_tables_spark.registry import load_all
 from redis_events_to_clickhouse_tables_spark.sources.tables import table
 from redis_events_to_clickhouse_tables_spark.streaming.retention import (
     ContinuousRetention,
-    start_retention_stream,
 )
+from redis_events_to_clickhouse_tables_spark.streaming.stream import start_batch_stream
 
 from .conftest import SF_DIR
 
@@ -34,13 +34,12 @@ def test_streamed_retention_equals_batch_query(spark, tmp_path):
     events.repartition(4).write.parquet(str(input_dir))
 
     ret = ContinuousRetention(spark, tmp_path / "ret")
-    q = start_retention_stream(
+    q = start_batch_stream(
         spark,
         str(input_dir),
         events.schema,
-        ret,
+        ret.process_batch,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,  # 4 incremental micro-batches
     )
     q.awaitTermination(300)
     assert len(q.recentProgress) >= 4

@@ -9,8 +9,8 @@ from redis_events_to_clickhouse_tables_spark.sources.tables import table
 from redis_events_to_clickhouse_tables_spark.streaming.rollup import (
     ContinuousAggregate,
     merge_partials,
-    start_rollup_stream,
 )
+from redis_events_to_clickhouse_tables_spark.streaming.stream import start_batch_stream
 
 from .conftest import SF_DIR
 
@@ -38,13 +38,12 @@ def test_streaming_rollup_matches_batch(spark, tmp_path):
     ev.repartition(4).write.parquet(str(input_dir))
 
     agg = ContinuousAggregate(spark, tmp_path / "rollup")
-    q = start_rollup_stream(
+    q = start_batch_stream(
         spark,
         str(input_dir),
         ev.schema,
-        agg,
+        agg.process_batch,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,  # 4 incremental micro-batches
     )
     q.awaitTermination(300)
     assert len(q.recentProgress) >= 4
@@ -66,7 +65,7 @@ def test_rollup_replay_and_compaction(spark, tmp_path):
     # partial count drops to the key count
     agg.compact()
     assert _rows(agg.current()) == before
-    assert agg._raw().count() == len(before)
+    assert agg.read().count() == len(before)
 
 
 def test_rollup_anomalies_match_batch_query(spark, tmp_path):

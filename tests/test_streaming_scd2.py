@@ -10,8 +10,8 @@ from redis_events_to_clickhouse_tables_spark.registry import load_all
 from redis_events_to_clickhouse_tables_spark.sources.tables import table
 from redis_events_to_clickhouse_tables_spark.streaming.scd2 import (
     ContinuousScd2Dimension,
-    start_scd2_stream,
 )
+from redis_events_to_clickhouse_tables_spark.streaming.stream import start_batch_stream
 
 from .conftest import SF_DIR
 
@@ -33,13 +33,12 @@ def test_streamed_scd2_equals_batch_query(spark, tmp_path):
     events.repartition(4).write.parquet(str(input_dir))
 
     dim = ContinuousScd2Dimension(spark, tmp_path / "scd2")
-    q = start_scd2_stream(
+    q = start_batch_stream(
         spark,
         str(input_dir),
         events.schema,
-        dim,
+        dim.process_batch,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,  # 4 incremental micro-batches
     )
     q.awaitTermination(300)
     assert len(q.recentProgress) >= 4

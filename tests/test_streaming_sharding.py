@@ -14,8 +14,8 @@ from redis_events_to_clickhouse_tables_spark.sources.tables import table
 from redis_events_to_clickhouse_tables_spark.streaming.sharding import (
     N_SHARDS,
     ShardStore,
-    start_sharding_stream,
 )
+from redis_events_to_clickhouse_tables_spark.streaming.stream import start_batch_stream
 
 from .conftest import SF_DIR
 
@@ -26,13 +26,12 @@ def test_streaming_shards_match_batch_manifest(spark, tmp_path):
     docs.repartition(3).write.parquet(str(input_dir))
 
     store = ShardStore(spark, tmp_path / "shards")
-    q = start_sharding_stream(
+    q = start_batch_stream(
         spark,
         str(input_dir),
         docs.schema,
-        store,
+        store.process_batch,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,  # one file per micro-batch: 3 increments
     )
     q.awaitTermination(300)
     assert len(q.recentProgress) >= 3

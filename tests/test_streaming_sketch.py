@@ -11,8 +11,8 @@ from redis_events_to_clickhouse_tables_spark.registry import load_all
 from redis_events_to_clickhouse_tables_spark.sources.tables import table
 from redis_events_to_clickhouse_tables_spark.streaming.sketch import (
     ContinuousCountMin,
-    start_countmin_stream,
 )
+from redis_events_to_clickhouse_tables_spark.streaming.stream import start_batch_stream
 
 from .conftest import SF_DIR
 
@@ -27,13 +27,12 @@ def test_streamed_sketch_identical_to_batch(spark, tmp_path):
     ev.repartition(4).write.parquet(str(input_dir))
 
     sk = ContinuousCountMin(spark, tmp_path / "cm", key_col="user_id")
-    q = start_countmin_stream(
+    q = start_batch_stream(
         spark,
         str(input_dir),
         ev.schema,
-        sk,
+        sk.process_batch,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,  # several incremental micro-batches
     )
     q.awaitTermination(300)
     assert len(q.recentProgress) >= 4
@@ -89,13 +88,12 @@ def test_heavy_hitters_no_false_negatives(spark, tmp_path):
         key_col="user_id",
         candidate_floor=max(threshold // 4, 1),
     )
-    q = start_countmin_stream(
+    q = start_batch_stream(
         spark,
         str(input_dir),
         ev.schema,
-        sk,
+        sk.process_batch,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
     )
     q.awaitTermination(300)
 

@@ -8,9 +8,9 @@ from pyspark.sql import functions as F
 
 from redis_events_to_clickhouse_tables_spark.registry import load_all
 from redis_events_to_clickhouse_tables_spark.sources.tables import table
+from redis_events_to_clickhouse_tables_spark.streaming.stream import start_batch_stream
 from redis_events_to_clickhouse_tables_spark.streaming.textdrift import (
     ContinuousTextDriftMonitor,
-    start_textdrift_stream,
 )
 
 from .conftest import SF_DIR
@@ -31,13 +31,12 @@ def test_streamed_jsd_equals_batch_query(spark, tmp_path):
     docs.repartition(4).write.parquet(str(input_dir))
 
     mon = ContinuousTextDriftMonitor(spark, tmp_path / "drift")
-    q = start_textdrift_stream(
+    q = start_batch_stream(
         spark,
         str(input_dir),
         docs.schema,
-        mon,
+        mon.process_batch,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,  # 4 incremental micro-batches
     )
     q.awaitTermination(300)
     assert len(q.recentProgress) >= 4

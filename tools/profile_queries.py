@@ -94,7 +94,7 @@ def main() -> int:
                 tracker = spark.sparkContext._jsc.sc().statusTracker()  # noqa: SLF001
                 job_counts.append(len(tracker.getJobIdsForGroup(group)))
             spark.catalog.clearCache()
-            spark.sparkContext.setJobGroup(None, None)
+            spark.sparkContext._jsc.sc().clearJobGroup()  # noqa: SLF001
         best = min(range(len(attempts)), key=lambda i: attempts[i])
         jobs_msg = f" jobs={job_counts[best]}" if count_jobs else ""
         print(
