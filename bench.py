@@ -26,12 +26,13 @@ from redis_events_to_clickhouse_tables_spark.registry import load_all
 from redis_events_to_clickhouse_tables_spark.session import get_spark
 
 
-def bench_layer_a_ingest(spark, sf_dir: str) -> tuple[float, int, dict]:
+def bench_layer_a_ingest(spark, sf_dir: str) -> tuple[float, int, dict, int]:
     """Time the full Layer-A path: raw JSON -> infer -> route ->
     normalize -> evolve -> append. Returns (seconds, events,
     phase_seconds of the winning run — VERDICT r6 item 6: a
     load-depressed headline must self-attribute, so the per-phase
-    decomposition rides the record).
+    decomposition rides the record — and the winning run's Spark job
+    count, read from the status tracker outside the timed interval).
 
     The reference's derived steady-state ceiling is 20 events/s per
     table (BASELINE.md); this measures ours on the same kind of
@@ -75,21 +76,24 @@ def bench_layer_a_ingest(spark, sf_dir: str) -> tuple[float, int, dict]:
     # runs is the consistent estimator of the steady-state cost — a
     # median can land on a still-warming middle run (r6: median 2.9s
     # vs post-warm steady state 2.2s on an idle machine).
-    runs: list[tuple[float, dict]] = []
+    runs: list[tuple[float, dict, int]] = []
     try:
         for _ in range(5):
             tmp = tempfile.mkdtemp(prefix="ingest-bench-")
             try:
                 engine = IngestEngine(spark, TableStore(spark, tmp))
+                first_job = _max_job_id(spark)
                 start = time.perf_counter()
                 report = engine.process_raw_batch(raw, 0)
+                sec = time.perf_counter() - start
                 runs.append(
                     (
-                        time.perf_counter() - start,
+                        sec,
                         {
                             k: round(v, 4)
                             for k, v in report.phase_seconds.items()
                         },
+                        _max_job_id(spark) - first_job,
                     )
                 )
             finally:
@@ -97,7 +101,16 @@ def bench_layer_a_ingest(spark, sf_dir: str) -> tuple[float, int, dict]:
     finally:
         raw.unpersist()
     best = min(runs, key=lambda r: r[0])
-    return best[0], n, best[1]
+    return best[0], n, best[1], best[2]
+
+
+def _max_job_id(spark) -> int:
+    """Highest Spark job id launched so far in the caller's job group
+    (none unless one is set); pool threads of the ingest engine inherit
+    it, so the difference across a call counts that call's jobs."""
+    sc = spark.sparkContext
+    ids = sc.statusTracker().getJobIdsForGroup(sc.getLocalProperty("spark.jobGroup.id"))
+    return max(ids) if ids else -1
 
 
 _SCALE_FACTOR = 2.5
@@ -452,11 +465,11 @@ def main() -> None:
     # sweep land in the timed runs — observed 34.8k events/s post-sweep
     # vs 43-58k on a quiet session at the same commit).
     try:
-        ingest_sec, ingest_events, ingest_phases = bench_layer_a_ingest(
+        ingest_sec, ingest_events, ingest_phases, ingest_jobs = bench_layer_a_ingest(
             spark, sf_dir
         )
     except Exception as exc:  # noqa: BLE001
-        ingest_sec, ingest_events, ingest_phases = None, 0, {}
+        ingest_sec, ingest_events, ingest_phases, ingest_jobs = None, 0, {}, 0
         ingest_exc = f"{type(exc).__name__}: {exc}"[:300]
     else:
         ingest_exc = None
@@ -496,7 +509,7 @@ def main() -> None:
         print(
             f"# layer_a_ingest: {ingest_sec:.3f}s for {ingest_events} events "
             f"({events_per_sec:,.0f} events/s; reference ceiling 20/s/table) "
-            f"phases={ingest_phases}",
+            f"phases={ingest_phases} jobs={ingest_jobs}",
             file=sys.stderr,
         )
     else:
@@ -557,6 +570,7 @@ def main() -> None:
         "layer_a_ingest_events": ingest_events,
         "layer_a_ingest_events_per_sec": events_per_sec,
         "layer_a_ingest_phases": ingest_phases,
+        "layer_a_ingest_jobs": ingest_jobs,
         "n_queries": len(timings),
         "n_errors": len(errors),
         "errors": errors,
@@ -614,6 +628,7 @@ def main() -> None:
                 "layer_a_ingest_events": ingest_events,
                 "layer_a_ingest_events_per_sec": events_per_sec,
                 "layer_a_ingest_phases": ingest_phases,
+                "layer_a_ingest_jobs": ingest_jobs,
                 "sf": sf_val,
                 "metric": "total_query_wall_seconds",
                 "value": total,

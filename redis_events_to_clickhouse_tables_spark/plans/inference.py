@@ -28,7 +28,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # the reference's date-sniff regex (src/utils.ts:5): leading group(s) of
 # 2-or-4 digits each followed by '/' or '-'. "2024-12-01" and
@@ -59,16 +58,6 @@ def _is_date_string(col: Column) -> Column:
     return F.when(~col.rlike(DATE_STRING_REGEX), F.lit(False)).otherwise(
         sniff_timestamp(col).isNotNull()
     )
-
-
-def apply_leaf_types(df: DataFrame, refinements: dict[str, T.DataType]) -> DataFrame:
-    out = []
-    for f in df.schema.fields:
-        if f.name in refinements and isinstance(refinements[f.name], T.TimestampType):
-            out.append(sniff_timestamp(F.col(f.name)).alias(f.name))
-        else:
-            out.append(F.col(f.name))
-    return df.select(*out)
 
 
 def parse_events(spark: SparkSession, raw: DataFrame, json_col: str = "value") -> DataFrame:

@@ -15,11 +15,16 @@ the ``_dlq`` table with attempt counters and the error (E1), and
 events of non-critical types that have already failed once are
 dropped (E4/F2). ``_trace`` is the JSONL side-output (K4).
 
-Scale note: the per-type fan-out collects only the *distinct event
-types* of the batch (bounded by the number of destination tables —
-the same cardinality as the reference's bulker map), never event
-rows. Each table's rows are then one filtered write; with N tables
-this is N filtered scans of one cached batch.
+Scale note: a tick's fixed cost does not grow with its number of
+event types T. The batch is flattened once and every table's columns
+are decided by one grouped aggregate (``normalize.normalize_batch``),
+whose rows are also the routing table: the driver collects one row per
+*distinct event type* (bounded by the number of destination tables —
+the same cardinality as the reference's bulker map), never event rows.
+Each table's rows are then one filtered write over that one cached
+flatten, so a tick runs 4 + T Spark jobs (JSON inference, the decision
+aggregate, then T writes; more with P5 splitting, a widening rewrite or
+CDC merges).
 """
 
 from __future__ import annotations
@@ -33,13 +38,14 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
 
+from py4j.protocol import Py4JError, Py4JNetworkError
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import IngestConfig
 from ..plans.inference import parse_events
-from .normalize import normalize_events
+from .normalize import normalize_batch, normalize_events
 from .store import TableStore, swap_dirs
 
 DLQ_TABLE = "_dlq"
@@ -51,6 +57,8 @@ DLQ_TABLE = "_dlq"
 # quotes in data errors, so a poison value containing "cancelled"
 # would re-raise forever and stall ingestion):
 #  - exception CLASS names along the python AND java cause chains;
+#  - Spark error conditions that name a cancellation (conditions are
+#    Spark-generated and never quote row data);
 #  - scheduler-generated cancellation phrases, anchored, and only
 #    from exceptions that carry NO Spark error condition (data errors
 #    like CAST_INVALID_INPUT always carry one, and only their
@@ -65,6 +73,7 @@ _INTERRUPTION_CLASS_MARKERS = (
     "Py4JNetworkError",
     "KeyboardInterrupt",
 )
+_INTERRUPTION_CONDITIONS = ("SPARK_JOB_CANCELLED", "OPERATION_CANCELED")
 _CANCEL_MSG_RE = re.compile(
     r"\bJob \d+ cancelled\b"
     r"|\bSparkContext was shut down\b"
@@ -102,9 +111,11 @@ def _is_interruption(exc: BaseException) -> bool:
     messages: list[str] = []
     for e in chain:
         names.append(type(e).__name__)
-        jt = getattr(e, "java_exception", None) or getattr(
-            getattr(e, "_origin", None), "java_exception", None
-        )
+        # the Java throwable: Py4JJavaError.java_exception, or a pyspark
+        # CapturedException's _origin (which IS the throwable)
+        jt = getattr(e, "java_exception", None)
+        if jt is None:
+            jt = getattr(e, "_origin", None)
         if jt is None:
             # plain python exception: its message is scanned only when
             # no data-error condition marks it as value-quoting
@@ -113,15 +124,20 @@ def _is_interruption(exc: BaseException) -> bool:
         while jt is not None:
             try:
                 cls = jt.getClass().getName()
-            except Exception:  # noqa: BLE001 — gateway gone == interruption
+            except Py4JNetworkError:  # gateway gone == interruption
                 names.append("Py4JNetworkError")
                 break
+            except (AttributeError, Py4JError):  # not a Java throwable
+                break
             names.append(cls)
-            # scheduler cancellations surface as condition-less
-            # SparkExceptions; their messages are Spark-generated and
-            # never embed row data (data errors carry a condition and
-            # are excluded here)
-            if cls.endswith(".SparkException") and _error_condition(jt) is None:
+            cond = _error_condition(jt)
+            if cond in _INTERRUPTION_CONDITIONS:
+                return True
+            # other scheduler failures (a shut-down context) surface as
+            # condition-less SparkExceptions; their messages are
+            # Spark-generated and never embed row data (data errors
+            # carry a condition and are excluded here)
+            if cls.endswith(".SparkException") and cond is None:
                 try:
                     messages.append(jt.getMessage() or "")
                 except Exception:  # noqa: BLE001
@@ -153,11 +169,12 @@ class IngestReport:
     tables: dict[str, int] = field(default_factory=dict)
     errors: dict[str, str] = field(default_factory=dict)
     # Wall seconds per pipeline phase (BENCH r6 item 6: a depressed
-    # ingest headline must self-attribute). parse_infer is a single
-    # wall span that includes routing (the routing table rides the same
-    # grouped aggregate as the counts); normalize/append are SUMS across
-    # the concurrent per-table flushes, so they can exceed the batch
-    # wall time — they attribute cost, they don't partition the clock.
+    # ingest headline must self-attribute). parse_infer is the JSON
+    # schema inference; normalize is the serial batch-level flatten plus
+    # the grouped decision aggregate (which is also the routing table);
+    # append is the SUM across the concurrent per-table flushes (P8 +
+    # evolve + write), so it can exceed the batch wall time — it
+    # attributes cost, it doesn't partition the clock.
     phase_seconds: dict[str, float] = field(default_factory=dict)
 
 
@@ -356,29 +373,22 @@ class IngestEngine:
             report.n_missing_routing_key = n
             self._trace({"event": "missing_routing_key", "batch": batch_id, "rows": n})
             return report
+        # parse_events runs the JSON schema inference job
+        _phase("parse_infer", time.perf_counter() - t_parse)
 
-        events = events.persist()
+        t_norm = time.perf_counter()
+        batch = normalize_batch(events, self.config)
+        _phase("normalize", time.perf_counter() - t_norm)
         try:
-            # ONE grouped aggregate yields total + F1 missing-routing-
-            # key counts AND the G1 routing table (the null group is
-            # the missing-key bucket; group cardinality is bounded by
-            # the number of destination tables, like the reference's
-            # bulker map) — the old separate count-agg and distinct()
-            # jobs each re-scanned the batch
-            groups = (
-                events.groupBy(F.col(etp).alias("__etype"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            report.n_events = sum(r["n"] for r in groups)
-            # the agg above is what materializes the cached JSON parse,
-            # so the span from parse_events to here is the parse+infer
-            # cost
-            _phase("parse_infer", time.perf_counter() - t_parse)
+            # the batch's one decision aggregate is also the routing
+            # table: rows per event type, and its null group is the F1
+            # missing-routing-key bucket (group cardinality is bounded
+            # by the number of destination tables, like the reference's
+            # bulker map)
+            counts = batch.counts
+            report.n_events = sum(counts.values())
             # F1: events with no routing key are logged and dropped
-            report.n_missing_routing_key = sum(
-                r["n"] for r in groups if r["__etype"] is None
-            )
+            report.n_missing_routing_key = counts.get(None, 0)
             if report.n_missing_routing_key:
                 self._trace(
                     {
@@ -387,28 +397,15 @@ class IngestEngine:
                         "rows": report.n_missing_routing_key,
                     }
                 )
-            valid = events.filter(F.col(etp).isNotNull())
-            types = [r["__etype"] for r in groups if r["__etype"] is not None]
+            types = [t for t in counts if t is not None]
 
             def _process_type(etype: str) -> None:
-                sub = valid.filter(F.col(etp) == etype)
-                cached = None
                 try:
-                    # materialize=True: the flattened projection is
-                    # persisted and filled by the refinement aggregate
-                    # itself, so the count here and the write below
-                    # read the cache instead of re-running the
-                    # pipeline (one flatten execution per type, not
-                    # two — VERDICT r8 item 6); normalize+evolve cost
-                    # stays attributable separately from the append
-                    t_norm = time.perf_counter()
-                    rows, cached, n = normalize_events(
-                        sub, self.config, materialize=True
-                    )
-                    if n is None:  # custom P8 transform: count for real
-                        n = rows.count()
-                    _phase("normalize", time.perf_counter() - t_norm)
                     t_append = time.perf_counter()
+                    rows = batch.finish(etype)
+                    # the aggregate's count holds unless a custom P8
+                    # transform changes the rows
+                    n = counts[etype] if self.config.transform is None else rows.count()
                     target = self.config.target_rows_per_file
                     coalesce_to = (
                         max(1, -(-n // target)) if target and n else None
@@ -477,10 +474,12 @@ class IngestEngine:
                         )
                     with self._lock:
                         report.errors[etype] = str(exc)[:500]
-                    self._dead_letter(sub, etype, str(exc)[:500], report)
-                finally:
-                    if cached is not None:
-                        cached.unpersist()
+                    self._dead_letter(
+                        events.filter(F.col(etp) == etype),
+                        etype,
+                        str(exc)[:500],
+                        report,
+                    )
 
             # per-table flushes run concurrently, like the reference's
             # independent bulkers (src/main.ts:463-514) — each submits
@@ -508,4 +507,4 @@ class IngestEngine:
                         fut.result()
             return report
         finally:
-            events.unpersist()
+            batch.unpersist()

@@ -12,14 +12,33 @@ The reference rewrites every event row before INSERT
   P7 stamp received_at / sent_at / message_id (:280-288)
   P8 user transform hook                     (:290, src/transform.ts)
 
-Here the whole pipeline is one column-expression projection over a
-typed DataFrame — a single Spark job regardless of row count, all
-JVM-side. Driver-side work is schema introspection plus two
-O(columns) aggregates: max array lengths (P5) and the date-string /
-defined-value scans (D1/F3).
+Here P1-P7 is one column-expression projection over the typed batch
+(``_flatten``), all JVM-side. Which columns a table gets is decided
+from the data by one aggregate (``_decide``): per table, its row
+count, the non-null count of every payload column (F3/G2: a column no
+row defines is dropped) and, per string column, whether every defined
+value is a date-string (D1: the column becomes a timestamp). P8 then
+runs per table (``_finish``).
+
+``normalize_batch`` is the ingest tick's form. The whole batch is
+flattened once, with its routing key kept as ``__etype``, and
+persisted; ONE ``groupBy(__etype)`` aggregate fills that cache,
+decides every table's columns and is also the routing table (its null
+group is the F1 missing-routing-key count). So a tick runs one flatten
+and one decision job whatever its number of event types, and each type
+then costs only its write. ``normalize_events`` is the same builder
+without the routing key: one table's rows, one ungrouped decision.
+
+P5 sizes positional columns to the longest array in the frame (one
+more aggregate, only with ``split_array_items_as_columns``). Positions
+past a table's own longest array are null in all of its rows, so the
+presence rule drops them.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -27,22 +46,27 @@ from pyspark.sql import types as T
 
 from ..config import IngestConfig
 from ..functions.names import snake_case
-from ..plans.inference import (
-    _is_date_string,
-    apply_leaf_types,
-    sniff_timestamp,
-)
+from ..plans.evolution import widen_type
+from ..plans.inference import _is_date_string, sniff_timestamp
 
 SYSTEM_COLUMNS = ("received_at", "sent_at", "message_id")
+# the routing key's column in normalize_batch's frame (snake_case never
+# yields a leading underscore, so no payload column can take the name)
+ROUTE_COLUMN = "__etype"
+
+# A numeric __received_at is epoch milliseconds; values outside the
+# years 0001-9999 are not a timestamp (and would overflow the cast).
+_MIN_MS = -62_135_596_800_000
+_MAX_MS = 253_402_300_799_999
 
 # Steady-state expression cache (VERDICT r9 item 5): in a long-running
 # ingest the SAME event shapes arrive micro-batch after micro-batch,
 # and rebuilding the P2-P7 projection re-issues hundreds of py4j
-# round-trips per (batch x event type) to construct identical Column
-# trees. Column objects are immutable unresolved expression trees —
-# reusing one across DataFrames of the same schema is exactly how a
-# loop-invariant expression should behave — so the built (body,
-# received_at) pair is memoized on the full decision signature:
+# round-trips per batch to construct identical Column trees. Column
+# objects are immutable unresolved expression trees — reusing one
+# across DataFrames of the same schema is exactly how a loop-invariant
+# expression should behave — so the built (body, received_at) pair and
+# the decision aggregate are memoized on the full decision signature:
 # (JVM application id, payload schema JSON, cfg knobs that shape the
 # projection, batch max array lengths). The application id guards
 # against a restarted JVM invalidating the cached py4j handles; the
@@ -50,6 +74,16 @@ SYSTEM_COLUMNS = ("received_at", "sent_at", "message_id")
 # unboundedly.
 _EXPR_CACHE: dict[tuple, tuple] = {}
 _EXPR_CACHE_MAX = 256
+
+
+def _cached(key: tuple, build):
+    hit = _EXPR_CACHE.get(key)
+    if hit is None:
+        hit = build()
+        if len(_EXPR_CACHE) >= _EXPR_CACHE_MAX:
+            _EXPR_CACHE.pop(next(iter(_EXPR_CACHE)))
+        _EXPR_CACHE[key] = hit
+    return hit
 
 
 def _cfg_expr_sig(cfg: IngestConfig) -> tuple:
@@ -72,7 +106,9 @@ def _received_at_expr(df: DataFrame, col_name: str | None) -> Column:
     """P7 precursor: received_at is stamped once and survives
     re-delivery (reference: __received_at, src/main.ts:278-282).
     ``col_name`` is the (possibly renamed) physical column holding the
-    carried value, or None when the batch never carried one."""
+    carried value, or None when the batch never carried one. A value
+    that is no timestamp — an unparseable string, a number out of
+    range — falls back to now: it must not fail the batch."""
     if col_name is None or col_name not in df.columns:
         return F.current_timestamp()
     src = F.col(f"`{col_name}`")
@@ -82,7 +118,11 @@ def _received_at_expr(df: DataFrame, col_name: str | None) -> Column:
     elif isinstance(dt, T.TimestampType):
         parsed = src
     elif isinstance(dt, (T.LongType, T.DoubleType)):
-        parsed = F.timestamp_millis(src.cast("long"))
+        # guarded: under ANSI mode the long cast of 1e30 raises
+        # CAST_OVERFLOW, and NaN compares false
+        parsed = F.when(
+            src.between(_MIN_MS, _MAX_MS), F.timestamp_millis(src.cast("long"))
+        )
     else:
         parsed = F.lit(None).cast("timestamp")
     return F.coalesce(parsed, F.current_timestamp())
@@ -108,16 +148,16 @@ def _flatten_exprs(
     reference the collision-proof temp names, output aliases derive
     from the original names.
     """
-    out: list[tuple[str, Column]] = []
+    out: list[tuple[str, Column, T.DataType]] = []
 
-    def add(name: str, col: Column, dt: T.DataType | None = None) -> None:
+    def add(name: str, col: Column, dt: T.DataType) -> None:
         # output tables are strictly flat (the reference's model): a
         # value still complex after the one-level split — a depth-2
         # record, an array inside a record — JSON-stringifies, exactly
         # like the reference's JSON.stringify of non-split nesting
         if isinstance(dt, (T.StructType, T.ArrayType, T.MapType)):
-            col = F.to_json(col)
-        out.append((name, col.alias(name)))
+            col, dt = F.to_json(col), T.StringType()
+        out.append((name, col, dt))
 
     for name, tmp, dt in fields:
         qcol = F.col(f"`{tmp}`")
@@ -132,7 +172,7 @@ def _flatten_exprs(
                     )
             else:
                 # P4: JSON-stringify the record
-                add(snake_case(name), F.to_json(qcol))
+                add(snake_case(name), qcol, dt)
         elif isinstance(dt, T.ArrayType):
             if cfg.split_array_items_as_columns:
                 # P5: positional columns k_0..k_{max-1}
@@ -143,54 +183,47 @@ def _flatten_exprs(
                     # yield NULL for the missing positions — under ANSI
                     # mode arr[i] throws INVALID_ARRAY_INDEX instead
                     item = F.get(qcol, F.lit(i))
-                    if isinstance(elem, T.StructType):
-                        if cfg.split_records_as_columns and _splittable(elem):
-                            for sub in elem.fields:
-                                add(
-                                    snake_case(f"{name}_{i}_{sub.name}"),
-                                    item.getField(sub.name),
-                                    sub.dataType,
-                                )
-                        else:
-                            add(snake_case(f"{name}_{i}"), F.to_json(item))
+                    if isinstance(elem, T.StructType) and (
+                        cfg.split_records_as_columns and _splittable(elem)
+                    ):
+                        for sub in elem.fields:
+                            add(
+                                snake_case(f"{name}_{i}_{sub.name}"),
+                                item.getField(sub.name),
+                                sub.dataType,
+                            )
                     else:
                         add(snake_case(f"{name}_{i}"), item, elem)
             else:
                 # P6: JSON-stringify the whole array
-                add(snake_case(name), F.to_json(qcol))
+                add(snake_case(name), qcol, dt)
         else:
-            add(snake_case(name), qcol)
+            add(snake_case(name), qcol, dt)
     # snake_case can collide ('aB' and 'a_b' both -> a_b; keys differing
-    # only by case fold together): LAST value wins, first position kept —
-    # exactly JS object assignment, which is what the reference's
-    # row-object spread does (clickhouse-batch-client.class.ts:190-273)
-    dedup: dict[str, Column] = {}
-    for name, col in out:
-        dedup[name] = col
-    return list(dedup.items())
+    # only by case fold together): first position kept, and per ROW the
+    # last source holding a value wins — JS object assignment, which is
+    # what the reference's row-object spread does
+    # (clickhouse-batch-client.class.ts:190-273). Per row, not per
+    # schema: in a multi-type batch one type's key spelling must not
+    # blank out another type's column.
+    sources: dict[str, list[tuple[Column, T.DataType]]] = {}
+    for name, col, dt in out:
+        sources.setdefault(name, []).append((col, dt))
+    exprs = []
+    for name, srcs in sources.items():
+        col = srcs[0][0]
+        if len(srcs) > 1:
+            dt = reduce(widen_type, (d for _, d in srcs))
+            col = F.coalesce(
+                *[c if d == dt else c.cast(dt) for c, d in reversed(srcs)]
+            )
+        exprs.append((name, col.alias(name)))
+    return exprs
 
 
-def normalize_events(
-    df: DataFrame,
-    cfg: IngestConfig | None = None,
-    materialize: bool = False,
-) -> DataFrame | tuple[DataFrame, "DataFrame | None", "int | None"]:
-    """Full P1-P8 pipeline over a typed event DataFrame (one table's rows).
-
-    ``materialize=True`` is the ingest hot path (VERDICT r8 item 6):
-    the flattened projection is persisted and filled by the SAME
-    aggregate job that decides the D1/F3 refinements, and the call
-    returns ``(normalized, cached, n_rows)`` where ``cached`` is the
-    persisted intermediate the caller must ``unpersist()`` after
-    writing and ``n_rows`` is the batch row count measured by that
-    same aggregate (``None`` when a custom P8 transform might change
-    it — re-count then). The returned frame is then a cheap
-    cast/drop/transform projection over that cache, so the whole
-    normalize+count+append sequence executes the flatten exactly once
-    and runs no separate count job.
-    """
-    cfg = cfg or IngestConfig()
-
+def _flatten(df: DataFrame, cfg: IngestConfig, route: bool) -> tuple[DataFrame, tuple]:
+    """P1-P7 as one projection over ``df``; ``route`` keeps the routing
+    key as ``ROUTE_COLUMN``. Returns the frame and its cache key."""
     # Positional rename to collision-proof temp names FIRST: event keys
     # that differ only in case ('J' vs 'j') are distinct JSON fields but
     # ambiguous to Spark's case-insensitive column resolution — toDF is
@@ -208,7 +241,7 @@ def normalize_events(
         if f.name not in drop
     ]
 
-    # P5 needs batch max array lengths — one aggregate, O(array columns)
+    # P5 needs max array lengths — one aggregate, O(array columns)
     array_tmps = [tmp for _, tmp, dt in payload if isinstance(dt, T.ArrayType)]
     max_lens: dict[str, int] = {}
     if cfg.split_array_items_as_columns and array_tmps:
@@ -219,110 +252,152 @@ def normalize_events(
 
     # key on the ORIGINAL schema (temp names are positional, so the
     # original names + types determine every expression built below)
-    cache_key = (
+    key = (
         df.sparkSession.sparkContext.applicationId,
         df.schema.json(),
         _cfg_expr_sig(cfg),
         tuple(sorted(max_lens.items())),
     )
-    df = renamed
-    hit = _EXPR_CACHE.get(cache_key)
-    if hit is not None:
-        body, received_at = hit
-    else:
-        received_at = _received_at_expr(renamed, tmp_of.get("__received_at"))
-        body = _flatten_exprs(payload, cfg, max_lens)
+
+    def build() -> tuple:
         # system columns overwrite same-named payload columns (the
         # reference assigns them after spreading the row,
         # clickhouse-batch-client.class.ts:280-288)
-        body = [(n, c) for n, c in body if n not in SYSTEM_COLUMNS]
-        if len(_EXPR_CACHE) >= _EXPR_CACHE_MAX:
-            _EXPR_CACHE.pop(next(iter(_EXPR_CACHE)))
-        _EXPR_CACHE[cache_key] = (body, received_at)
+        body = [
+            (n, c)
+            for n, c in _flatten_exprs(payload, cfg, max_lens)
+            if n not in SYSTEM_COLUMNS
+        ]
+        return body, _received_at_expr(renamed, tmp_of.get("__received_at"))
 
-    # P2-P7 in one projection
-    flat = df.select(
+    body, received_at = _cached(key, build)
+    route_col = (
+        [F.col(f"`{tmp_of[cfg.event_type_property]}`").alias(ROUTE_COLUMN)]
+        if route
+        else []
+    )
+    flat = renamed.select(
+        *route_col,
         *[c for _, c in body],
         received_at.alias("received_at"),
         F.current_timestamp().alias("sent_at"),
         F.expr("uuid()").alias("message_id"),
     )
-    cached: DataFrame | None = None
-    if materialize:
-        # persist BEFORE the refinement aggregate: that aggregate is
-        # the job that fills the cache, and everything downstream
-        # (count, evolve, append) reads the cache instead of re-running
-        # the flatten. Also pins current_timestamp()/uuid() so replayed
-        # reads of the frame can't re-stamp them.
-        cached = flat.persist()
-        flat = cached
+    return flat, key
 
-    # D1 refinement + F3/G2 presence in ONE aggregate job: string
-    # payload columns that are date-strings in every defined row
-    # become timestamps, and a column participates only if some row
-    # defines it (reference getColsMinimumList,
-    # clickhouse-batch-client.class.ts:383-395). The two decisions
-    # used to be separate full-scan jobs per table; merging them
-    # halves the per-table driver actions on the ingest hot path.
-    # (Counting pre-refinement is equivalent to the old post-
-    # refinement count: a column only refines when EVERY defined
-    # value parses, so the non-null count is unchanged by parsing.)
-    n_rows: int | None = None
-    payload_cols = [c for c in flat.columns if c not in SYSTEM_COLUMNS]
-    if payload_cols:
-        # the aggregate's expression list is the second per-batch py4j
-        # builder on the hot path (3 Column trees per column, and
-        # _is_date_string is a deep one) — memoized on the same
-        # signature: flat's schema is fully determined by cache_key
-        agg_key = (*cache_key, "refinement_aggs")
-        agg_hit = _EXPR_CACHE.get(agg_key)
-        if agg_hit is not None:
-            string_cols, aggs = agg_hit
-        else:
-            string_cols = [
-                c
-                for c in payload_cols
-                if isinstance(flat.schema[c].dataType, T.StringType)
-            ]
-            aggs = [
-                F.count(F.col(f"`{c}`")).alias(f"__n_{i}")
-                for i, c in enumerate(payload_cols)
-            ] + [
-                F.min(
-                    F.when(
-                        F.col(f"`{c}`").isNotNull(),
-                        _is_date_string(F.col(f"`{c}`")).cast("int"),
-                    )
-                ).alias(f"__d_{i}")
-                for i, c in enumerate(string_cols)
-            ] + [
-                # total row count rides the same job: callers on the
-                # hot path get it for free instead of a count job
-                F.count(F.lit(1)).alias("__n_rows")
-            ]
-            if len(_EXPR_CACHE) >= _EXPR_CACHE_MAX:
-                _EXPR_CACHE.pop(next(iter(_EXPR_CACHE)))
-            _EXPR_CACHE[agg_key] = (string_cols, aggs)
-        row = flat.agg(*aggs).collect()[0]
-        n_rows = int(row["__n_rows"])
-        refinements = {
-            c: T.TimestampType()
+
+@dataclass(frozen=True)
+class _Decision:
+    """One table's columns, decided from its rows."""
+
+    n_rows: int
+    absent: frozenset[str]  # F3/G2: payload columns no row defines
+    dates: frozenset[str]  # D1: string columns whose every value is a date
+
+
+def _decide(flat: DataFrame, key: tuple, group: bool) -> dict[object, _Decision]:
+    """The D1/F3 decisions in ONE aggregate job, per routing value when
+    ``group`` (keyed by it) or for the whole frame (keyed by None).
+    Counting before the D1 parse equals counting after it: a column
+    only becomes a timestamp when EVERY defined value parses."""
+
+    def build() -> tuple:
+        # 3 Column trees per column, and _is_date_string is a deep one
+        payload_cols = [
+            c for c in flat.columns if c not in SYSTEM_COLUMNS and c != ROUTE_COLUMN
+        ]
+        string_cols = [
+            c for c in payload_cols if isinstance(flat.schema[c].dataType, T.StringType)
+        ]
+        aggs = [
+            F.count(F.col(f"`{c}`")).alias(f"__n_{i}")
+            for i, c in enumerate(payload_cols)
+        ] + [
+            F.min(
+                F.when(
+                    F.col(f"`{c}`").isNotNull(),
+                    _is_date_string(F.col(f"`{c}`")).cast("int"),
+                )
+            ).alias(f"__d_{i}")
             for i, c in enumerate(string_cols)
-            if row[f"__d_{i}"] == 1
-        }
-        flat = apply_leaf_types(flat, refinements)
-        empty = [c for i, c in enumerate(payload_cols) if not row[f"__n_{i}"]]
-        if empty:
-            flat = flat.drop(*empty)
+        ] + [F.count(F.lit(1)).alias("__n_rows")]
+        return payload_cols, string_cols, aggs
 
-    # P8: transform hook (default adds timestamp = received_at)
+    payload_cols, string_cols, aggs = _cached((*key, "decision"), build)
+    rows = (flat.groupBy(ROUTE_COLUMN) if group else flat).agg(*aggs).collect()
+    return {
+        (r[ROUTE_COLUMN] if group else None): _Decision(
+            n_rows=int(r["__n_rows"]),
+            absent=frozenset(
+                c for i, c in enumerate(payload_cols) if not r[f"__n_{i}"]
+            ),
+            dates=frozenset(
+                c for i, c in enumerate(string_cols) if r[f"__d_{i}"] == 1
+            ),
+        )
+        for r in rows
+    }
+
+
+def _finish(flat: DataFrame, d: _Decision, cfg: IngestConfig) -> DataFrame:
+    """Apply one table's decision, then P8 (the transform hook; the
+    default adds timestamp = received_at)."""
+    cols = [
+        sniff_timestamp(F.col(f"`{c}`")).alias(c) if c in d.dates else F.col(f"`{c}`")
+        for c in flat.columns
+        if c != ROUTE_COLUMN and c not in d.absent
+    ]
     transform = cfg.transform or default_transform
-    out = transform(flat)
-    if materialize:
-        # n_rows is authoritative only for the default transform (it
-        # adds a column, never filters); a custom P8 hook may change
-        # the row count, so callers must re-count then
-        if cfg.transform is not None:
-            n_rows = None
-        return out, cached, n_rows
-    return out
+    return transform(flat.select(*cols))
+
+
+@dataclass
+class NormalizedBatch:
+    """A tick's flattened batch and every table's decision.
+
+    ``frame`` is persisted: the caller calls ``unpersist()`` once every
+    table has been written."""
+
+    frame: DataFrame
+    decisions: dict[object, _Decision]
+    cfg: IngestConfig
+
+    @property
+    def counts(self) -> dict[object, int]:
+        """Rows per routing value; the None key is the F1 bucket of
+        events without one."""
+        return {k: d.n_rows for k, d in self.decisions.items()}
+
+    def finish(self, etype: str) -> DataFrame:
+        """The normalized rows of one event type (P1-P8)."""
+        rows = self.frame.filter(F.col(ROUTE_COLUMN) == etype)
+        return _finish(rows, self.decisions[etype], self.cfg)
+
+    def unpersist(self) -> None:
+        self.frame.unpersist()
+
+
+def normalize_batch(events: DataFrame, cfg: IngestConfig | None = None) -> NormalizedBatch:
+    """Flatten a whole multi-type batch once and decide every table's
+    columns in one grouped aggregate. ``events`` must hold the routing
+    key column ``cfg.event_type_property``."""
+    cfg = cfg or IngestConfig()
+    flat, key = _flatten(events, cfg, route=True)
+    # persist BEFORE the decision aggregate: that aggregate is the job
+    # that fills the cache, and every type's write reads the cache
+    # instead of re-running the JSON parse and the flatten. It also
+    # pins current_timestamp()/uuid(), so no re-read can re-stamp them.
+    flat = flat.persist()
+    try:
+        decisions = _decide(flat, key, group=True)
+    except BaseException:
+        flat.unpersist()
+        raise
+    return NormalizedBatch(flat, decisions, cfg)
+
+
+def normalize_events(df: DataFrame, cfg: IngestConfig | None = None) -> DataFrame:
+    """Full P1-P8 pipeline over a typed event DataFrame (one table's rows)."""
+    cfg = cfg or IngestConfig()
+    flat, key = _flatten(df, cfg, route=False)
+    return _finish(flat, _decide(flat, key, group=False)[None], cfg)

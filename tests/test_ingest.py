@@ -446,3 +446,119 @@ def test_per_type_jobs_stay_in_callers_job_group(spark, tmp_path):
     ungrouped = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
     assert len(grouped) > 3
     assert not ungrouped
+
+
+def test_captured_data_error_is_not_an_interruption(spark):
+    """A real Spark data error (a pyspark CapturedException, whose
+    ``_origin`` is the Java throwable) is a bad batch, not an
+    interruption: the flush must dead-letter it, not replay it."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from redis_events_to_clickhouse_tables_spark.streaming.ingest import (
+        _is_interruption,
+    )
+
+    with pytest.raises(Exception) as info:
+        spark.range(1).select(F.lit(1e30).cast("long")).collect()
+    assert "CAST_OVERFLOW" in str(info.value)
+    assert not _is_interruption(info.value)
+
+
+def test_cancelled_job_is_an_interruption(spark):
+    """A job cancelled by the scheduler (SPARK_JOB_CANCELLED) aborts
+    the batch for replay instead of being dead-lettered."""
+    import threading
+    import time
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from redis_events_to_clickhouse_tables_spark.streaming.ingest import (
+        _is_interruption,
+    )
+
+    sc = spark.sparkContext
+    group = "ingest-cancel-test"
+
+    def cancel_when_running():
+        deadline = time.time() + 60
+        while time.time() < deadline and not sc.statusTracker().getJobIdsForGroup(group):
+            time.sleep(0.05)
+        sc.cancelJobGroup(group)
+
+    canceller = threading.Thread(target=cancel_when_running)
+    canceller.start()
+    sc.setJobGroup(group, "cancelled on purpose")
+    try:
+        with pytest.raises(Exception) as info:
+            spark.range(10**13).select(F.sum(F.sqrt("id"))).collect()
+    finally:
+        sc._jsc.sc().clearJobGroup()
+        canceller.join()
+    assert _is_interruption(info.value)
+
+
+def test_out_of_range_numeric_received_at_cannot_fail_the_batch(spark, tmp_path):
+    """A numeric __received_at beyond any timestamp falls back to the
+    ingest time, like an unparseable string: under ANSI mode its cast
+    would overflow, and the flatten runs over the whole batch."""
+    engine, store = _engine(spark, tmp_path)
+    report = engine.process_raw_batch(
+        _raw(
+            spark,
+            [
+                {"event_type": "p", "__received_at": 1e30, "x": 1},
+                {"event_type": "ok", "x": 2},
+            ],
+        )
+    )
+    assert report.tables == {"ok": 1, "p": 1}
+    assert report.n_dead_lettered == 0 and not report.errors
+    row = store.read("p").first()
+    assert row["received_at"] is not None and row["x"] == 1
+
+
+def test_other_types_key_spelling_keeps_this_types_column(spark, tmp_path):
+    """Keys that collide after snake_case resolve per row: type b's
+    ``session_id`` (absent from type a's rows) must not erase type a's
+    ``sessionId``."""
+    engine, store = _engine(spark, tmp_path)
+    engine.process_raw_batch(
+        _raw(
+            spark,
+            [
+                {"event_type": "a", "sessionId": "x"},
+                {"event_type": "b", "session_id": "y"},
+            ],
+        )
+    )
+    assert [r["session_id"] for r in store.read("a").collect()] == ["x"]
+    assert [r["session_id"] for r in store.read("b").collect()] == ["y"]
+
+
+def test_each_extra_type_costs_one_job(spark, tmp_path):
+    """The batch is flattened and decided once; each event type then
+    runs only its write, so three more types cost three more jobs."""
+    sc = spark.sparkContext
+
+    def jobs(k: int) -> int:
+        store = TableStore(spark, tmp_path / f"w{k}")
+        engine = IngestEngine(spark, store, IngestConfig())
+        raw = _raw(
+            spark,
+            [
+                {"event_type": f"t{i}", "x": i, f"c{i}": "v", "d": "2024-01-01"}
+                for i in range(k)
+            ],
+        )
+        group = f"ingest-jobs-{k}"
+        sc.setJobGroup(group, "count the jobs of one batch")
+        try:
+            report = engine.process_raw_batch(raw, batch_id=0)
+        finally:
+            sc._jsc.sc().clearJobGroup()
+        assert len(report.tables) == k
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(6) - jobs(3) == 3
