@@ -353,6 +353,45 @@ def bench_scaling_sweep(spark, registry, sf_dir: str) -> dict:
     }
 
 
+def warm_up(spark, registry, sf_dir: str) -> None:
+    """Pay the session's one-time first-touch costs before anything is
+    timed: JVM/JIT, parquet footers, the Python-worker pool and the
+    shared query machinery. ``tools/profile_queries.py`` warms up
+    through this function too, so its numbers compare with bench's."""
+    # warm the JVM / parquet footers / codegen paths so per-query
+    # numbers reflect the engine, not first-touch JIT cost
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    if "q1_pricing_summary" in registry:
+        registry["q1_pricing_summary"].build(spark, sf_dir).count()
+    # warm the Python-worker pool (Arrow path): the first mapInPandas in
+    # a session forks one interpreter per core, each importing
+    # pyspark+pandas (~13 s across 32 cores); workers are reused after
+    # (spark.python.worker.reuse), so that one-time cost must not land
+    # on whichever Arrow query happens to run first
+    par = spark.sparkContext.defaultParallelism
+    spark.range(0, par, 1, par).mapInPandas(lambda it: it, "id long").count()
+    # warm the heavy SHARED machinery at the smallest SF: whole-stage
+    # codegen for the shingle/minhash/LSH pipeline, higher-order-
+    # function dot products, and the grouped-map Arrow path each cost
+    # several seconds of first-touch JIT that otherwise lands on
+    # whichever query happens to touch them first (observed: a 2s
+    # query measured at 22s purely because registry reordering made it
+    # the first dedup-family query of the session)
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    if os.path.isdir(warm_dir):
+        for warm_q in (
+            "dedup_minhash_lsh_candidates",
+            "sim_bruteforce_topk",
+            "grouped_user_gap_stats",
+        ):
+            if warm_q in registry:
+                try:
+                    registry[warm_q].build(spark, warm_dir).count()
+                except Exception:  # noqa: BLE001 — warmup must not fail the bench
+                    pass
+        spark.catalog.clearCache()
+
+
 def run_sweep(
     spark, registry, sf_dir: str
 ) -> tuple[dict[str, float], dict[str, str], list[str]]:
@@ -425,38 +464,7 @@ def main() -> None:
     spark = get_spark("bench")
     registry = load_all()
 
-    # warm the JVM / parquet footers / codegen paths so per-query
-    # numbers reflect the engine, not first-touch JIT cost
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    if "q1_pricing_summary" in registry:
-        registry["q1_pricing_summary"].build(spark, sf_dir).count()
-    # warm the Python-worker pool (Arrow path): the first mapInPandas in
-    # a session forks one interpreter per core, each importing
-    # pyspark+pandas (~13 s across 32 cores); workers are reused after
-    # (spark.python.worker.reuse), so that one-time cost must not land
-    # on whichever Arrow query happens to run first
-    par = spark.sparkContext.defaultParallelism
-    spark.range(0, par, 1, par).mapInPandas(lambda it: it, "id long").count()
-    # warm the heavy SHARED machinery at the smallest SF: whole-stage
-    # codegen for the shingle/minhash/LSH pipeline, higher-order-
-    # function dot products, and the grouped-map Arrow path each cost
-    # several seconds of first-touch JIT that otherwise lands on
-    # whichever query happens to touch them first (observed: a 2s
-    # query measured at 22s purely because registry reordering made it
-    # the first dedup-family query of the session)
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if os.path.isdir(warm_dir):
-        for warm_q in (
-            "dedup_minhash_lsh_candidates",
-            "sim_bruteforce_topk",
-            "grouped_user_gap_stats",
-        ):
-            if warm_q in registry:
-                try:
-                    registry[warm_q].build(spark, warm_dir).count()
-                except Exception:  # noqa: BLE001 — warmup must not fail the bench
-                    pass
-        spark.catalog.clearCache()
+    warm_up(spark, registry, sf_dir)
 
     # Measure ingest FIRST, on a freshly-warmed JVM: the reference's
     # 20 events/s ceiling is a steady-state number for a process doing

@@ -23,6 +23,7 @@ from ..functions.hashing import DUCKDB_MD5_LONG, md5_long
 from ..registry import query
 from ..session import tune
 from ..sources.tables import fanout, table
+from .similarity import _ddot
 
 # contamination: 5-gram collision against the held-out benchmark slice
 _CONTAM_N = 5
@@ -311,13 +312,6 @@ _SQL_CENTROID_ARR = f"""
     carr AS (
       SELECT label, list(x ORDER BY pos) AS c FROM cmean GROUP BY label)
 """
-
-
-def _ddot(a: Column, b: Column) -> Column:
-    """Left-to-right fold dot product (bit-equal to list_dot_product)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
 
 
 @query(

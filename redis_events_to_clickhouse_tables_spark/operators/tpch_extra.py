@@ -31,12 +31,7 @@ from ..registry import query
 from ..session import tune
 from ..sources.tables import table
 from .relational import _SQL_REV, _rev
-
-
-def _view(spark: SparkSession, sf_dir: str, name: str) -> str:
-    vname = f"retct_{name}"
-    table(spark, sf_dir, name).createOrReplaceTempView(vname)
-    return vname
+from .subqueries import _view
 
 
 @query(

@@ -538,33 +538,8 @@ class RedisBullSource:
         requeued = 0
         for raw in list(self.client.lrange(self.failed_key, 0, -1)):
             text = _as_text(raw)
-            if self.wire_format == "bull":
-                envelope = self._job_fields(text)
-                if envelope.get("name") != jobname:
-                    continue
-                ts = envelope.get("timestamp")
-                if ts is None or len(str(ts)) > _OLD_QUEUE_TS_MAX_DIGITS:
-                    continue
-                try:
-                    data = json.loads(envelope.get("data", ""))
-                except ValueError:
-                    continue
-                if not isinstance(data, dict):
-                    continue
-                if not data.get("__received_at"):
-                    data["__received_at"] = now_iso
-                self._add_bull_job(
-                    {**data, "__is_from_old_queue": True}, now_iso=now_iso
-                )
-                self.client.lrem(self.failed_key, 1, text)
-                self.client.delete(self._job_key(text))
-                requeued += 1
-                continue
-            try:
-                envelope = json.loads(text)
-            except ValueError:
-                continue
-            if not isinstance(envelope, dict) or envelope.get("name") != jobname:
+            envelope = self._old_queue_envelope(text)
+            if envelope is None or envelope.get("name") != jobname:
                 continue
             ts = envelope.get("timestamp")
             if ts is None or len(str(ts)) > _OLD_QUEUE_TS_MAX_DIGITS:
@@ -575,13 +550,31 @@ class RedisBullSource:
             if not data.get("__received_at"):
                 # first time through: flag its arrival date (main.ts:433-436)
                 data["__received_at"] = now_iso
-            self.client.rpush(
-                self.wait_key,
-                json.dumps({**data, "__is_from_old_queue": True}),
-            )
-            self.client.lrem(self.failed_key, 1, text)
+            data = {**data, "__is_from_old_queue": True}
+            if self.wire_format == "bull":
+                self._add_bull_job(data, now_iso=now_iso)
+                self.client.lrem(self.failed_key, 1, text)
+                self.client.delete(self._job_key(text))
+            else:
+                self.client.rpush(self.wait_key, json.dumps(data))
+                self.client.lrem(self.failed_key, 1, text)
             requeued += 1
         return requeued
+
+    def _old_queue_envelope(self, text: str) -> dict | None:
+        """A failed-list entry as its ``{"name", "timestamp", "data"}``
+        envelope with ``data`` decoded, or None when it is not one. In
+        ``bull`` format the entry is a job id whose hash holds the
+        fields (``data`` a JSON string); otherwise it is the envelope's
+        JSON itself."""
+        try:
+            if self.wire_format == "bull":
+                envelope = self._job_fields(text)
+                return {**envelope, "data": json.loads(envelope.get("data", ""))}
+            envelope = json.loads(text)
+        except ValueError:
+            return None
+        return envelope if isinstance(envelope, dict) else None
 
     def _add_bull_job(self, data: dict, now_iso: str) -> str:
         """``eventsQueue.add(data)`` in classic-Bull layout: draw the

@@ -62,26 +62,3 @@ def fanout(df: DataFrame) -> DataFrame:
     and this becomes a cheap rebalance against skewed file sizes.
     """
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
-def write_bucketed(
-    df: DataFrame,
-    name: str,
-    key: str,
-    n_buckets: int = 32,
-    sort: bool = True,
-) -> None:
-    """Persist a table bucketed (and optionally sorted) on a join key.
-
-    Bucketing is the pre-shuffle: both sides of a frequent equi-join
-    written with the same bucket spec join with NO exchange — at
-    100 TB that turns every orders-x-customer style join from a
-    full-table shuffle into a local zip of co-located buckets, paid
-    once at write time. Requires the session catalog (bucket metadata
-    lives in the table definition, not in parquet), so this is
-    ``saveAsTable``, not a path write.
-    """
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    writer.saveAsTable(name)

@@ -13,7 +13,11 @@ commit only after the batch succeeds). What remains engine-level is
 dead-lettering: a table whose write fails gets its events appended to
 the ``_dlq`` table with attempt counters and the error (E1), and
 events of non-critical types that have already failed once are
-dropped (E4/F2). ``_trace`` is the JSONL side-output (K4).
+dropped (E4/F2). ``retry_dead_letters`` replays the DLQ through the
+tick's own normalize and per-table flush (``_flush``), each table
+under a content-hash batch id, so a crashed replay reruns into the
+store's commit log instead of duplicating rows (E2/E3). ``_trace`` is
+the JSONL side-output (K4).
 
 Scale note: a tick's fixed cost does not grow with its number of
 event types T. The batch is flattened once and every table's columns
@@ -45,7 +49,9 @@ from pyspark.sql import functions as F
 
 from ..config import IngestConfig
 from ..plans.inference import parse_events
-from .normalize import normalize_batch, normalize_events
+# normalize_events is not called here; the benchmark's traced runs bind
+# it as ``ingest.normalize_events`` (perfbench/spans.py)
+from .normalize import NormalizedBatch, normalize_batch, normalize_events  # noqa: F401
 from .store import TableStore, swap_dirs
 
 DLQ_TABLE = "_dlq"
@@ -222,9 +228,25 @@ class IngestEngine:
         with self._lock, path.open("a") as fh:
             fh.write(json.dumps({"ts": time.time(), **payload}) + "\n")
 
+    def _phase(self, report: IngestReport, name: str, sec: float) -> None:
+        with self._lock:
+            report.phase_seconds[name] = report.phase_seconds.get(name, 0.0) + sec
+
     # -- E1/E4: dead-letter ----------------------------------------------
+    def _drop_non_critical(
+        self, dlq: DataFrame, table: str, report: IngestReport
+    ) -> DataFrame:
+        """E4/F2: DLQ rows of a non-critical type that have already
+        failed once are dropped instead of dead-lettered again."""
+        if table not in self.config.non_critical_event_types:
+            return dlq
+        again = F.col("attempts") > 1
+        dropped = dlq.filter(again).count()
+        with self._lock:
+            report.n_dropped_non_critical += dropped
+        return dlq.filter(~again)
+
     def _dead_letter(self, events: DataFrame, table: str, error: str, report: IngestReport):
-        cfg = self.config
         attempts = (
             F.col("__single_retry_attempts").cast("long")
             if "__single_retry_attempts" in events.columns
@@ -239,20 +261,7 @@ class IngestEngine:
             (attempts + 1).alias("attempts"),
             F.current_timestamp().alias("dead_lettered_at"),
         )
-        if cfg.non_critical_event_types:
-            # E4/F2: non-critical events that already failed once are dropped
-            dropped = dlq.filter(
-                F.lit(table).isin(*cfg.non_critical_event_types)
-                & (F.col("attempts") > 1)
-            ).count()
-            with self._lock:
-                report.n_dropped_non_critical += dropped
-            dlq = dlq.filter(
-                ~(
-                    F.lit(table).isin(*cfg.non_critical_event_types)
-                    & (F.col("attempts") > 1)
-                )
-            )
+        dlq = self._drop_non_critical(dlq, table, report)
         # the DLQ write bypasses evolution (fixed schema) — append
         # directly, one writer at a time (see _dlq_lock)
         data_dir = self.store.root / DLQ_TABLE / "data"
@@ -275,14 +284,23 @@ class IngestEngine:
         """E2/E3: replay dead-lettered events back into their tables.
 
         The reference re-enqueues failed events flagged
-        ``__is_single_retry`` and inserts them one-by-one on a
-        dedicated emergency client with Bull retrying up to 5 attempts
-        (src/main.ts:284-363, :482-511). Here: DLQ rows under the
-        attempt ceiling are re-parsed and re-written per target table;
-        rows that fail again return to the DLQ with ``attempts``
-        incremented, rows at the ceiling stay parked (poison). E3's
-        busy-client mutex has no equivalent — Spark serializes the
-        writes — but the attempt counter it increments is preserved.
+        ``__is_single_retry`` and inserts them through the bulk path's
+        insert and schema-evolution client, with Bull retrying up to 5
+        attempts (src/main.ts:284-363, :482-511). Here the DLQ rows
+        under the attempt ceiling are parsed as one batch and written
+        like a tick: ``normalize_batch``, then ``_flush`` per table. A
+        table that fails again gets its rows back with ``attempts`` + 1,
+        or dropped for non-critical types (E4); rows at the ceiling stay
+        parked (poison). E3's busy-client mutex has no equivalent; its
+        attempt counter is kept. An interruption aborts the replay and
+        leaves the DLQ untouched.
+
+        Each table is flushed under the batch id ``dlq-`` + 24 hex
+        digits of the sha256 of its sorted DLQ rows (dead-letter time
+        and payload: an identical event dead-lettered later must not
+        collide with one already replayed). A replay that crashed
+        before the DLQ swap left the DLQ as it was, so its rerun gets
+        the same ids and the store's commit log skips what it wrote.
         """
         report = IngestReport(batch_id=-1)
         data_dir = self.store.root / DLQ_TABLE / "data"
@@ -296,52 +314,137 @@ class IngestEngine:
             try:
                 eligible = dlq.filter(F.col("attempts") < max_attempts)
                 parked = dlq.filter(F.col("attempts") >= max_attempts)
-                failures: list[DataFrame] = []
-                tables = [
-                    r[0] for r in eligible.select("target_table").distinct().collect()
-                ]
-                for t in sorted(tables):
-                    sub = eligible.filter(F.col("target_table") == t)
-                    try:
-                        events = parse_events(
-                            self.spark, sub.select(F.col("payload").alias("value"))
-                        )
-                        rows = normalize_events(events, self.config).persist()
-                        self.store.write(
-                            rows, t, nullable_new=self.config.altered_column_nullable
-                        )
-                        n = rows.count()
-                        rows.unpersist()
-                        report.tables[t] = n
-                        self._trace(
-                            {"event": "dlq_retry_ok", "table": t, "rows": n},
-                            suffix=".success.log",
-                        )
-                    except Exception as exc:  # noqa: BLE001 — back to the DLQ
-                        err = str(exc)[:500]
-                        report.errors[t] = err
-                        failures.append(
-                            sub.withColumn("attempts", F.col("attempts") + 1)
-                            .withColumn("error", F.lit(err))
-                            .withColumn("dead_lettered_at", F.current_timestamp())
-                        )
+                row_key = F.concat_ws(
+                    " ", F.unix_micros("dead_lettered_at").cast("string"), "payload"
+                )
+                digest = F.sha2(F.concat_ws("\n", F.array_sort(F.collect_list(row_key))), 256)
+                ids = {
+                    t: "dlq-" + h[:24]
+                    for t, h in eligible.groupBy("target_table").agg(digest).collect()
+                }
+                if not ids:  # everything is parked
+                    report.n_dead_lettered = dlq.count()
+                    return report
+                # a dead letter's payload routes to its target_table:
+                # _dead_letter serializes one event type's rows per table
+                events = parse_events(
+                    self.spark, eligible.select(F.col("payload").alias("value"))
+                )
+                batch = normalize_batch(events, self.config)
+                remaining = parked
+                try:
+                    for t in sorted(ids):
+                        err = self._flush(batch, t, ids[t], report)
+                        if err is None:
+                            continue
                         self._trace(
                             {"event": "dlq_retry_fail", "table": t, "error": err},
                             suffix=".failedsingle.error.log",
                         )
-                remaining = parked
-                for f in failures:
-                    remaining = remaining.unionByName(f)
-                # atomic DLQ replacement: write survivors to a fresh
-                # dir, then crash-safe swap (old dir renamed aside
-                # before deletion — streaming/store.py swap_dirs)
-                report.n_dead_lettered = remaining.count()
-                tmp = self.store.root / DLQ_TABLE / f".retry-{uuid.uuid4().hex[:8]}"
-                remaining.write.mode("overwrite").parquet(str(tmp))
+                        again = (
+                            eligible.filter(F.col("target_table") == t)
+                            .withColumn("attempts", F.col("attempts") + 1)
+                            .withColumn("error", F.lit(err))
+                            .withColumn("dead_lettered_at", F.current_timestamp())
+                        )
+                        remaining = remaining.unionByName(
+                            self._drop_non_critical(again, t, report)
+                        )
+                    # atomic DLQ replacement: write survivors to a fresh
+                    # dir, then crash-safe swap (old dir renamed aside
+                    # before deletion — streaming/store.py swap_dirs)
+                    report.n_dead_lettered = remaining.count()
+                    tmp = self.store.root / DLQ_TABLE / f".retry-{uuid.uuid4().hex[:8]}"
+                    remaining.write.mode("overwrite").parquet(str(tmp))
+                finally:
+                    batch.unpersist()
                 swap_dirs(tmp, data_dir)
                 return report
             finally:
                 dlq.unpersist()
+
+    # -- the per-table flush ----------------------------------------------
+    def _flush(
+        self, batch: NormalizedBatch, etype: str, batch_id, report: IngestReport
+    ) -> str | None:
+        """Write one event type's rows of ``batch`` to its table (P8,
+        then a CDC merge when they carry every ``upsert_keys`` column,
+        else an evolving append) in the configured layout, idempotent
+        per ``batch_id``. Returns None once written, or the error for
+        the caller to dead-letter (E1); an interruption re-raises."""
+        try:
+            t_append = time.perf_counter()
+            rows = batch.finish(etype)
+            # the aggregate's count holds unless a custom P8 transform
+            # changes the rows
+            n = rows.count() if self.config.transform else batch.decisions[etype].n_rows
+            target = self.config.target_rows_per_file
+            coalesce_to = max(1, -(-n // target)) if target and n else None
+            keys = self.config.upsert_keys
+            if keys and all(k in rows.columns for k in keys):
+                # CDC mode: MERGE on the key tuple (last-write-wins;
+                # store.upsert docstring)
+                self.store.upsert(
+                    rows,
+                    etype,
+                    keys=keys,
+                    batch_id=batch_id,
+                    partition_by=self.config.table_partition_by,
+                    sort_by=self.config.table_sort_by,
+                )
+            else:
+                self.store.write(
+                    rows,
+                    etype,
+                    nullable_new=self.config.altered_column_nullable,
+                    batch_id=batch_id,
+                    partition_by=self.config.table_partition_by,
+                    sort_by=self.config.table_sort_by,
+                    coalesce_to=coalesce_to,
+                )
+            self._phase(report, "append", time.perf_counter() - t_append)
+            with self._lock:
+                report.tables[etype] = n
+            self._trace(
+                {"event": "insert", "batch": batch_id, "table": etype, "rows": n},
+                suffix=".success.log",
+            )
+            return None
+        except Exception as exc:  # noqa: BLE001 — E1: the caller dead-letters
+            if _is_interruption(exc):
+                # A stop()/shutdown interrupt mid-flush is NOT a bad
+                # batch: demoting it would let the micro-batch "succeed",
+                # commit its offsets, and strand the events in the DLQ
+                # (observed: a maintenance restart racing an in-flight
+                # batch silently dropped a row to the DLQ forever).
+                # Re-raise so the batch aborts uncommitted and replays
+                # on restart — the idempotent batch-id log absorbs any
+                # partial table writes. The detection errs toward
+                # re-raise: a false positive costs one replay — and only
+                # up to the replay cap, so a deterministic poison batch
+                # whose error text mimics a cancellation still reaches
+                # the DLQ instead of stalling ingestion (ADVICE r4).
+                capped = False
+                if batch_id is not None:
+                    key = (batch_id, etype)
+                    with self._lock:
+                        replays = self._interruption_replays.get(key, 0) + 1
+                        self._interruption_replays[key] = replays
+                    capped = replays > _INTERRUPTION_REPLAY_CAP
+                if not capped:
+                    raise
+                self._trace(
+                    {
+                        "event": "interruption_replay_cap",
+                        "batch": batch_id,
+                        "table": etype,
+                        "replays": replays,
+                    }
+                )
+            err = str(exc)[:500]
+            with self._lock:
+                report.errors[etype] = err
+            return err
 
     # -- the tick ---------------------------------------------------------
     def process_raw_batch(self, raw: DataFrame, batch_id: int | None = None) -> IngestReport:
@@ -356,12 +459,6 @@ class IngestEngine:
             raise StoreUnavailableError(f"store {self.store.root} unavailable")
         report = IngestReport(batch_id=batch_id)
 
-        def _phase(name: str, sec: float) -> None:
-            with self._lock:
-                report.phase_seconds[name] = (
-                    report.phase_seconds.get(name, 0.0) + sec
-                )
-
         t_parse = time.perf_counter()
         events = parse_events(self.spark, raw)
         if not events.columns:
@@ -374,11 +471,11 @@ class IngestEngine:
             self._trace({"event": "missing_routing_key", "batch": batch_id, "rows": n})
             return report
         # parse_events runs the JSON schema inference job
-        _phase("parse_infer", time.perf_counter() - t_parse)
+        self._phase(report, "parse_infer", time.perf_counter() - t_parse)
 
         t_norm = time.perf_counter()
         batch = normalize_batch(events, self.config)
-        _phase("normalize", time.perf_counter() - t_norm)
+        self._phase(report, "normalize", time.perf_counter() - t_norm)
         try:
             # the batch's one decision aggregate is also the routing
             # table: rows per event type, and its null group is the F1
@@ -400,85 +497,10 @@ class IngestEngine:
             types = [t for t in counts if t is not None]
 
             def _process_type(etype: str) -> None:
-                try:
-                    t_append = time.perf_counter()
-                    rows = batch.finish(etype)
-                    # the aggregate's count holds unless a custom P8
-                    # transform changes the rows
-                    n = counts[etype] if self.config.transform is None else rows.count()
-                    target = self.config.target_rows_per_file
-                    coalesce_to = (
-                        max(1, -(-n // target)) if target and n else None
-                    )
-                    keys = self.config.upsert_keys
-                    if keys and all(k in rows.columns for k in keys):
-                        # CDC mode: MERGE on the key tuple
-                        # (last-write-wins; store.upsert docstring)
-                        self.store.upsert(
-                            rows,
-                            etype,
-                            keys=keys,
-                            batch_id=batch_id,
-                            partition_by=self.config.table_partition_by,
-                            sort_by=self.config.table_sort_by,
-                        )
-                    else:
-                        self.store.write(
-                            rows,
-                            etype,
-                            nullable_new=self.config.altered_column_nullable,
-                            batch_id=batch_id,
-                            partition_by=self.config.table_partition_by,
-                            sort_by=self.config.table_sort_by,
-                            coalesce_to=coalesce_to,
-                        )
-                    _phase("append", time.perf_counter() - t_append)
-                    with self._lock:
-                        report.tables[etype] = n
-                    self._trace(
-                        {"event": "insert", "batch": batch_id, "table": etype, "rows": n},
-                        suffix=".success.log",
-                    )
-                except Exception as exc:  # noqa: BLE001 — E1: dead-letter path
-                    if _is_interruption(exc):
-                        # A stop()/shutdown interrupt mid-flush is NOT a
-                        # bad batch: demoting it would let the micro-batch
-                        # "succeed", commit its offsets, and strand the
-                        # events in the DLQ (observed: a maintenance
-                        # restart racing an in-flight batch silently
-                        # dropped a row to the DLQ forever). Re-raise so
-                        # the batch aborts uncommitted and replays on
-                        # restart — the idempotent batch-id log absorbs
-                        # any partial table writes. The detection errs
-                        # toward re-raise: a false positive costs one
-                        # replay — and only up to the replay cap, so a
-                        # deterministic poison batch whose error text
-                        # mimics a cancellation still reaches the DLQ
-                        # instead of stalling ingestion (ADVICE r4).
-                        capped = False
-                        if batch_id is not None:
-                            key = (batch_id, etype)
-                            with self._lock:
-                                n = self._interruption_replays.get(key, 0) + 1
-                                self._interruption_replays[key] = n
-                            capped = n > _INTERRUPTION_REPLAY_CAP
-                        if not capped:
-                            raise
-                        self._trace(
-                            {
-                                "event": "interruption_replay_cap",
-                                "batch": batch_id,
-                                "table": etype,
-                                "replays": self._interruption_replays[(batch_id, etype)],
-                            }
-                        )
-                    with self._lock:
-                        report.errors[etype] = str(exc)[:500]
+                err = self._flush(batch, etype, batch_id, report)
+                if err is not None:
                     self._dead_letter(
-                        events.filter(F.col(etp) == etype),
-                        etype,
-                        str(exc)[:500],
-                        report,
+                        events.filter(F.col(etp) == etype), etype, err, report
                     )
 
             # per-table flushes run concurrently, like the reference's

@@ -32,6 +32,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import uuid
 from pathlib import Path
 
@@ -63,6 +64,16 @@ class TableStore:
         # analog).
         self.retain_versions = max(1, int(retain_versions))
         self.root.mkdir(parents=True, exist_ok=True)
+        self._writers: dict[str, threading.RLock] = {}
+        self._writers_guard = threading.Lock()
+
+    def _writer(self, table: str) -> threading.RLock:
+        """One writer per table: ``write`` and ``upsert`` hold this for
+        their whole run. Appends racing on one data directory share the
+        committer's ``_temporary`` dir, which the first commit deletes,
+        and the commit log in ``_meta.json`` is read-modify-write."""
+        with self._writers_guard:
+            return self._writers.setdefault(table, threading.RLock())
 
     # -- catalog ----------------------------------------------------------
     def table_path(self, table: str) -> Path:
@@ -253,53 +264,54 @@ class TableStore:
           clickhouse-batch-client.class.ts:579-584): co-locates rows
           for min/max skipping within each parquet file.
         """
-        meta = self._load_meta(table)
-        if batch_id is not None and str(batch_id) in meta["committed_batches"]:
-            return self.table_schema(table)
-        existing = self.table_schema(table)
-        if existing is None:  # table creation fixes the layout
-            meta["partition_by"] = list(partition_by or ())
-            meta["sort_by"] = list(sort_by or ())
-        target = merge_schemas(existing, df.schema, nullable_new=nullable_new)
+        with self._writer(table):
+            meta = self._load_meta(table)
+            if batch_id is not None and str(batch_id) in meta["committed_batches"]:
+                return self.table_schema(table)
+            existing = self.table_schema(table)
+            if existing is None:  # table creation fixes the layout
+                meta["partition_by"] = list(partition_by or ())
+                meta["sort_by"] = list(sort_by or ())
+            target = merge_schemas(existing, df.schema, nullable_new=nullable_new)
 
-        if existing is not None:
-            changed = [
-                f.name
-                for f in target.fields
-                if any(e.name == f.name and e.dataType != f.dataType for e in existing.fields)
-            ]
-            if changed:
-                # D4: ALTER COLUMN TYPE equivalent — rewrite stored data
-                # under the widened schema; persist the widened schema
-                # immediately so a failure later in this write (e.g. the
-                # append) can't leave widened data files under a stale
-                # sidecar that read() would then mis-type (ADVICE r1)
-                self._rewrite(table, existing, target)
-                self._save_schema(table, target)
+            if existing is not None:
+                changed = [
+                    f.name
+                    for f in target.fields
+                    if any(e.name == f.name and e.dataType != f.dataType for e in existing.fields)
+                ]
+                if changed:
+                    # D4: ALTER COLUMN TYPE equivalent — rewrite stored data
+                    # under the widened schema; persist the widened schema
+                    # immediately so a failure later in this write (e.g. the
+                    # append) can't leave widened data files under a stale
+                    # sidecar that read() would then mis-type (ADVICE r1)
+                    self._rewrite(table, existing, target)
+                    self._save_schema(table, target)
 
-        aligned = _align(df, target)
-        if coalesce_to is not None and coalesce_to >= 1:
-            # small-files guard: land the batch in ~coalesce_to files
-            # instead of one per shuffle partition (narrow dependency —
-            # no shuffle; a no-op when already narrower)
-            aligned = aligned.coalesce(coalesce_to)
-        sort_cols = [c for c in meta["sort_by"] if c in set(target.fieldNames())]
-        part_cols = [c for c in meta["partition_by"] if c in set(target.fieldNames())]
-        if sort_cols:
-            # partition columns lead: see _publish
-            aligned = aligned.sortWithinPartitions(*part_cols, *sort_cols)
-        data_dir = self.data_dir(table)
-        data_dir.mkdir(parents=True, exist_ok=True)
-        writer = aligned.write.mode("append")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(str(data_dir))
-        self._save_schema(table, target)
-        if batch_id is not None:
-            meta["committed_batches"].append(str(batch_id))
-            meta["committed_batches"] = meta["committed_batches"][-_MAX_TRACKED_BATCHES:]
-        self._save_meta(table, meta)
-        return target
+            aligned = _align(df, target)
+            if coalesce_to is not None and coalesce_to >= 1:
+                # small-files guard: land the batch in ~coalesce_to files
+                # instead of one per shuffle partition (narrow dependency —
+                # no shuffle; a no-op when already narrower)
+                aligned = aligned.coalesce(coalesce_to)
+            sort_cols = [c for c in meta["sort_by"] if c in set(target.fieldNames())]
+            part_cols = [c for c in meta["partition_by"] if c in set(target.fieldNames())]
+            if sort_cols:
+                # partition columns lead: see _publish
+                aligned = aligned.sortWithinPartitions(*part_cols, *sort_cols)
+            data_dir = self.data_dir(table)
+            data_dir.mkdir(parents=True, exist_ok=True)
+            writer = aligned.write.mode("append")
+            if part_cols:
+                writer = writer.partitionBy(*part_cols)
+            writer.parquet(str(data_dir))
+            self._save_schema(table, target)
+            if batch_id is not None:
+                meta["committed_batches"].append(str(batch_id))
+                meta["committed_batches"] = meta["committed_batches"][-_MAX_TRACKED_BATCHES:]
+            self._save_meta(table, meta)
+            return target
 
     # -- maintenance ------------------------------------------------------
     def compact(self, table: str, target_file_bytes: int = 128 * 1024 * 1024) -> tuple[int, int]:
@@ -413,67 +425,68 @@ class TableStore:
         greatest full row (a total order, so replays and retries can
         never flap).
         """
-        tag = f"merge-{batch_id}"
-        if self.table_exists(table):
-            meta = self._load_meta(table)
-            if batch_id is not None and tag in meta["committed_batches"]:
-                return 0
-        else:
-            # creating merge: same within-batch key dedupe, and the
-            # merge tag goes into the fresh commit log so a replay of
-            # THIS batch is a no-op (not a second full merge)
-            others0 = [c for c in df.columns if c not in keys]
-            first = (
-                df.groupBy(*keys)
-                .agg(F.max(F.struct(*others0)).alias("__row"))
-                .select(*keys, "__row.*")
-            )
-            self.write(
-                first,
-                table,
-                partition_by=partition_by,
-                sort_by=sort_by,
-            )
-            if batch_id is not None:
+        with self._writer(table):
+            tag = f"merge-{batch_id}"
+            if self.table_exists(table):
                 meta = self._load_meta(table)
+                if batch_id is not None and tag in meta["committed_batches"]:
+                    return 0
+            else:
+                # creating merge: same within-batch key dedupe, and the
+                # merge tag goes into the fresh commit log so a replay of
+                # THIS batch is a no-op (not a second full merge)
+                others0 = [c for c in df.columns if c not in keys]
+                first = (
+                    df.groupBy(*keys)
+                    .agg(F.max(F.struct(*others0)).alias("__row"))
+                    .select(*keys, "__row.*")
+                )
+                self.write(
+                    first,
+                    table,
+                    partition_by=partition_by,
+                    sort_by=sort_by,
+                )
+                if batch_id is not None:
+                    meta = self._load_meta(table)
+                    meta["committed_batches"].append(tag)
+                    self._save_meta(table, meta)
+                return 0
+            existing = self.read(table)
+            incoming = _align(df, existing.schema)
+            # dedupe incoming on the key: keep the greatest row (total
+            # order over all columns -> deterministic under replay)
+            others = [c for c in incoming.columns if c not in keys]
+            incoming = (
+                incoming.groupBy(*keys)
+                .agg(F.max(F.struct(*others)).alias("__row"))
+                .select(*keys, "__row.*")
+                .persist()  # consumed by 4 downstream plans (review r5)
+            )
+            matched = existing.join(
+                incoming.select(*keys), list(keys), "left_semi"
+            ).persist()
+            n_replaced = matched.count()
+            survivors = existing.join(
+                incoming.select(*keys), list(keys), "left_anti"
+            )
+            # touched = partitions receiving new rows UNION partitions
+            # holding replaced rows (cross-partition key moves rewrite BOTH,
+            # so the stale copy dies with the old partition)
+            self._publish(
+                table,
+                survivors.unionByName(incoming),
+                touched=incoming.unionByName(matched),
+            )
+            incoming.unpersist()
+            matched.unpersist()
+            if batch_id is not None:
                 meta["committed_batches"].append(tag)
+                meta["committed_batches"] = meta["committed_batches"][
+                    -_MAX_TRACKED_BATCHES:
+                ]
                 self._save_meta(table, meta)
-            return 0
-        existing = self.read(table)
-        incoming = _align(df, existing.schema)
-        # dedupe incoming on the key: keep the greatest row (total
-        # order over all columns -> deterministic under replay)
-        others = [c for c in incoming.columns if c not in keys]
-        incoming = (
-            incoming.groupBy(*keys)
-            .agg(F.max(F.struct(*others)).alias("__row"))
-            .select(*keys, "__row.*")
-            .persist()  # consumed by 4 downstream plans (review r5)
-        )
-        matched = existing.join(
-            incoming.select(*keys), list(keys), "left_semi"
-        ).persist()
-        n_replaced = matched.count()
-        survivors = existing.join(
-            incoming.select(*keys), list(keys), "left_anti"
-        )
-        # touched = partitions receiving new rows UNION partitions
-        # holding replaced rows (cross-partition key moves rewrite BOTH,
-        # so the stale copy dies with the old partition)
-        self._publish(
-            table,
-            survivors.unionByName(incoming),
-            touched=incoming.unionByName(matched),
-        )
-        incoming.unpersist()
-        matched.unpersist()
-        if batch_id is not None:
-            meta["committed_batches"].append(tag)
-            meta["committed_batches"] = meta["committed_batches"][
-                -_MAX_TRACKED_BATCHES:
-            ]
-            self._save_meta(table, meta)
-        return int(n_replaced)
+            return int(n_replaced)
 
     def _save_schema(self, table: str, schema: T.StructType) -> None:
         p = self.table_path(table)

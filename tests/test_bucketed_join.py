@@ -4,17 +4,19 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from redis_events_to_clickhouse_tables_spark.sources.tables import (
-    table,
-    write_bucketed,
-)
+from redis_events_to_clickhouse_tables_spark.plans.bucketing import write_bucketed
+from redis_events_to_clickhouse_tables_spark.sources.tables import table
 
 from .conftest import SF_DIR
 
 
-def test_bucketed_join_has_no_exchange(spark):
-    write_bucketed(table(spark, SF_DIR, "orders"), "b_orders", "o_custkey", 8)
-    write_bucketed(table(spark, SF_DIR, "customer"), "b_customer", "c_custkey", 8)
+def test_bucketed_join_has_no_exchange(spark, tmp_path):
+    write_bucketed(
+        table(spark, SF_DIR, "orders"), "b_orders", tmp_path / "orders", "o_custkey", 8
+    )
+    write_bucketed(
+        table(spark, SF_DIR, "customer"), "b_customer", tmp_path / "customer", "c_custkey", 8
+    )
     try:
         # force a non-broadcast join so the shuffle question is real
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

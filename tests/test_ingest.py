@@ -562,3 +562,119 @@ def test_each_extra_type_costs_one_job(spark, tmp_path):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     assert jobs(6) - jobs(3) == 3
+
+
+def _failing(store, method, message="down"):
+    """Replace ``store.<method>`` with one that always raises; returns
+    the original so the test can heal the sink."""
+    original = getattr(store, method)
+
+    def fail(*args, **kw):
+        raise RuntimeError(message)
+
+    setattr(store, method, fail)
+    return original
+
+
+def test_dlq_replay_merges_into_cdc_table(spark, tmp_path):
+    """A replayed event of a CDC table replaces the row with its key,
+    like the tick would have, instead of appending a second one."""
+    engine, store = _engine(spark, tmp_path, upsert_keys=("id",))
+    engine.process_raw_batch(_raw(spark, [{"event_type": "acct", "id": 1, "v": "a"}]))
+    original = _failing(store, "upsert")
+    engine.process_raw_batch(_raw(spark, [{"event_type": "acct", "id": 1, "v": "b"}]))
+    assert engine.read_dlq().count() == 1
+    store.upsert = original
+    report = engine.retry_dead_letters()
+    assert report.tables == {"acct": 1}
+    assert [(r["id"], r["v"]) for r in store.read("acct").collect()] == [(1, "b")]
+    assert engine.read_dlq().count() == 0
+
+
+def test_dlq_replay_creates_table_in_configured_layout(spark, tmp_path):
+    """A table first created by a replay records the configured
+    partitioning and sort order, like one created by a tick."""
+    engine, store = _engine(spark, tmp_path, table_partition_by=("day",))
+    original = _failing(store, "write")
+    engine.process_raw_batch(_raw(spark, [{"event_type": "t", "day": "d1", "x": 1}]))
+    assert not store.table_exists("t")
+    store.write = original
+    engine.retry_dead_letters()
+    meta = store._load_meta("t")
+    assert meta["partition_by"] == ["day"]
+    assert meta["sort_by"] == ["sent_at"]
+    assert (store.data_dir("t") / "day=d1").is_dir()
+    assert store.read("t").count() == 1
+
+
+def test_dlq_replay_crashed_before_swap_inserts_once(spark, tmp_path, monkeypatch):
+    """A replay that dies after writing the table and before swapping
+    the DLQ leaves the DLQ as it was; rerun, it writes under the same
+    content-hash batch id and the commit log skips the rows."""
+    import pytest
+
+    from redis_events_to_clickhouse_tables_spark.streaming import ingest
+
+    engine, store = _engine(spark, tmp_path)
+    engine.process_raw_batch(_raw(spark, [{"event_type": "t", "x": 0}]))
+    original = _failing(store, "write")
+    engine.process_raw_batch(_raw(spark, [{"event_type": "t", "x": 1}]))
+    store.write = original
+
+    def crash(tmp, live):
+        raise RuntimeError("process died before the DLQ swap")
+
+    monkeypatch.setattr(ingest, "swap_dirs", crash)
+    with pytest.raises(RuntimeError, match="DLQ swap"):
+        engine.retry_dead_letters()
+    assert engine.read_dlq().count() == 1
+    monkeypatch.undo()
+
+    # the restarted process replays the same DLQ
+    restarted = IngestEngine(spark, store, IngestConfig())
+    restarted.retry_dead_letters()
+    assert sorted(r["x"] for r in store.read("t").collect()) == [0, 1]
+    assert restarted.read_dlq().count() == 0
+
+
+def test_dlq_replay_drops_failing_non_critical_type(spark, tmp_path):
+    """E4 holds for a replay: a non-critical event that fails again is
+    dropped, not returned to the DLQ."""
+    engine, store = _engine(spark, tmp_path, non_critical_event_types=("noise",))
+    _failing(store, "write")
+    engine.process_raw_batch(_raw(spark, [{"event_type": "noise", "a": 1}]))
+    assert engine.read_dlq().collect()[0]["attempts"] == 1
+    report = engine.retry_dead_letters()
+    assert "noise" in report.errors
+    assert report.n_dropped_non_critical == 1
+    assert engine.read_dlq().count() == 0
+
+
+def test_dlq_replay_interruption_leaves_dlq_untouched(spark, tmp_path):
+    """An interruption aborts a replay the way it aborts a tick: the
+    error propagates and no attempt is counted against the rows."""
+    import pytest
+
+    engine, store = _engine(spark, tmp_path)
+    original = _failing(store, "write")
+    engine.process_raw_batch(_raw(spark, [{"event_type": "t", "x": 1}]))
+    _failing(store, "write", "Job 3 cancelled as part of shutdown")
+    with pytest.raises(RuntimeError, match="cancelled"):
+        engine.retry_dead_letters()
+    [row] = engine.read_dlq().collect()
+    assert row["attempts"] == 1 and row["error"] == "down"
+    store.write = original
+    engine.retry_dead_letters()
+    assert [r["x"] for r in store.read("t").collect()] == [1]
+
+
+def test_dlq_replays_of_identical_events_each_land(spark, tmp_path):
+    """The replay id hashes each dead letter's time with its payload:
+    the same event dead-lettered and replayed twice lands twice."""
+    engine, store = _engine(spark, tmp_path)
+    for _ in range(2):
+        original = _failing(store, "write")
+        engine.process_raw_batch(_raw(spark, [{"event_type": "t", "x": 1}]))
+        store.write = original
+        engine.retry_dead_letters()
+    assert [r["x"] for r in store.read("t").collect()] == [1, 1]

@@ -295,3 +295,37 @@ def test_small_files_guard_coalesces_appends(spark, tmp_path):
     ]
     assert len(files2) > 1, files2
     assert store2.read("event_small").count() == 2000
+
+
+def test_concurrent_writers_of_one_table_keep_every_row(spark, tmp_path):
+    """Writers of one table are serialized: appends racing on one data
+    directory would share the committer's _temporary staging dir, and
+    the commit log is read-modify-write. More writers than cores, a
+    short switch interval, and every row and batch id must survive."""
+    import sys
+    import threading
+
+    store = _store(spark, tmp_path)
+    n = 6
+    errors: list[Exception] = []
+
+    def write(i: int) -> None:
+        try:
+            store.write(_df(spark, [(i, "d")]), "t", batch_id=i)
+        except Exception as exc:  # noqa: BLE001 — asserted below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=write, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    assert sorted(r["k"] for r in store.read("t").collect()) == list(range(n))
+    assert sorted(store._load_meta("t")["committed_batches"]) == [str(i) for i in range(n)]

@@ -26,6 +26,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from redis_events_to_clickhouse_tables_spark.registry import load_all
 from redis_events_to_clickhouse_tables_spark.session import get_spark
 
+from bench import warm_up
+
 
 def main() -> int:
     names = [a for a in sys.argv[1:] if not a.startswith("--")]
@@ -48,25 +50,8 @@ def main() -> int:
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # same warmup as bench.py so first-touch JIT doesn't pollute numbers
-    spark.read.parquet(f"{sf}/lineitem.parquet").count()
-    if "q1_pricing_summary" in reg:
-        reg["q1_pricing_summary"].build(spark, sf).count()
-    par = spark.sparkContext.defaultParallelism
-    spark.range(0, par, 1, par).mapInPandas(lambda it: it, "id long").count()
-    warm_dir = os.path.join(os.path.dirname(sf.rstrip("/")), "sf0.001")
-    if os.path.isdir(warm_dir):
-        for warm_q in (
-            "dedup_minhash_lsh_candidates",
-            "sim_bruteforce_topk",
-            "grouped_user_gap_stats",
-        ):
-            if warm_q in reg:
-                try:
-                    reg[warm_q].build(spark, warm_dir).count()
-                except Exception:  # noqa: BLE001
-                    pass
-        spark.catalog.clearCache()
+    # bench's warm-up, so first-touch JIT doesn't pollute numbers
+    warm_up(spark, reg, sf)
 
     for name in names:
         spec = reg.get(name)
