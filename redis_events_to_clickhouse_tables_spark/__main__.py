@@ -129,10 +129,11 @@ def run_worker(
                     pass            # rethrows its error; handled below
             if compact_due and not shutdown.is_set() and not stalled.is_set():
                 # maintenance window: the query is STOPPED while
-                # compacting — a rewrite must never race a concurrent
+                # compacting, and each compact holds its table's writer
+                # lock — a rewrite must never race a concurrent
                 # micro-batch append into the same table. Each compact
-                # writes a new data version and flips the CURRENT
-                # pointer (concurrent READERS keep their snapshot);
+                # writes a new data version and commits the table's
+                # manifest once (concurrent READERS keep their snapshot);
                 # the rebuilt query resumes from the checkpoint, and
                 # the batch-id commit log absorbs any replay. The same
                 # window replays the DLQ (E2's unitary retry): events

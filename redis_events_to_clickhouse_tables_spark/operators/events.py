@@ -755,7 +755,11 @@ def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Kaplan-Meier survival: signup -> first purchase
 # --------------------------------------------------------------------
 
-_SQL_KAPLAN_MEIER = """
+# The duration table both survival estimators start from (KM here,
+# Nelson-Aalen in events2): one row per distinct signup -> first
+# purchase duration in days, with its subject count c and conversions
+# d; subjects that never convert are censored at the corpus max ts.
+_SQL_SIGNUP_PURCHASE_DT = """
     WITH mx AS (SELECT MAX(ts) AS max_ts FROM events),
     sign AS (
       SELECT user_id, MIN(ts) AS start FROM events
@@ -774,7 +778,47 @@ _SQL_KAPLAN_MEIER = """
     dt AS (
       SELECT dur, CAST(COUNT(*) AS BIGINT) AS c,
              CAST(SUM(ev) AS BIGINT) AS d
-      FROM durs GROUP BY dur),
+      FROM durs GROUP BY dur)"""
+
+
+def _signup_purchase_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``dt`` of ``_SQL_SIGNUP_PURCHASE_DT``: (dur, c, d) per distinct
+    duration, from two hash aggregates over events."""
+    e = table(spark, sf_dir, "events")
+    mx = e.agg(F.max("ts").alias("max_ts"))
+    sign = e.filter(F.col("event_type") == "signup").groupBy("user_id").agg(
+        F.min("ts").alias("start")
+    )
+    evs = e.select(
+        F.col("user_id").alias("u2"), F.col("event_type").alias("et2"),
+        F.col("ts").alias("ts2"),
+    )
+    subj = (
+        sign.join(evs, sign.user_id == F.col("u2"), "left")
+        .groupBy("user_id", "start")
+        .agg(
+            F.min(
+                F.when(
+                    (F.col("et2") == "purchase") & (F.col("ts2") >= F.col("start")),
+                    F.col("ts2"),
+                )
+            ).alias("pts")
+        )
+    )
+    durs = subj.crossJoin(F.broadcast(mx)).select(
+        F.datediff(
+            F.to_date(F.coalesce(F.col("pts"), F.col("max_ts"))),
+            F.to_date("start"),
+        ).alias("dur"),
+        F.when(F.col("pts").isNull(), 0).otherwise(1).alias("ev"),
+    )
+    return durs.groupBy("dur").agg(
+        F.count(F.lit(1)).cast("long").alias("c"),
+        F.sum("ev").cast("long").alias("d"),
+    )
+
+
+_SQL_KAPLAN_MEIER = _SQL_SIGNUP_PURCHASE_DT + """,
     risk AS (
       SELECT a.dur, a.d,
              CAST(SUM(b.c) AS BIGINT) AS n_at_risk
@@ -812,38 +856,7 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     S(t) = 2^log2_survival for human reading.
     """
     tune(spark)
-    e = table(spark, sf_dir, "events")
-    mx = e.agg(F.max("ts").alias("max_ts"))
-    sign = e.filter(F.col("event_type") == "signup").groupBy("user_id").agg(
-        F.min("ts").alias("start")
-    )
-    evs = e.select(
-        F.col("user_id").alias("u2"), F.col("event_type").alias("et2"),
-        F.col("ts").alias("ts2"),
-    )
-    subj = (
-        sign.join(evs, sign.user_id == F.col("u2"), "left")
-        .groupBy("user_id", "start")
-        .agg(
-            F.min(
-                F.when(
-                    (F.col("et2") == "purchase") & (F.col("ts2") >= F.col("start")),
-                    F.col("ts2"),
-                )
-            ).alias("pts")
-        )
-    )
-    durs = subj.crossJoin(F.broadcast(mx)).select(
-        F.datediff(
-            F.to_date(F.coalesce(F.col("pts"), F.col("max_ts"))),
-            F.to_date("start"),
-        ).alias("dur"),
-        F.when(F.col("pts").isNull(), 0).otherwise(1).alias("ev"),
-    )
-    dt = durs.groupBy("dur").agg(
-        F.count(F.lit(1)).cast("long").alias("c"),
-        F.sum("ev").cast("long").alias("d"),
-    )
+    dt = _signup_purchase_durations(spark, sf_dir)
     a = dt.select(F.col("dur").alias("da"), F.col("d").alias("d"))
     b = dt.select(F.col("dur").alias("db"), F.col("c").alias("cb"))
     risk = (

@@ -20,6 +20,7 @@ from ..functions.numeric import dec
 from ..registry import query
 from ..session import tune
 from ..sources.tables import table
+from .events import _SQL_SIGNUP_PURCHASE_DT, _signup_purchase_durations
 
 _CENTS = "CAST(CAST(value AS DECIMAL(10,2)) * 100 AS BIGINT)"
 _DAY = "date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))"
@@ -457,26 +458,8 @@ _NA_FP = 10**12
 
 @query(
     "events_nelson_aalen",
-    oracle=f"""
-    WITH mx AS (SELECT MAX(ts) AS max_ts FROM events),
-    sign AS (
-      SELECT user_id, MIN(ts) AS start FROM events
-      WHERE event_type = 'signup' GROUP BY user_id),
-    subj AS (
-      SELECT s.user_id, s.start,
-             MIN(CASE WHEN e.event_type = 'purchase' AND e.ts >= s.start
-                      THEN e.ts END) AS pts
-      FROM sign s LEFT JOIN events e ON e.user_id = s.user_id
-      GROUP BY s.user_id, s.start),
-    durs AS (
-      SELECT date_diff('day', CAST(start AS DATE),
-                       CAST(COALESCE(pts, max_ts) AS DATE)) AS dur,
-             CASE WHEN pts IS NULL THEN 0 ELSE 1 END AS ev
-      FROM subj, mx),
-    dt AS (
-      SELECT dur, CAST(COUNT(*) AS BIGINT) AS c,
-             CAST(SUM(ev) AS BIGINT) AS d
-      FROM durs GROUP BY dur),
+    oracle=_SQL_SIGNUP_PURCHASE_DT
+    + f""",
     risk AS (
       SELECT a.dur, a.d, CAST(SUM(b.c) AS BIGINT) AS n_at_risk
       FROM dt a JOIN dt b ON b.dur >= a.dur
@@ -506,42 +489,7 @@ def events_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (observation-window days), exactly the KM scale shape.
     """
     tune(spark)
-    e = table(spark, sf_dir, "events")
-    mx = e.agg(F.max("ts").alias("max_ts"))
-    sign = (
-        e.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("start"))
-    )
-    evs = e.select(
-        F.col("user_id").alias("u2"),
-        F.col("event_type").alias("et2"),
-        F.col("ts").alias("ts2"),
-    )
-    subj = (
-        sign.join(evs, sign.user_id == F.col("u2"), "left")
-        .groupBy("user_id", "start")
-        .agg(
-            F.min(
-                F.when(
-                    (F.col("et2") == "purchase")
-                    & (F.col("ts2") >= F.col("start")),
-                    F.col("ts2"),
-                )
-            ).alias("pts")
-        )
-    )
-    durs = subj.crossJoin(F.broadcast(mx)).select(
-        F.datediff(
-            F.to_date(F.coalesce(F.col("pts"), F.col("max_ts"))),
-            F.to_date("start"),
-        ).alias("dur"),
-        F.when(F.col("pts").isNull(), 0).otherwise(1).alias("ev"),
-    )
-    dt = durs.groupBy("dur").agg(
-        F.count(F.lit(1)).cast("long").alias("c"),
-        F.sum("ev").cast("long").alias("d"),
-    )
+    dt = _signup_purchase_durations(spark, sf_dir)
     b = dt.select(F.col("dur").alias("dur2"), F.col("c").alias("c2"))
     risk = (
         dt.filter(F.col("d") > 0)

@@ -525,10 +525,11 @@ class RedisBullSource:
 
         In ``bull`` wire format the failed list holds job IDS; the
         envelope fields come from the job hash (``data`` is a JSON
-        string there, per classic Bull), the re-enqueued job is a NEW
-        hash under the next ``INCR``'d id pushed to the wait list
-        (what ``eventsQueue.add`` does, main.ts:441-454), and the
-        legacy job id + hash are removed (``job.remove()``,
+        string there, per classic Bull), the re-enqueue is ``add_job``
+        (``eventsQueue.add``, main.ts:441-454): a NEW hash under the
+        next ``INCR``'d id with an ms timestamp, so it can never
+        re-trigger the legacy signature, pushed to the wait list; and
+        the legacy job id + hash are removed (``job.remove()``,
         main.ts:458).
         """
         if now_iso is None:
@@ -550,14 +551,10 @@ class RedisBullSource:
             if not data.get("__received_at"):
                 # first time through: flag its arrival date (main.ts:433-436)
                 data["__received_at"] = now_iso
-            data = {**data, "__is_from_old_queue": True}
+            self.add_job({**data, "__is_from_old_queue": True})
+            self.client.lrem(self.failed_key, 1, text)
             if self.wire_format == "bull":
-                self._add_bull_job(data, now_iso=now_iso)
-                self.client.lrem(self.failed_key, 1, text)
                 self.client.delete(self._job_key(text))
-            else:
-                self.client.rpush(self.wait_key, json.dumps(data))
-                self.client.lrem(self.failed_key, 1, text)
             requeued += 1
         return requeued
 
@@ -575,29 +572,6 @@ class RedisBullSource:
         except ValueError:
             return None
         return envelope if isinstance(envelope, dict) else None
-
-    def _add_bull_job(self, data: dict, now_iso: str) -> str:
-        """``eventsQueue.add(data)`` in classic-Bull layout: draw the
-        next id from the INCR counter, write the job hash (name
-        ``__default__`` — Bull's name for nameless adds — and an
-        ms-granularity timestamp, so the new job can never re-trigger
-        the <=10-digit legacy signature), push the id to wait."""
-        from datetime import datetime
-
-        job_id = str(self.client.incr(self.id_counter_key))
-        ts_ms = int(
-            datetime.fromisoformat(now_iso).timestamp() * 1000
-        )
-        self.client.hset(
-            self._job_key(job_id),
-            mapping={
-                "name": "__default__",
-                "timestamp": str(ts_ms),
-                "data": json.dumps(data),
-            },
-        )
-        self.client.rpush(self.wait_key, job_id)
-        return job_id
 
     def _write_bull_job(
         self,

@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import json
 import re
+import shutil
 import threading
 import time
 import uuid
@@ -308,7 +309,14 @@ class IngestEngine:
         # dead-lettering into data_dir between our read and the swap
         # below would be deleted with the old directory otherwise
         with self._dlq_lock:
-            if not data_dir.exists() or not any(data_dir.glob("*.parquet")):
+            if not data_dir.exists():
+                return report
+            # survivors of a replay that died before its swap: the live
+            # dir still holds all their rows. (A .old-* dir stays: a
+            # crash inside swap_dirs may leave the only copy there.)
+            for stale in data_dir.parent.glob(".retry-*"):
+                shutil.rmtree(stale, ignore_errors=True)
+            if not any(data_dir.glob("*.parquet")):
                 return report
             dlq = self.spark.read.parquet(str(data_dir)).persist()
             try:

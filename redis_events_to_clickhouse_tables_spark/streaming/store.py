@@ -4,16 +4,24 @@ The reference creates/evolves one ClickHouse MergeTree table per event
 type: CREATE on first batch, ALTER ADD COLUMN for new columns, ALTER
 COLUMN TYPE String for the sanctioned widening
 (clickhouse-batch-client.class.ts:492-591). This store provides the
-same contract over parquet directories + a sidecar schema registry:
+same contract over parquet directories + one manifest per table:
 
 - ``write`` reconciles the incoming batch schema with the live schema
   (plans/evolution.py), NULL-fills missing columns (K1's NULL
   rendering), casts to the merged types, and appends.
 - A widening that changes an *existing* column's type rewrites the
-  stored data with a cast — the ALTER COLUMN equivalent. Rare by
-  construction (only on a genuine type conflict), and at production
-  scale this is exactly where a lakehouse format's metadata-only type
-  widening (e.g. Delta) slots in behind the same interface.
+  stored data with a cast — the ALTER COLUMN equivalent — together
+  with the batch, as one new data version. Rare by construction (only
+  on a genuine type conflict), and at production scale this is exactly
+  where a lakehouse format's metadata-only type widening (e.g. Delta)
+  slots in behind the same interface.
+
+A table's whole state lives in ``<table>/_table.json``: its schema,
+partition and sort layout, the active data version and the batch-id
+commit log. Like the live ClickHouse table, it is changed in one step:
+every store write lands its data first, then commits the manifest once
+(tmp file + ``os.replace``), so a reader or a crash sees either the old
+table or the new one, never a schema that does not match the rows.
 
 Appends are directories of parquet files — the micro-batch pattern:
 each batch writes new files, never rewrites old ones (K2's multi-row
@@ -22,7 +30,7 @@ INSERT amortization).
 Sink-protocol details of the reference with no Spark-side counterpart
 (out of correctness scope, per SURVEY §2.6-2.7): D6's textual DDL
 rendering (`Nullable(T)` wrapping, default-literal escaping) is
-subsumed by ``StructField(nullable=...)`` in the sidecar schema; K1's
+subsumed by ``StructField(nullable=...)`` in the manifest's schema; K1's
 SQL-literal escaping by native parquet value binding; K3's ClickHouse
 ``async_insert`` client setting by the sink connector's own batching.
 """
@@ -42,9 +50,7 @@ from pyspark.sql import types as T
 
 from ..plans.evolution import merge_schemas
 
-_SCHEMA_FILE = "_schema.json"
-_META_FILE = "_meta.json"
-_CURRENT_FILE = "CURRENT"
+_MANIFEST = "_table.json"
 _MAX_TRACKED_BATCHES = 10_000
 
 
@@ -58,20 +64,22 @@ class TableStore:
         self.spark = spark
         self.root = Path(root)
         # Grace window for in-flight readers: how many SUPERSEDED data
-        # versions survive a flip. 1 (default) keeps exactly the version
-        # being replaced; raise it when readers may lag more than one
-        # maintenance interval behind (Delta/Iceberg vacuum-retention
-        # analog).
+        # versions survive a commit. 1 (default) keeps exactly the
+        # version being replaced; raise it when readers may lag more
+        # than one maintenance interval behind (Delta/Iceberg
+        # vacuum-retention analog).
         self.retain_versions = max(1, int(retain_versions))
         self.root.mkdir(parents=True, exist_ok=True)
         self._writers: dict[str, threading.RLock] = {}
         self._writers_guard = threading.Lock()
 
     def _writer(self, table: str) -> threading.RLock:
-        """One writer per table: ``write`` and ``upsert`` hold this for
-        their whole run. Appends racing on one data directory share the
-        committer's ``_temporary`` dir, which the first commit deletes,
-        and the commit log in ``_meta.json`` is read-modify-write."""
+        """One writer per table: ``write``, ``upsert``, ``compact`` and
+        ``delete_where`` hold this for their whole run. Appends racing
+        on one data directory share the committer's ``_temporary`` dir,
+        which the first commit deletes; a rewrite racing an append
+        would publish a version without the appended rows; and the
+        manifest is read-modify-write."""
         with self._writers_guard:
             return self._writers.setdefault(table, threading.RLock())
 
@@ -93,85 +101,70 @@ class TableStore:
         except OSError:
             return False
 
+    def _manifest(self, table: str) -> dict | None:
+        """The committed manifest, or None before the table exists."""
+        try:
+            return json.loads((self.table_path(table) / _MANIFEST).read_text())
+        except FileNotFoundError:
+            return None
+
+    def _commit(self, table: str, manifest: dict) -> None:
+        """The one metadata write: replace the manifest atomically."""
+        p = self.table_path(table)
+        # tmp files of a commit that died before os.replace are inert —
+        # readers only follow the manifest — but would accumulate
+        for stale in p.glob(".table-*"):
+            stale.unlink(missing_ok=True)
+        tmp = p / f".table-{uuid.uuid4().hex[:8]}"
+        tmp.write_text(json.dumps(manifest))
+        os.replace(tmp, p / _MANIFEST)
+
     def table_exists(self, table: str) -> bool:
         """S3: existence probe."""
-        return (self.table_path(table) / _SCHEMA_FILE).exists()
+        return (self.table_path(table) / _MANIFEST).exists()
 
     def table_schema(self, table: str) -> T.StructType | None:
         """S4: live-schema scan."""
-        p = self.table_path(table) / _SCHEMA_FILE
-        if not p.exists():
-            return None
-        return T.StructType.fromJson(json.loads(p.read_text()))
+        m = self._manifest(table)
+        return None if m is None else T.StructType.fromJson(m["schema"])
 
     def tables(self) -> list[str]:
         return sorted(
             d.name
             for d in self.root.iterdir()
-            if d.is_dir() and (d / _SCHEMA_FILE).exists()
+            if d.is_dir() and (d / _MANIFEST).exists()
         )
 
     # -- versioned data layout -------------------------------------------
     # Rewrites (compact, widening, delete, upsert) all go through
-    # ``_publish``: they produce a NEW data directory and flip
-    # an atomically-replaced CURRENT pointer, keeping the immediately
-    # previous version on disk as a grace window. This is the reader
-    # snapshot-isolation contract of a table format (Delta/Iceberg keep
-    # old files until vacuum for the same reason): a reader that planned
-    # its scan against version N keeps valid file paths while the flip
-    # to N+1 happens, for at least one full maintenance interval. The
-    # earlier rename-aside swap invalidated in-flight readers' paths at
-    # the instant of the swap (observed: FileNotFoundException in a
-    # monitor query racing compact()).
+    # ``_publish``: they produce a NEW data directory and commit the
+    # manifest pointing at it, keeping the immediately previous version
+    # on disk as a grace window. This is the reader snapshot-isolation
+    # contract of a table format (Delta/Iceberg keep old files until
+    # vacuum for the same reason): a reader that planned its scan
+    # against version N keeps valid file paths while the commit of N+1
+    # happens, for at least one full maintenance interval. The earlier
+    # rename-aside swap invalidated in-flight readers' paths at the
+    # instant of the swap (observed: FileNotFoundException in a monitor
+    # query racing compact()).
 
     def data_dir(self, table: str) -> Path:
         """The ACTIVE data directory (resolve before every scan)."""
-        p = self.table_path(table)
-        cur = p / _CURRENT_FILE
-        name = cur.read_text().strip() if cur.exists() else "data"
-        return p / name
-
-    def _next_version_dir(self, table: str) -> Path:
-        cur = self.data_dir(table).name
-        n = 0 if cur == "data" else int(cur.rsplit("-v", 1)[1])
-        return self.table_path(table) / f"data-v{n + 1:06d}"
-
-    def _flip_version(self, table: str, new_dir: Path) -> None:
-        """Point readers at ``new_dir`` atomically; retain the version
-        being replaced for in-flight readers; GC anything older."""
-        p = self.table_path(table)
-        prev = self.data_dir(table).name
-        # Sweep orphaned pointer temp files from a flip that died
-        # between write_text and os.replace (they are inert — readers
-        # only follow _CURRENT_FILE — but would otherwise accumulate).
-        for stale in p.glob(".current-*"):
-            stale.unlink(missing_ok=True)
-        tmp = p / f".current-{uuid.uuid4().hex[:8]}"
-        tmp.write_text(new_dir.name)
-        os.replace(tmp, p / _CURRENT_FILE)
-        # Version names sort lexicographically (data < data-v000001 <
-        # …), so "newest retain_versions superseded dirs" is a sort.
-        superseded = sorted(
-            (
-                d.name
-                for d in p.iterdir()
-                if d.is_dir()
-                and (d.name == "data" or d.name.startswith("data-v"))
-                and d.name != new_dir.name
-            ),
-            reverse=True,
-        )
-        keep = {new_dir.name, prev, *superseded[: self.retain_versions]}
-        for name in superseded:
-            if name not in keep:
-                shutil.rmtree(p / name, ignore_errors=True)
+        m = self._manifest(table)
+        return self.table_path(table) / (m["current"] if m else "data")
 
     def _publish(
-        self, table: str, df: DataFrame, touched: DataFrame | None = None
+        self,
+        table: str,
+        manifest: dict,
+        df: DataFrame,
+        touched: DataFrame | None = None,
     ) -> Path:
         """Write ``df`` as the table's next data version in its recorded
-        layout (``partitionBy`` + ``sortWithinPartitions``) and flip
-        CURRENT to it; returns the new version's directory.
+        layout (``partitionBy`` + ``sortWithinPartitions``), commit
+        ``manifest`` pointing at it, then GC versions older than the
+        ``retain_versions`` grace window; returns the new version's
+        directory. Call with the table's writer lock held.
 
         ``touched`` (rows carrying the partition column) prunes the
         rewrite on a single-level partitioned table: only partitions
@@ -180,10 +173,12 @@ class TableStore:
         never re-read, never re-encoded (the analog of a manifest-based
         format rewriting only affected data files). Multi-level or
         unpartitioned tables rewrite fully."""
-        meta = self._load_meta(table)
-        part_cols = [c for c in meta["partition_by"] if c in df.columns]
-        sort_cols = [c for c in meta["sort_by"] if c in df.columns]
-        new_dir = self._next_version_dir(table)
+        p = self.table_path(table)
+        prev = manifest["current"]
+        part_cols = [c for c in manifest["partition_by"] if c in df.columns]
+        sort_cols = [c for c in manifest["sort_by"] if c in df.columns]
+        n = 0 if prev == "data" else int(prev.rsplit("-v", 1)[1])
+        new_dir = p / f"data-v{n + 1:06d}"
         untouched: list[Path] = []
         if touched is not None and len(part_cols) == 1:
             pc = part_cols[0]
@@ -198,7 +193,7 @@ class TableStore:
             )
             untouched = [
                 d
-                for d in sorted(self.data_dir(table).iterdir())
+                for d in sorted((p / prev).iterdir())
                 if d.is_dir() and "=" in d.name and d.name not in affected_dirs
             ]
         if sort_cols:
@@ -212,30 +207,35 @@ class TableStore:
         writer.parquet(str(new_dir))
         for d in untouched:
             shutil.copytree(d, new_dir / d.name, dirs_exist_ok=True)
-        self._flip_version(table, new_dir)
+        self._commit(table, {**manifest, "current": new_dir.name})
+        # Version names sort lexicographically (data < data-v000001 <
+        # …), so "newest retain_versions superseded dirs" is a sort.
+        superseded = sorted(
+            (
+                d.name
+                for d in p.iterdir()
+                if d.is_dir()
+                and (d.name == "data" or d.name.startswith("data-v"))
+                and d.name != new_dir.name
+            ),
+            reverse=True,
+        )
+        keep = {prev, *superseded[: self.retain_versions]}
+        for name in superseded:
+            if name not in keep:
+                shutil.rmtree(p / name, ignore_errors=True)
         return new_dir
 
     # -- read -------------------------------------------------------------
     def read(self, table: str) -> DataFrame:
-        schema = self.table_schema(table)
-        if schema is None:
+        m = self._manifest(table)
+        if m is None:
             raise KeyError(f"no such table: {table}")
-        data = self.data_dir(table)
+        schema = T.StructType.fromJson(m["schema"])
+        data = self.table_path(table) / m["current"]
         if not data.exists() or not any(data.rglob("*.parquet")):
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(str(data))
-
-    # -- table meta (layout + commit log) --------------------------------
-    def _load_meta(self, table: str) -> dict:
-        p = self.table_path(table) / _META_FILE
-        if not p.exists():
-            return {"partition_by": [], "sort_by": [], "committed_batches": []}
-        return json.loads(p.read_text())
-
-    def _save_meta(self, table: str, meta: dict) -> None:
-        p = self.table_path(table)
-        p.mkdir(parents=True, exist_ok=True)
-        (p / _META_FILE).write_text(json.dumps(meta))
 
     # -- write (D2/D3/D4 + K2) -------------------------------------------
     def write(
@@ -265,29 +265,19 @@ class TableStore:
           for min/max skipping within each parquet file.
         """
         with self._writer(table):
-            meta = self._load_meta(table)
-            if batch_id is not None and str(batch_id) in meta["committed_batches"]:
-                return self.table_schema(table)
-            existing = self.table_schema(table)
-            if existing is None:  # table creation fixes the layout
-                meta["partition_by"] = list(partition_by or ())
-                meta["sort_by"] = list(sort_by or ())
+            m = self._manifest(table)
+            existing = None if m is None else T.StructType.fromJson(m["schema"])
+            if m is None:  # table creation fixes the layout
+                m = {
+                    "partition_by": list(partition_by or ()),
+                    "sort_by": list(sort_by or ()),
+                    "current": "data",
+                    "committed_batches": [],
+                }
+            elif batch_id is not None and str(batch_id) in m["committed_batches"]:
+                return existing
             target = merge_schemas(existing, df.schema, nullable_new=nullable_new)
-
-            if existing is not None:
-                changed = [
-                    f.name
-                    for f in target.fields
-                    if any(e.name == f.name and e.dataType != f.dataType for e in existing.fields)
-                ]
-                if changed:
-                    # D4: ALTER COLUMN TYPE equivalent — rewrite stored data
-                    # under the widened schema; persist the widened schema
-                    # immediately so a failure later in this write (e.g. the
-                    # append) can't leave widened data files under a stale
-                    # sidecar that read() would then mis-type (ADVICE r1)
-                    self._rewrite(table, existing, target)
-                    self._save_schema(table, target)
+            m = _logged({**m, "schema": target.jsonValue()}, batch_id)
 
             aligned = _align(df, target)
             if coalesce_to is not None and coalesce_to >= 1:
@@ -295,22 +285,29 @@ class TableStore:
                 # instead of one per shuffle partition (narrow dependency —
                 # no shuffle; a no-op when already narrower)
                 aligned = aligned.coalesce(coalesce_to)
-            sort_cols = [c for c in meta["sort_by"] if c in set(target.fieldNames())]
-            part_cols = [c for c in meta["partition_by"] if c in set(target.fieldNames())]
+            if existing is not None and any(
+                e.name == f.name and e.dataType != f.dataType
+                for f in target.fields
+                for e in existing.fields
+            ):
+                # D4: ALTER COLUMN TYPE equivalent — the stored rows cast
+                # to the widened schema and the batch land as ONE new
+                # version, committed with the widened schema
+                stored = _align(self.read(table), target)
+                self._publish(table, m, stored.unionByName(aligned))
+                return target
+            sort_cols = [c for c in m["sort_by"] if c in set(target.fieldNames())]
+            part_cols = [c for c in m["partition_by"] if c in set(target.fieldNames())]
             if sort_cols:
                 # partition columns lead: see _publish
                 aligned = aligned.sortWithinPartitions(*part_cols, *sort_cols)
-            data_dir = self.data_dir(table)
+            data_dir = self.table_path(table) / m["current"]
             data_dir.mkdir(parents=True, exist_ok=True)
             writer = aligned.write.mode("append")
             if part_cols:
                 writer = writer.partitionBy(*part_cols)
             writer.parquet(str(data_dir))
-            self._save_schema(table, target)
-            if batch_id is not None:
-                meta["committed_batches"].append(str(batch_id))
-                meta["committed_batches"] = meta["committed_batches"][-_MAX_TRACKED_BATCHES:]
-            self._save_meta(table, meta)
+            self._commit(table, m)
             return target
 
     # -- maintenance ------------------------------------------------------
@@ -321,24 +318,27 @@ class TableStore:
         thousands of KB-sized parquet files per table per day, and scan
         planning cost grows with file count. Rewrite the table into
         ~``target_file_bytes`` files (per partition directory when
-        partitioned) as a NEW data version, then atomically flip the
-        CURRENT pointer (concurrent readers keep their version's files
+        partitioned) as a NEW data version, then commit the manifest
+        pointing at it (concurrent readers keep their version's files
         — see the versioned-layout note above). Returns
         (files_before, files_after).
         """
-        data_dir = self.data_dir(table)
-        files = list(data_dir.rglob("*.parquet")) if data_dir.exists() else []
-        if not files:
-            return (0, 0)
-        n_before = len(files)
-        total = sum(f.stat().st_size for f in files)
-        n_target = max(1, -(-total // target_file_bytes))  # ceil
-        # co-locate each partition's rows so partitionBy emits one file
-        # per (task, partition-value) — repartition on the keys
-        part_cols = self._load_meta(table)["partition_by"]
-        df = self.read(table).repartition(int(n_target), *part_cols)
-        new_dir = self._publish(table, df)
-        return (n_before, len(list(new_dir.rglob("*.parquet"))))
+        with self._writer(table):
+            m = self._manifest(table)
+            if m is None:
+                return (0, 0)
+            data_dir = self.table_path(table) / m["current"]
+            files = list(data_dir.rglob("*.parquet")) if data_dir.exists() else []
+            if not files:
+                return (0, 0)
+            n_before = len(files)
+            total = sum(f.stat().st_size for f in files)
+            n_target = max(1, -(-total // target_file_bytes))  # ceil
+            # co-locate each partition's rows so partitionBy emits one file
+            # per (task, partition-value) — repartition on the keys
+            df = self.read(table).repartition(int(n_target), *m["partition_by"])
+            new_dir = self._publish(table, m, df)
+            return (n_before, len(list(new_dir.rglob("*.parquet"))))
 
     def _partition_dir_names(self, values_df, pc: str) -> set[str]:
         """Exact Spark-rendered partition directory names for the
@@ -368,8 +368,8 @@ class TableStore:
     def delete_where(self, table: str, condition) -> int:
         """Targeted row deletion (the GDPR / right-to-be-forgotten
         path): rewrite the table WITHOUT rows matching ``condition``
-        (a Column or SQL string) as a new data version, atomically
-        flip the CURRENT pointer, and return the number of rows
+        (a Column or SQL string) as a new data version, commit the
+        manifest pointing at it, and return the number of rows
         removed. A no-op (0) when nothing matches — no version churn.
         Rows where the condition is NULL (three-valued logic) do NOT
         match and are kept.
@@ -381,19 +381,19 @@ class TableStore:
         the deletion key's natural ancestor (date, tenant).
         """
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        df = self.read(table)
-        if not df.columns:
-            return 0
-        # NULL-safe: a NULL condition matches nothing and keeps the row
-        matches = F.coalesce(cond, F.lit(False))
-        matched = df.filter(matches).persist()
-        n_match = matched.count()
-        if n_match == 0:
+        with self._writer(table):
+            m = self._manifest(table)
+            df = self.read(table)
+            if not df.columns:
+                return 0
+            # NULL-safe: a NULL condition matches nothing and keeps the row
+            matches = F.coalesce(cond, F.lit(False))
+            matched = df.filter(matches).persist()
+            n_match = matched.count()
+            if n_match:
+                self._publish(table, m, df.filter(~matches), touched=matched)
             matched.unpersist()
-            return 0
-        self._publish(table, df.filter(~matches), touched=matched)
-        matched.unpersist()
-        return int(n_match)
+            return int(n_match)
 
     def upsert(
         self,
@@ -409,10 +409,10 @@ class TableStore:
         Returns the number of rows replaced. The ReplacingMergeTree
         analog for this store — the reference's target engine models
         upsert exactly this way (insert + replace-on-merge by ORDER BY
-        key), this does it in one versioned rewrite with an atomic
-        pointer flip. Idempotent per ``batch_id`` via the same commit
+        key), this does it in one versioned rewrite that commits the
+        manifest once. Idempotent per ``batch_id`` via the same commit
         log as ``write`` (a replayed merge is a no-op; the creating
-        merge records the same tag).
+        merge is a ``write`` under the same tag).
 
         Partition-pruned like ``delete_where``: on a single-level
         partitioned table only partitions touched by the merge are
@@ -425,44 +425,34 @@ class TableStore:
         greatest full row (a total order, so replays and retries can
         never flap).
         """
+        tag = None if batch_id is None else f"merge-{batch_id}"
+
+        def dedupe(rows: DataFrame) -> DataFrame:
+            # keep the greatest row per key (total order over all
+            # columns -> deterministic under replay)
+            others = [c for c in rows.columns if c not in keys]
+            return (
+                rows.groupBy(*keys)
+                .agg(F.max(F.struct(*others)).alias("__row"))
+                .select(*keys, "__row.*")
+            )
+
         with self._writer(table):
-            tag = f"merge-{batch_id}"
-            if self.table_exists(table):
-                meta = self._load_meta(table)
-                if batch_id is not None and tag in meta["committed_batches"]:
-                    return 0
-            else:
-                # creating merge: same within-batch key dedupe, and the
-                # merge tag goes into the fresh commit log so a replay of
-                # THIS batch is a no-op (not a second full merge)
-                others0 = [c for c in df.columns if c not in keys]
-                first = (
-                    df.groupBy(*keys)
-                    .agg(F.max(F.struct(*others0)).alias("__row"))
-                    .select(*keys, "__row.*")
-                )
+            m = self._manifest(table)
+            if m is None:
                 self.write(
-                    first,
+                    dedupe(df),
                     table,
+                    batch_id=tag,
                     partition_by=partition_by,
                     sort_by=sort_by,
                 )
-                if batch_id is not None:
-                    meta = self._load_meta(table)
-                    meta["committed_batches"].append(tag)
-                    self._save_meta(table, meta)
+                return 0
+            if tag is not None and tag in m["committed_batches"]:
                 return 0
             existing = self.read(table)
-            incoming = _align(df, existing.schema)
-            # dedupe incoming on the key: keep the greatest row (total
-            # order over all columns -> deterministic under replay)
-            others = [c for c in incoming.columns if c not in keys]
-            incoming = (
-                incoming.groupBy(*keys)
-                .agg(F.max(F.struct(*others)).alias("__row"))
-                .select(*keys, "__row.*")
-                .persist()  # consumed by 4 downstream plans (review r5)
-            )
+            # consumed by 4 downstream plans (review r5)
+            incoming = dedupe(_align(df, existing.schema)).persist()
             matched = existing.join(
                 incoming.select(*keys), list(keys), "left_semi"
             ).persist()
@@ -475,30 +465,21 @@ class TableStore:
             # so the stale copy dies with the old partition)
             self._publish(
                 table,
+                _logged(m, tag),
                 survivors.unionByName(incoming),
                 touched=incoming.unionByName(matched),
             )
             incoming.unpersist()
             matched.unpersist()
-            if batch_id is not None:
-                meta["committed_batches"].append(tag)
-                meta["committed_batches"] = meta["committed_batches"][
-                    -_MAX_TRACKED_BATCHES:
-                ]
-                self._save_meta(table, meta)
             return int(n_replaced)
 
-    def _save_schema(self, table: str, schema: T.StructType) -> None:
-        p = self.table_path(table)
-        p.mkdir(parents=True, exist_ok=True)
-        (p / _SCHEMA_FILE).write_text(json.dumps(schema.jsonValue()))
 
-    def _rewrite(self, table: str, old: T.StructType, new: T.StructType) -> None:
-        data_dir = self.data_dir(table)
-        if not data_dir.exists() or not any(data_dir.rglob("*.parquet")):
-            return
-        old_df = self.spark.read.schema(old).parquet(str(data_dir))
-        self._publish(table, _align(old_df, new))
+def _logged(manifest: dict, batch_id) -> dict:
+    """``manifest`` with ``batch_id`` appended to its bounded commit log."""
+    if batch_id is None:
+        return manifest
+    log = [*manifest["committed_batches"], str(batch_id)]
+    return {**manifest, "committed_batches": log[-_MAX_TRACKED_BATCHES:]}
 
 
 def swap_dirs(tmp: Path, live: Path) -> None:

@@ -123,5 +123,5 @@ def test_store_rejects_bad_table_names(spark, tmp_path):
 def test_store_schema_roundtrip(spark, tmp_path):
     store = TableStore(spark, tmp_path / "warehouse")
     _write(store, spark, "t", [(1,)], "a long")
-    raw = json.loads((tmp_path / "warehouse" / "t" / "_schema.json").read_text())
-    assert T.StructType.fromJson(raw) == store.table_schema("t")
+    raw = json.loads((tmp_path / "warehouse" / "t" / "_table.json").read_text())
+    assert T.StructType.fromJson(raw["schema"]) == store.table_schema("t")

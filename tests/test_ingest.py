@@ -600,7 +600,7 @@ def test_dlq_replay_creates_table_in_configured_layout(spark, tmp_path):
     assert not store.table_exists("t")
     store.write = original
     engine.retry_dead_letters()
-    meta = store._load_meta("t")
+    meta = store._manifest("t")
     assert meta["partition_by"] == ["day"]
     assert meta["sort_by"] == ["sent_at"]
     assert (store.data_dir("t") / "day=d1").is_dir()
@@ -635,6 +635,34 @@ def test_dlq_replay_crashed_before_swap_inserts_once(spark, tmp_path, monkeypatc
     restarted.retry_dead_letters()
     assert sorted(r["x"] for r in store.read("t").collect()) == [0, 1]
     assert restarted.read_dlq().count() == 0
+
+
+def test_dlq_replay_sweeps_retry_dir_of_crashed_replay(spark, tmp_path, monkeypatch):
+    """A replay that dies before swapping the DLQ leaves its survivors
+    in a ``.retry-*`` dir; the next replay deletes it, since the live
+    ``data`` dir holds every row of it."""
+    import pytest
+
+    from redis_events_to_clickhouse_tables_spark.streaming import ingest
+
+    engine, store = _engine(spark, tmp_path)
+    original = _failing(store, "write")
+    engine.process_raw_batch(_raw(spark, [{"event_type": "t", "x": 1}]))
+    store.write = original
+
+    def crash(tmp, live):
+        raise RuntimeError("process died before the DLQ swap")
+
+    monkeypatch.setattr(ingest, "swap_dirs", crash)
+    with pytest.raises(RuntimeError, match="DLQ swap"):
+        engine.retry_dead_letters()
+    monkeypatch.undo()
+    dlq_root = store.root / ingest.DLQ_TABLE
+    assert any(d.name.startswith(".retry-") for d in dlq_root.iterdir())
+
+    IngestEngine(spark, store, IngestConfig()).retry_dead_letters()
+    assert [d.name for d in dlq_root.iterdir()] == ["data"]
+    assert [r["x"] for r in store.read("t").collect()] == [1]
 
 
 def test_dlq_replay_drops_failing_non_critical_type(spark, tmp_path):

@@ -140,9 +140,9 @@ def test_compaction_leaves_no_old_dirs(spark, tmp_path):
 
 
 def test_widened_schema_persists_even_if_append_fails(spark, tmp_path, monkeypatch):
-    # D4 ordering: the sidecar schema must be saved right after the
-    # widening rewrite — an append failure later must not leave widened
-    # data files under a stale (narrower) sidecar
+    # D4: a widening write that fails before its manifest commit leaves
+    # the table readable in its pre-write state (no widened data files
+    # under a narrower schema), and a retry of the batch lands
     store = _store(spark, tmp_path)
     store.write(_df(spark, [(1, "d1")], "a long, day string"), "t")
     import redis_events_to_clickhouse_tables_spark.streaming.store as store_mod
@@ -152,20 +152,83 @@ def test_widened_schema_persists_even_if_append_fails(spark, tmp_path, monkeypat
 
     def align_then_fail(df, target):
         calls["n"] += 1
-        if calls["n"] == 2:  # 1st call: the rewrite; 2nd: the append
+        if calls["n"] == 2:  # 1st call: the batch; 2nd: the stored rows
             raise RuntimeError("append torpedoed")
         return original_align(df, target)
 
     monkeypatch.setattr(store_mod, "_align", align_then_fail)
     import pytest
 
+    batch = _df(spark, [("two", "d2")], "a string, day string")
     with pytest.raises(RuntimeError, match="append torpedoed"):
-        store.write(_df(spark, [("two", "d2")], "a string, day string"), "t")
+        store.write(batch, "t")
     monkeypatch.setattr(store_mod, "_align", original_align)
-    # sidecar must already declare the widened type, matching the
-    # rewritten data files, so the table still reads cleanly
+    assert store.table_schema("t")["a"].dataType.simpleString() == "bigint"
+    assert {r["a"] for r in store.read("t").collect()} == {1}
+    store.write(batch, "t")
     assert store.table_schema("t")["a"].dataType.simpleString() == "string"
-    assert {r["a"] for r in store.read("t").collect()} == {"1"}
+    assert {r["a"] for r in store.read("t").collect()} == {"1", "two"}
+
+
+def test_widening_write_killed_at_any_metadata_write_stays_readable(
+    spark, tmp_path, monkeypatch
+):
+    """Kill a widening write at its N-th metadata write in the table
+    dir (each ``Path.write_text`` and ``os.replace``), for every N: a
+    fresh store must read the table in its pre- or post-write state,
+    and replaying the batch must land every row once under the widened
+    schema."""
+    import os
+    from pathlib import Path
+
+    real_write_text, real_replace = Path.write_text, os.replace
+    pre, post = ("bigint", ["1", "2"]), ("string", ["1", "2", "three"])
+
+    def state(store):
+        df = store.read("t")
+        rows = sorted(str(r["a"]) for r in df.collect())
+        return df.schema["a"].dataType.simpleString(), rows
+
+    crashes = 0
+    for n in range(1, 10):
+        root = tmp_path / f"w{n}"
+        store = TableStore(spark, root)
+        store.write(_df(spark, [(1, "d1"), (2, "d2")], "a long, day string"), "t", batch_id=0)
+        table_dir = str(store.table_path("t")) + os.sep
+        seen = {"n": 0}
+
+        def kill_at_n(path):
+            if str(path).startswith(table_dir):
+                seen["n"] += 1
+                if seen["n"] == n:
+                    raise OSError(f"killed at metadata write {n}")
+
+        def write_text(self, *args, **kwargs):
+            kill_at_n(self)
+            return real_write_text(self, *args, **kwargs)
+
+        def replace(src, dst, *args, **kwargs):
+            kill_at_n(dst)
+            return real_replace(src, dst, *args, **kwargs)
+
+        monkeypatch.setattr(Path, "write_text", write_text)
+        monkeypatch.setattr(os, "replace", replace)
+        batch = _df(spark, [("three", "d3")], "a string, day string")
+        try:
+            store.write(batch, "t", batch_id=1)
+            killed = False
+        except OSError:
+            killed = True
+        finally:
+            monkeypatch.undo()
+        fresh = TableStore(spark, root)
+        assert state(fresh) in (pre, post), n
+        fresh.write(batch, "t", batch_id=1)  # the batch's replay
+        assert state(fresh) == post, n
+        if not killed:
+            break
+        crashes += 1
+    assert crashes >= 2, crashes  # at least the tmp write and the rename
 
 
 def test_readers_survive_concurrent_compaction(spark, tmp_path):
@@ -204,14 +267,14 @@ def test_version_gc_keeps_exactly_two(spark, tmp_path):
 
 
 def test_flip_sweeps_stale_pointer_temps(spark, tmp_path):
-    """A flip that died between write_text and os.replace leaves an
-    inert .current-* temp; the next flip must sweep it (ADVICE r4)."""
+    """A commit that died between write_text and os.replace leaves an
+    inert manifest temp; the next commit must sweep it (ADVICE r4)."""
     store = _store(spark, tmp_path)
     store.write(_df(spark, [(1, "d")]), "t")
     p = store.table_path("t")
-    (p / ".current-deadbeef").write_text("data-v999999")  # orphan
+    (p / ".table-deadbeef").write_text('{"current": "data-v999999"}')  # orphan
     store.compact("t")
-    assert list(p.glob(".current-*")) == []
+    assert list(p.glob(".table-*")) == []
     assert store.read("t").count() == 1
 
 
@@ -328,4 +391,43 @@ def test_concurrent_writers_of_one_table_keep_every_row(spark, tmp_path):
     assert not any(t.is_alive() for t in threads)
     assert not errors
     assert sorted(r["k"] for r in store.read("t").collect()) == list(range(n))
-    assert sorted(store._load_meta("t")["committed_batches"]) == [str(i) for i in range(n)]
+    assert sorted(store._manifest("t")["committed_batches"]) == [str(i) for i in range(n)]
+
+
+def test_compaction_racing_appends_keeps_every_row(spark, tmp_path):
+    """compact() holds the table's writer lock: a rewrite racing appends
+    must not publish a version that misses rows appended while it ran.
+    More threads than cores and a short switch interval."""
+    import sys
+    import threading
+
+    store = _store(spark, tmp_path)
+    for i in range(3):
+        store.write(_df(spark, [(i, "d")]), "t", batch_id=i)
+    n = 13
+    errors: list[Exception] = []
+
+    def run(job) -> None:
+        try:
+            job()
+        except Exception as exc:  # noqa: BLE001 — asserted below
+            errors.append(exc)
+
+    jobs = []
+    for i in range(3, n):
+        jobs.append(lambda i=i: store.write(_df(spark, [(i, "d")]), "t", batch_id=i))
+        if i % 3 == 0:
+            jobs.append(lambda: store.compact("t"))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=run, args=(job,)) for job in jobs]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    assert sorted(r["k"] for r in store.read("t").collect()) == list(range(n))
