@@ -11,6 +11,15 @@ Scale posture: every config here is one we would also set on a
   naive-UTC parquet timestamps.
 - shuffle.partitions is only a *default*; AQE coalesces it down for
   small stages and the driver can override for big ones.
+- A codegen cache that holds every class the registry generates
+  (``CODEGEN_CACHE_ENTRIES``), so a warm session does not recompile a
+  class it has generated before. It is a static conf: only :func:`get_spark`
+  can set it, and a session a caller hands us (the test driver's plain
+  session) keeps Spark's 100 entries; :func:`tune` cannot change that.
+- A floor under the driver heap (``HEAP_FLOOR_MB``), so the heap a
+  query session runs in does not depend on when G1 chose to grow it.
+  Like the driver memory it is a JVM launch option: it applies only
+  when :func:`get_spark` starts the JVM.
 """
 
 from __future__ import annotations
@@ -33,6 +42,39 @@ _RUNTIME_CONF = {
     # sources/tables.py (floor-to-microsecond, matching DuckDB's read).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+
+
+# Spark's codegen cache (spark.sql.codegen.cache.maxEntries, default
+# 100) is JVM-wide. One pass over the whole registry at sf0.001 compiles
+# 4372 distinct classes (CodegenMetrics compile count on a first pass
+# with an unbounded cache; a second pass then compiled only the 182-282
+# classes whose source differs from build to build). The 11 queries of the
+# benchmark's query_mix alone generate 119, so with 100 entries each
+# warm pass recompiled most of them. The cache is 4 LRU segments, each
+# evicting at a quarter of the size, hence the headroom.
+CODEGEN_CACHE_ENTRIES = 8192
+
+# The driver heap's floor (-Xms). Left to itself, G1 shrinks the heap to
+# about 110 MB after start-up. A query session's live set (~90 MB of
+# plans, broadcast relations and class metadata) then sits near G1's
+# marking threshold (45% of the heap), so 1 MB task-result buffers and
+# 4 MB broadcast blocks (humongous objects in 1 MB regions) start
+# concurrent cycles, and bursts of pauses make G1 grow the heap in steps
+# whose size and timing differ from run to run. Over 12 runs of the
+# benchmark's 11-query mix (20 s, 1 GiB heap, 4 cores) the peak RSS
+# ranged from 979 to 1205 MB. With this floor the heap stayed at 512 MB,
+# young collections fell from 68-97 to 39-54 a run (GC logs of 4 and 7
+# runs), and 16 runs read 1122-1149 MB.
+HEAP_FLOOR_MB = 512
+_UNIT_MB = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def _heap_floor(driver_memory: str) -> str:
+    """``-Xms`` for a driver heap of ``driver_memory`` (a JVM size such as
+    ``8g``; MB without a unit): the floor, or the whole heap if smaller."""
+    size = driver_memory.strip().lower().removesuffix("b")
+    mb = float(size[:-1]) * _UNIT_MB[size[-1]] if size[-1] in _UNIT_MB else float(size)
+    return f"-Xms{min(HEAP_FLOOR_MB, int(mb))}m"
 
 
 def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
@@ -59,11 +101,13 @@ def get_spark(
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    memory = os.environ.get("SPARK_DRIVER_MEMORY", "8g")
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", memory)
+        .config("spark.driver.defaultJavaOptions", _heap_floor(memory))
         .config("spark.ui.enabled", "false")
         # long-session hygiene: the ContextCleaner only unpersists
         # orphaned broadcast/cache blocks after a JVM GC notices the
@@ -72,5 +116,6 @@ def get_spark(
         # degrading later queries. Force a periodic GC far below the
         # 30min default so reclamation keeps pace with query churn.
         .config("spark.cleaner.periodicGC.interval", "2min")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     return tune(builder.getOrCreate(), shuffle_partitions)

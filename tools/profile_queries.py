@@ -7,12 +7,16 @@ Usage: python tools/profile_queries.py name1 name2 ... [options]
   --reps=2        timing repetitions (min is reported)
   --noop          time via noop sink (materializes every column) instead
                   of the bench's count() action
-  --jobs          print per-job wall decomposition (job descriptions are
-                  set around the build/action phases)
 
 Times build+action exactly like bench.py (count action, clearCache
 between reps) so numbers are comparable to the BENCH records, and
 optionally via the noop sink to see full-column materialization cost.
+
+Each line also shows the jobs of the build phase (eager driver actions
+and schema inference while the query is built) and of the action, and
+the codegen classes compiled in each rep (a warm rep should compile
+none; a nonzero count there is a recompile: a codegen cache too small,
+or a query whose generated source changes from build to build).
 """
 
 from __future__ import annotations
@@ -36,7 +40,6 @@ def main() -> int:
     suffix = "before"
     reps = 2
     use_noop = "--noop" in sys.argv
-    count_jobs = "--jobs" in sys.argv
     for a in sys.argv[1:]:
         if a.startswith("--sf="):
             sf = a.split("=", 1)[1]
@@ -52,6 +55,9 @@ def main() -> int:
 
     # bench's warm-up, so first-touch JIT doesn't pollute numbers
     warm_up(spark, reg, sf)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()  # noqa: SLF001
 
     for name in names:
         spec = reg.get(name)
@@ -60,14 +66,18 @@ def main() -> int:
             continue
         attempts = []
         build_secs = []
-        job_counts = []
+        build_jobs = []
+        action_jobs = []
+        compiles = []
         df = None
         for rep in range(reps):
             group = f"profile:{name}:{rep}"
-            spark.sparkContext.setJobGroup(group, group)
+            c0 = compiled.getCount()
+            sc.setJobGroup(f"{group}:build", group)
             t0 = time.perf_counter()
             df = spec.build(spark, sf)
             t1 = time.perf_counter()
+            sc.setJobGroup(f"{group}:action", group)
             if use_noop:
                 df.write.format("noop").mode("overwrite").save()
             else:
@@ -75,18 +85,19 @@ def main() -> int:
             t2 = time.perf_counter()
             build_secs.append(t1 - t0)
             attempts.append(t2 - t0)
-            if count_jobs:
-                tracker = spark.sparkContext._jsc.sc().statusTracker()  # noqa: SLF001
-                job_counts.append(len(tracker.getJobIdsForGroup(group)))
+            compiles.append(compiled.getCount() - c0)
+            build_jobs.append(len(tracker.getJobIdsForGroup(f"{group}:build")))
+            action_jobs.append(len(tracker.getJobIdsForGroup(f"{group}:action")))
             spark.catalog.clearCache()
-            spark.sparkContext._jsc.sc().clearJobGroup()  # noqa: SLF001
+            sc._jsc.sc().clearJobGroup()  # noqa: SLF001
         best = min(range(len(attempts)), key=lambda i: attempts[i])
-        jobs_msg = f" jobs={job_counts[best]}" if count_jobs else ""
         print(
             f"{name}: {attempts[best]:.3f}s"
             f" (build {build_secs[best]:.3f}s,"
             f" action {attempts[best] - build_secs[best]:.3f}s;"
-            f" all {[round(a, 3) for a in attempts]}{jobs_msg})"
+            f" all {[round(a, 3) for a in attempts]})"
+            f" build_jobs={build_jobs[best]} action_jobs={action_jobs[best]}"
+            f" compiles={compiles}"
         )
         if plans_dir and df is not None:
             os.makedirs(plans_dir, exist_ok=True)
