@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.pyworker import worker_setup
 from ..functions.temporal import epoch_us
 from ..registry import query
 from ..session import tune
@@ -45,6 +46,7 @@ def _partition_gap_stats(batches) -> "pd.DataFrame":
     Sort order (user, ts, event_id) matches the oracle's window
     ordering, so ties resolve identically.
     """
+    worker_setup()
     frames = list(batches)  # an empty partition yields zero batches
     pdf = (
         pd.concat(frames, ignore_index=True)

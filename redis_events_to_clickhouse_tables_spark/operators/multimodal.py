@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.pyworker import worker_setup
 from ..registry import query
 from ..session import tune
 from ..sources.tables import fanout, table
@@ -54,6 +55,7 @@ def fake_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     (``NotImplementedError`` path below); the batch shape, schema, and
     Arrow transfer are exactly what the real decoder uses.
     """
+    worker_setup()
     for pdf in batches:
         payload = pdf["payload"]
         n_bytes = payload.map(len).astype("int32")
@@ -71,6 +73,7 @@ def fake_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
 def real_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """The production decode hook. Codec libraries are not available in
     this environment; wire PIL/torchaudio/ffmpeg here."""
+    worker_setup()
     raise NotImplementedError(
         "image/audio codecs not available in this container; "
         "use fake_decode_batches for plumbing tests"
@@ -151,6 +154,7 @@ def fake_resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     """Deterministic stand-in for a thumbnail resize (PIL goes here).
     Output thumbnails are 64px-wide with aspect preserved against the
     fake decode's dimensions."""
+    worker_setup()
     for pdf in batches:
         n_bytes = pdf["payload"].map(len).astype("int64")
         w = (n_bytes % 640).clip(lower=1)
@@ -219,6 +223,7 @@ def frame_sample_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
     here): treat the payload as fixed-size frames, emit every
     ``_FRAME_STRIDE``-th one — a ROW-EXPANDING mapInPandas (N frames
     out per payload in), the shape a real frame sampler has."""
+    worker_setup()
     for pdf in batches:
         out = {"doc_id": [], "frame_idx": [], "frame_off": [], "frame_bytes": []}
         for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
@@ -285,6 +290,8 @@ def audio_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
     the exact bytes the worker saw (proves the Arrow transfer is
     byte-faithful, since the oracle recomputes it SQL-side)."""
     import hashlib
+
+    worker_setup()
 
     for pdf in batches:
         n_bytes = pdf["payload"].map(len)

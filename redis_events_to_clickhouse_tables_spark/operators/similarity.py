@@ -2,13 +2,20 @@
 
 Brute-force cosine top-k as the exact baseline, a sign-bucket (LSH/IVF
 style) variant as the scale path, and embedding-cosine near-dup
-pairing. Dot products run JVM-side via ``zip_with``/``aggregate``
-higher-order functions in strict left-to-right double precision — the
-same evaluation order DuckDB's ``list_dot_product`` uses, so cosines
-match bit-for-bit and the oracle can compare values exactly.
+pairing. Every dot product folds in strict left-to-right double
+precision — the same evaluation order DuckDB's ``list_dot_product``
+uses, so cosines match bit-for-bit and the oracle can compare values
+exactly. The brute-force top-k family (``sim_bruteforce_topk``, the
+recall queries built on it, ``embedding_hubness_koccurrence``) scores
+in one Arrow kernel, ``_cosine_topk``: numpy over each corpus batch,
+returning only each probe's top k. The other queries use the JVM-side
+``zip_with``/``aggregate`` higher-order functions ``_dot``/``_norm``
+(``_ddot`` for the k-means ones), which Spark interprets element by
+element.
 
-Scale design: the exact top-k broadcasts the (small) query set and
-streams the corpus once — no shuffle. The bucketed variant shows the
+Scale design: the exact top-k ships the (small) query set to the
+kernel and streams the corpus once — no join, and only k rows per probe
+and batch reach the ranking shuffle. The bucketed variant shows the
 100-TB shape: partition the corpus by a cheap locality-sensitive
 bucket, join queries only to their bucket, rank within. A real IVF
 would learn centroids; the sign-bucket keeps it deterministic and
@@ -17,10 +24,14 @@ oracle-checkable.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.lineage import model_checkpoint
+from ..functions.pyworker import worker_setup
 from ..registry import query
 from ..session import tune
 from ..sources.tables import table
@@ -54,6 +65,139 @@ _SQL_COSINE = (
     "    * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))"
 )
 
+# corpus rows x probes one kernel step scores: bounds each of its
+# scratch arrays to 2 MB whatever the Arrow batch size
+_KERNEL_CELLS = 1 << 18
+
+
+def _cosine_topk(e: DataFrame, probe: Column, k: int) -> DataFrame:
+    """Exact cosine top-``k`` of every probe (the rows of ``e`` that
+    ``probe`` selects) over the corpus ``e``: ``(q_id, c_id, cosine,
+    rk)``, a vector never matching its own ``vec_id``, the rows
+    ``_dot``/``_norm`` give through a broadcast join and a window.
+
+    The probes are bounded by the query (10 or 200 vectors), so they are
+    collected once and shipped with the kernel, and the corpus streams
+    through ``mapInArrow`` once. Per Arrow batch the kernel scores every
+    probe against every row with numpy, folding dots and norms left to
+    right in float64 (``acc = acc + a[i] * b[i]``, then a square root:
+    the IEEE steps of ``_dot``/``_norm`` and of DuckDB's
+    ``list_dot_product``), and keeps each probe's best ``k`` rows in
+    Spark's order: cosine descending with NaN greatest and nulls last,
+    then ``c_id``. A null vector or one holding a null has a null norm;
+    vectors of different lengths have a null dot. The kernel returns the
+    dot and both norms and Spark divides, so the cosine and a zero
+    norm's null (or ANSI ``DIVIDE_BY_ZERO``) are Spark's own: one
+    zero-denominator row per probe and batch passes the cut for that.
+    The ``row_number`` window then ranks the survivors exactly.
+    """
+
+    def vectors(emb):
+        """The well-formed vectors of a ``list<float>`` array grouped by
+        length, ``[(rows, float64 matrix, norms)]``. A null vector and
+        one holding a null are left out: their norm is null."""
+        lens = pc.list_value_length(emb).fill_null(0).to_numpy()
+        vals = emb.flatten()
+        x = vals.fill_null(0).to_numpy().astype(np.float64)
+        bad = emb.is_null().to_numpy(zero_copy_only=False).copy()
+        if vals.null_count:
+            holder = np.repeat(np.arange(len(emb)), lens)
+            bad[holder[vals.is_null().to_numpy(zero_copy_only=False)]] = True
+        starts = np.cumsum(lens) - lens
+        groups = []
+        for n in np.unique(lens[~bad]):
+            rows = np.flatnonzero(~bad & (lens == n))
+            m = x[starts[rows, None] + np.arange(n)]
+            sq = np.zeros(len(rows))
+            for i in range(n):
+                sq += m[:, i] * m[:, i]
+            groups.append((rows, m, np.sqrt(sq)))
+        return groups
+
+    probes = e.filter(probe).select("vec_id", "embedding").toArrow()
+    q_id = probes.column(0).to_numpy()
+    q_vecs = vectors(probes.column(1).combine_chunks())
+    q_norm = np.zeros(len(q_id))
+    q_ok = np.zeros(len(q_id), dtype=bool)
+    for rows, _, norms in q_vecs:
+        q_norm[rows], q_ok[rows] = norms, True
+
+    def top(rb):
+        """Each probe's best ``k`` rows of one corpus slice."""
+        c_id = rb.column(0).to_numpy()
+        n = len(c_id)
+        dot = np.zeros((len(q_id), n))
+        dot_ok = np.zeros((len(q_id), n), dtype=bool)
+        c_norm = np.zeros(n)
+        c_ok = np.zeros(n, dtype=bool)
+        for rows, m, norms in vectors(rb.column(1)):
+            c_norm[rows], c_ok[rows] = norms, True
+            for q_rows, qm, _ in q_vecs:
+                if qm.shape[1] != m.shape[1]:
+                    continue  # zip_with pads with nulls: a null dot
+                acc = np.zeros((len(q_rows), len(rows)))
+                for i in range(m.shape[1]):
+                    acc += np.multiply.outer(qm[:, i], m[:, i])
+                dot[np.ix_(q_rows, rows)] = acc
+                dot_ok[np.ix_(q_rows, rows)] = True
+        den = np.multiply.outer(q_norm, c_norm)
+        den_ok = np.logical_and.outer(q_ok, c_ok)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = dot / den
+        scored = dot_ok & den_ok & (den != 0)
+        nan = scored & np.isnan(cos)
+        live = np.not_equal.outer(q_id, c_id)
+        # one float per cell, ordered like Spark but coarser (NaN ties
+        # +inf, null ties -inf): ties only widen the cut below
+        s = np.where(scored, np.where(nan, np.inf, cos), -np.inf)
+        s[~live] = -np.inf
+        cand = live
+        if n > k:
+            cand = live & (s >= np.partition(s, n - k, axis=1)[:, n - k, None])
+        p, b = np.nonzero(cand)
+        cls = np.where(nan[p, b], 0, np.where(scored[p, b], 1, 2))
+        val = np.where(cls == 1, cos[p, b], 0.0)
+        order = np.lexsort((c_id[b], -val, cls, p))
+        p, b = p[order], b[order]
+        rank = np.arange(len(p)) - np.searchsorted(p, p)  # p is sorted
+        p, b = p[rank < k], b[rank < k]
+        zero = live & den_ok & (den == 0)
+        zero[p, b] = False
+        zp = np.flatnonzero(zero.any(axis=1))
+        p, b = np.r_[p, zp], np.r_[b, zero[zp].argmax(axis=1)]
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(q_id[p]),
+                pa.array(c_id[b]),
+                pa.array(dot[p, b], mask=~dot_ok[p, b]),
+                pa.array(q_norm[p], mask=~q_ok[p]),
+                pa.array(c_norm[b], mask=~c_ok[b]),
+            ],
+            names=["q_id", "c_id", "dot", "q_norm", "c_norm"],
+        )
+
+    def kernel(batches):
+        worker_setup()
+        step = max(1, _KERNEL_CELLS // max(1, len(q_id)))
+        for batch in batches:
+            for lo in range(0, batch.num_rows, step):
+                yield top(batch.slice(lo, step))
+
+    scored = (
+        e.filter(F.col("vec_id").isNotNull())
+        .select("vec_id", "embedding")
+        .mapInArrow(
+            kernel, "q_id long, c_id long, dot double, q_norm double, c_norm double"
+        )
+    )
+    cosine = (F.col("dot") / (F.col("q_norm") * F.col("c_norm"))).alias("cosine")
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "c_id")
+    return (
+        scored.select("q_id", "c_id", cosine)
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+    )
+
 
 @query(
     "sim_bruteforce_topk",
@@ -69,30 +213,11 @@ _SQL_COSINE = (
     """,
 )
 def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k: broadcast queries x corpus scan, windowed rank."""
+    """Exact cosine top-k: the query vectors against one corpus scan
+    (``_cosine_topk``), windowed rank."""
     tune(spark)
     e = table(spark, sf_dir, "embeddings")
-    # norms are computed once per vector *before* the join — same result
-    # bits (the cosine formula is unchanged), O(corpus) instead of
-    # O(pairs) norm work
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        _norm("embedding").alias("q_norm"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_emb"),
-        _norm("embedding").alias("c_norm"),
-    )
-    pairs = c.join(F.broadcast(q), F.col("q_id") != F.col("c_id"))
-    cosine = (_dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm"))).alias("cosine")
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "c_id")
-    return (
-        pairs.select("q_id", "c_id", cosine)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _TOP_K)
-    )
+    return _cosine_topk(e, F.col("vec_id") < _N_QUERIES, _TOP_K)
 
 
 _SQL_BUCKET = (
@@ -1651,6 +1776,7 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
+        worker_setup()
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -2173,34 +2299,18 @@ def embedding_hubness_koccurrence(
     list, and ANN recall targets / dedup thresholds tuned on average
     behavior will mislead.
 
-    Scale shape: the query side is a FIXED 200-vector broadcast
+    Scale shape: the query side is a FIXED 200-vector sample
     (workload sample, constant at any corpus size), so the scan is
     corpus x 200 map-only cosines into a per-query bounded top-k —
-    the ``sim_bruteforce_topk`` topology; k-occurrence and its
-    distribution are two map-side-combinable groupBys. Cosines are
-    shared IEEE chains on float32 inputs promoted identically.
+    the ``sim_bruteforce_topk`` kernel (``_cosine_topk``);
+    k-occurrence and its distribution are two map-side-combinable
+    groupBys. Cosines are shared IEEE chains on float32 inputs
+    promoted identically.
     """
     tune(spark)
     e = table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < _HUB_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        _norm("embedding").alias("q_norm"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_emb"),
-        _norm("embedding").alias("c_norm"),
-    )
-    pairs = c.join(F.broadcast(q), F.col("q_id") != F.col("c_id"))
-    cosine = (
-        _dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm"))
-    ).alias("cosine")
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "c_id")
     occ = (
-        pairs.select("q_id", "c_id", cosine)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _HUB_K)
+        _cosine_topk(e, F.col("vec_id") < _HUB_QUERIES, _HUB_K)
         .groupBy("c_id")
         .agg(F.count(F.lit(1)).cast("long").alias("k_occ"))
     )

@@ -296,12 +296,17 @@ class IngestEngine:
         attempt counter is kept. An interruption aborts the replay and
         leaves the DLQ untouched.
 
-        Each table is flushed under the batch id ``dlq-`` + 24 hex
-        digits of the sha256 of its sorted DLQ rows (dead-letter time
-        and payload: an identical event dead-lettered later must not
-        collide with one already replayed). A replay that crashed
-        before the DLQ swap left the DLQ as it was, so its rerun gets
-        the same ids and the store's commit log skips what it wrote.
+        Each dead-letter write group (one ``_dead_letter`` call: its
+        ``target_table`` and ``dead_lettered_at``) is replayed as its own
+        batch: parsed, normalized and flushed under the batch id ``dlq-``
+        + 24 hex digits of the sha256 of its table, its dead-letter time
+        and its sorted payloads, so one write job per group. A replay
+        that crashed before the DLQ swap left the DLQ as it was, plus
+        whatever ticks dead-lettered since; its rerun gets the same ids
+        for the groups it wrote, and the store's commit log skips them.
+        (An id over a whole table's DLQ rows changed when a tick
+        dead-lettered into that table in between, and the rerun wrote
+        the crashed replay's rows again.)
         """
         report = IngestReport(batch_id=-1)
         data_dir = self.store.root / DLQ_TABLE / "data"
@@ -322,50 +327,57 @@ class IngestEngine:
             try:
                 eligible = dlq.filter(F.col("attempts") < max_attempts)
                 parked = dlq.filter(F.col("attempts") >= max_attempts)
-                row_key = F.concat_ws(
-                    " ", F.unix_micros("dead_lettered_at").cast("string"), "payload"
+                at = F.unix_micros("dead_lettered_at")
+                digest = F.sha2(
+                    F.concat_ws(
+                        "\n",
+                        "target_table",
+                        at.cast("string"),
+                        F.array_sort(F.collect_list("payload")),
+                    ),
+                    256,
                 )
-                digest = F.sha2(F.concat_ws("\n", F.array_sort(F.collect_list(row_key))), 256)
-                ids = {
-                    t: "dlq-" + h[:24]
-                    for t, h in eligible.groupBy("target_table").agg(digest).collect()
-                }
-                if not ids:  # everything is parked
+                groups = sorted(
+                    eligible.groupBy("target_table", at.alias("at")).agg(digest).collect()
+                )
+                if not groups:  # everything is parked
                     report.n_dead_lettered = dlq.count()
                     return report
-                # a dead letter's payload routes to its target_table:
-                # _dead_letter serializes one event type's rows per table
-                events = parse_events(
-                    self.spark, eligible.select(F.col("payload").alias("value"))
-                )
-                batch = normalize_batch(events, self.config)
                 remaining = parked
-                try:
-                    for t in sorted(ids):
-                        err = self._flush(batch, t, ids[t], report)
-                        if err is None:
-                            continue
-                        self._trace(
-                            {"event": "dlq_retry_fail", "table": t, "error": err},
-                            suffix=".failedsingle.error.log",
-                        )
-                        again = (
-                            eligible.filter(F.col("target_table") == t)
-                            .withColumn("attempts", F.col("attempts") + 1)
-                            .withColumn("error", F.lit(err))
-                            .withColumn("dead_lettered_at", F.current_timestamp())
-                        )
-                        remaining = remaining.unionByName(
-                            self._drop_non_critical(again, t, report)
-                        )
-                    # atomic DLQ replacement: write survivors to a fresh
-                    # dir, then crash-safe swap (old dir renamed aside
-                    # before deletion — streaming/store.py swap_dirs)
-                    report.n_dead_lettered = remaining.count()
-                    tmp = self.store.root / DLQ_TABLE / f".retry-{uuid.uuid4().hex[:8]}"
-                    remaining.write.mode("overwrite").parquet(str(tmp))
-                finally:
-                    batch.unpersist()
+                for t, micros, h in groups:
+                    rows = eligible.filter(
+                        (F.col("target_table") == t) & (at == micros)
+                    )
+                    # a dead letter's payload routes to its target_table:
+                    # _dead_letter serializes one event type's rows per table
+                    events = parse_events(
+                        self.spark, rows.select(F.col("payload").alias("value"))
+                    )
+                    batch = normalize_batch(events, self.config)
+                    try:
+                        err = self._flush(batch, t, "dlq-" + h[:24], report)
+                    finally:
+                        batch.unpersist()
+                    if err is None:
+                        continue
+                    self._trace(
+                        {"event": "dlq_retry_fail", "table": t, "error": err},
+                        suffix=".failedsingle.error.log",
+                    )
+                    again = (
+                        rows.withColumn("attempts", F.col("attempts") + 1)
+                        .withColumn("error", F.lit(err))
+                        .withColumn("dead_lettered_at", F.current_timestamp())
+                    )
+                    remaining = remaining.unionByName(
+                        self._drop_non_critical(again, t, report)
+                    )
+                # atomic DLQ replacement: write survivors to a fresh
+                # dir, then crash-safe swap (old dir renamed aside
+                # before deletion — streaming/store.py swap_dirs)
+                report.n_dead_lettered = remaining.count()
+                tmp = self.store.root / DLQ_TABLE / f".retry-{uuid.uuid4().hex[:8]}"
+                remaining.write.mode("overwrite").parquet(str(tmp))
                 swap_dirs(tmp, data_dir)
                 return report
             finally:
@@ -412,7 +424,7 @@ class IngestEngine:
                 )
             self._phase(report, "append", time.perf_counter() - t_append)
             with self._lock:
-                report.tables[etype] = n
+                report.tables[etype] = report.tables.get(etype, 0) + n
             self._trace(
                 {"event": "insert", "batch": batch_id, "table": etype, "rows": n},
                 suffix=".success.log",

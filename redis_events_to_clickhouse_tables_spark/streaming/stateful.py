@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..functions.pyworker import worker_setup
+
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -42,6 +44,7 @@ def _update_user_totals(
     key: tuple, batches: Iterable[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     """Running per-user event count + value sum, updated per micro-batch."""
+    worker_setup()
     n, total = state.get if state.exists else (0, 0.0)
     for pdf in batches:
         n += len(pdf)
@@ -105,6 +108,7 @@ def _update_user_sessions(
     session, closing any session whose gap was exceeded within the
     batch, and the event-time timeout is re-armed at last + gap.
     """
+    worker_setup()
     uid = key[0]
 
     def row(start: int, last: int, n: int) -> pd.DataFrame:

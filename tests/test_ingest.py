@@ -706,3 +706,35 @@ def test_dlq_replays_of_identical_events_each_land(spark, tmp_path):
         store.write = original
         engine.retry_dead_letters()
     assert [r["x"] for r in store.read("t").collect()] == [1, 1]
+
+
+def test_dlq_rerun_after_interleaved_dead_letter_inserts_once(spark, tmp_path, monkeypatch):
+    """A tick that dead-letters into a table between a crashed replay and
+    its rerun adds a write group; the rerun skips the group the crashed
+    replay wrote and lands only the new one."""
+    import pytest
+
+    from redis_events_to_clickhouse_tables_spark.streaming import ingest
+
+    engine, store = _engine(spark, tmp_path)
+    original = _failing(store, "write")
+    engine.process_raw_batch(_raw(spark, [{"event_type": "t", "x": 1}]))
+    store.write = original
+
+    def crash(tmp, live):
+        raise RuntimeError("process died before the DLQ swap")
+
+    monkeypatch.setattr(ingest, "swap_dirs", crash)
+    with pytest.raises(RuntimeError, match="DLQ swap"):
+        engine.retry_dead_letters()
+    monkeypatch.undo()
+    assert [r["x"] for r in store.read("t").collect()] == [1]
+
+    original = _failing(store, "write")
+    engine.process_raw_batch(_raw(spark, [{"event_type": "t", "x": 2}]))
+    store.write = original
+    assert engine.read_dlq().count() == 2
+
+    IngestEngine(spark, store, IngestConfig()).retry_dead_letters()
+    assert sorted(r["x"] for r in store.read("t").collect()) == [1, 2]
+    assert engine.read_dlq().count() == 0

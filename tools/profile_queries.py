@@ -17,6 +17,16 @@ and schema inference while the query is built) and of the action, and
 the codegen classes compiled in each rep (a warm rep should compile
 none; a nonzero count there is a recompile: a codegen cache too small,
 or a query whose generated source changes from build to build).
+
+A second line per query splits each rep's CPU time (user + system, ms,
+read from /proc for this process tree) by where it ran:
+  driver_py   this Python process (query building, py4j calls)
+  jvm_task    the JVM's executor task threads
+  jvm_other   every other JVM thread (driver, planner, codegen, GC, py4j
+              server, finished threads) except the JIT compilers
+  py_workers  the Python workers under the JVM (mapInArrow/mapInPandas)
+A Python worker that grows expensive per task shows in py_workers
+without a profiler.
 """
 
 from __future__ import annotations
@@ -24,6 +34,7 @@ from __future__ import annotations
 import os
 import sys
 import time
+from pathlib import Path
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,6 +42,53 @@ from redis_events_to_clickhouse_tables_spark.registry import load_all
 from redis_events_to_clickhouse_tables_spark.session import get_spark
 
 from bench import warm_up
+
+
+def _stat(path: str) -> tuple[str, list[str]]:
+    """The command name in a /proc stat file and the fields after it;
+    empty if the process or thread has exited."""
+    try:
+        text = Path(path).read_text()
+    except OSError:
+        return "", []
+    end = text.rindex(")")
+    return text[text.index("(") + 1 : end], text[end + 2 :].split()
+
+
+def cpu_split(jvm_pid: int) -> dict[str, float]:
+    """CPU ms used so far by this process tree, by where it ran (see the
+    module docstring)."""
+    ticks = {"driver_py": 0, "jvm_task": 0, "jvm_other": 0, "py_workers": 0}
+    _, me = _stat("/proc/self/stat")
+    ticks["driver_py"] = int(me[11]) + int(me[12])  # utime stime
+    parent, own = {}, {}
+    for name in os.listdir("/proc"):
+        if name.isdigit():
+            _, f = _stat(f"/proc/{name}/stat")
+            if f:
+                parent[int(name)] = int(f[1])
+                own[int(name)] = sum(int(x) for x in f[11:15])  # + reaped children
+    for pid, n in own.items():
+        p = parent.get(pid, 0)
+        while p > 1 and p != jvm_pid:
+            p = parent.get(p, 0)
+        if p == jvm_pid:
+            ticks["py_workers"] += n
+    _, jvm = _stat(f"/proc/{jvm_pid}/stat")
+    other = int(jvm[11]) + int(jvm[12])
+    for tid in os.listdir(f"/proc/{jvm_pid}/task"):
+        thread, f = _stat(f"/proc/{jvm_pid}/task/{tid}/stat")
+        if not f:
+            continue
+        n = int(f[11]) + int(f[12])
+        if thread.startswith(("C1 CompilerThre", "C2 CompilerThre")):
+            other -= n
+        elif thread.startswith("Executor task l"):
+            ticks["jvm_task"] += n
+            other -= n
+    ticks["jvm_other"] = other
+    hz = os.sysconf("SC_CLK_TCK")
+    return {k: v * 1000 / hz for k, v in ticks.items()}
 
 
 def main() -> int:
@@ -58,6 +116,7 @@ def main() -> int:
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()  # noqa: SLF001
+    jvm_pid = sc._gateway.proc.pid  # noqa: SLF001
 
     for name in names:
         spec = reg.get(name)
@@ -69,10 +128,12 @@ def main() -> int:
         build_jobs = []
         action_jobs = []
         compiles = []
+        cpu = []
         df = None
         for rep in range(reps):
             group = f"profile:{name}:{rep}"
             c0 = compiled.getCount()
+            cpu0 = cpu_split(jvm_pid)
             sc.setJobGroup(f"{group}:build", group)
             t0 = time.perf_counter()
             df = spec.build(spark, sf)
@@ -86,6 +147,8 @@ def main() -> int:
             build_secs.append(t1 - t0)
             attempts.append(t2 - t0)
             compiles.append(compiled.getCount() - c0)
+            cpu1 = cpu_split(jvm_pid)
+            cpu.append({k: round(cpu1[k] - cpu0[k]) for k in cpu0})
             build_jobs.append(len(tracker.getJobIdsForGroup(f"{group}:build")))
             action_jobs.append(len(tracker.getJobIdsForGroup(f"{group}:action")))
             spark.catalog.clearCache()
@@ -99,6 +162,7 @@ def main() -> int:
             f" build_jobs={build_jobs[best]} action_jobs={action_jobs[best]}"
             f" compiles={compiles}"
         )
+        print(f"  cpu_ms per rep: {cpu}")
         if plans_dir and df is not None:
             os.makedirs(plans_dir, exist_ok=True)
             plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
