@@ -2,11 +2,10 @@
 
 The reference consumes JSON event jobs from a Bull queue
 (src/main.ts:220-223, :520-543) and never loses an event: jobs are
-only removed from Redis after they are handed to a bulker, failed
-bulk inserts are re-enqueued (src/main.ts:463-514), and a graceful
-shutdown re-injects everything still waiting (src/main.ts:678-735).
-This adapter reproduces that at-least-once contract on the Redis
-"reliable queue" list pattern:
+only removed from Redis after they are handed to a bulker, and a
+graceful shutdown re-injects everything still waiting
+(src/main.ts:678-735). This adapter reproduces that at-least-once
+contract on the Redis "reliable queue" list pattern:
 
 - ``poll()`` atomically ``LMOVE``\\ s up to ``max_batch`` jobs from the
   wait list to a per-consumer *processing* list and returns them as a
@@ -62,29 +61,10 @@ the exact same at-least-once poll/ack/salvage protocol):
   - failed jobs: classic Bull stores failed ids in a Redis SET
     (``SADD``); this adapter keeps a LIST so ``LRANGE``-based S2
     salvage scans it in insertion order.
-  - delayed jobs: classic Bull encodes ``timestamp * 0x1000 |
-    attemptsMade`` into the zset score; this adapter's
-    ``bull:<q>:delayed`` zset scores by plain due-time ms (same
-    ordering, simpler score).
 
-S1-delay — delayed redelivery (the reference's failure paths all
-re-enqueue WITH A DELAY, i.e. Bull's ``delayed`` sorted set):
-
-- batch-failure demotion: ``delay: 2000`` + ``attempts: 5`` with
-  ``backoff {type: exponential, delay: 3000}`` (src/main.ts:486,
-  :502-507) — modeled by ``requeue_failed_event()`` + ``retry_job()``.
-- bulker-full: ``delay: 5000`` (src/main.ts:393-415) —
-  ``requeue_bulker_full()``.
-- emergency-client busy: ``delay: 1000 + (1..10)*1000`` ms
-  (src/main.ts:301) — ``requeue_emergency_busy()`` (randomness
-  injectable).
-
-``add_job(..., delay_ms=N)`` parks the job in the delayed zset;
-``poll()`` first promotes every job whose due time has passed (what
-Bull's delayed-set timer does). The clock is injectable (``now_ms``)
-so tests drive redelivery ordering deterministically. Exponential
-backoff uses classic Bull's builtin strategy
-``round((2^attemptsMade - 1) * delay)`` (bull lib/backoffs.js).
+Failures: where the reference re-enqueues a failed event with a delay,
+the engine dead-letters it (E1-E3 -> the ``_dlq`` table, SURVEY.md),
+so poll -> commit -> ack is this source's only delivery protocol.
 
 The ``redis`` client library is not available in this container, so
 ``client`` is injectable (tests use a fake implementing the list
@@ -102,6 +82,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -117,13 +98,6 @@ except ImportError:
 WAIT_SUFFIX = "wait"
 PROCESSING_SUFFIX = "processing"
 FAILED_SUFFIX = "failed"
-DELAYED_SUFFIX = "delayed"  # zset: token -> due-time ms
-
-# The reference's three delay classes (see module docstring):
-FAIL_DELAY_MS = 2_000  # src/main.ts:486
-FAIL_ATTEMPTS = 5  # src/main.ts:507
-FAIL_BACKOFF_BASE_MS = 3_000  # src/main.ts:502-506
-BULKER_FULL_DELAY_MS = 5_000  # src/main.ts:393
 
 # Reference: jobs from the old producer carry second-granularity
 # timestamps; ms timestamps are >= 13 digits (src/main.ts:428).
@@ -159,7 +133,6 @@ class RedisBullSource:
         client=None,
         consumer: str = "worker-1",
         wire_format: str = "payload",
-        now_ms=None,
     ):
         if client is None:
             if not HAVE_REDIS:
@@ -178,13 +151,6 @@ class RedisBullSource:
         self.max_batch = max_batch
         self.consumer = consumer
         self.wire_format = wire_format
-        # injectable ms-epoch clock (tests drive delayed redelivery
-        # with a fake clock; production uses wall time)
-        if now_ms is None:
-            import time
-
-            now_ms = lambda: int(time.time() * 1000)  # noqa: E731
-        self.now_ms = now_ms
         # list tokens polled but not yet acked (payload mode: the raw
         # JSON itself; bull mode: job ids). Mirror of the Redis
         # processing list for this consumer; authoritative copy is in
@@ -211,10 +177,6 @@ class RedisBullSource:
     @property
     def failed_key(self) -> str:
         return self._key(FAILED_SUFFIX)
-
-    @property
-    def delayed_key(self) -> str:
-        return self._key(DELAYED_SUFFIX)
 
     # bull wire format: per-job hash + id counter (classic Bull layout)
     def _job_key(self, job_id: str) -> str:
@@ -259,7 +221,6 @@ class RedisBullSource:
         job hash's ``data`` field (id stays tracked even if the hash
         is missing, so ``ack()`` still clears the stale id).
         """
-        self.promote_due()
         tokens: list[str] = []
         payloads: list[str] = []
         for _ in range(self.max_batch):
@@ -294,148 +255,28 @@ class RedisBullSource:
         self._inflight_payloads.clear()
         return n
 
-    # -- S1-delay: Bull's delayed sorted set --------------------------
-    def promote_due(self) -> int:
-        """Move every delayed job whose due time has passed to the
-        TAIL of the wait list, in due-time order — what classic Bull's
-        delayed-set timer does. ``poll()`` calls this first, so a due
-        job is always redelivered on the next poll after its delay
-        elapses. Returns the count promoted."""
-        due = self.client.zrangebyscore(
-            self.delayed_key, "-inf", self.now_ms()
-        )
-        for member in due:
-            self.client.zrem(self.delayed_key, member)
-            self.client.rpush(self.wait_key, _as_text(member))
-        return len(due)
-
-    def add_job(
-        self,
-        data: dict,
-        *,
-        delay_ms: int = 0,
-        attempts: int = 1,
-        backoff_base_ms: int | None = None,
-        name: str = "__default__",
-    ) -> str:
-        """``eventsQueue.add(data, opts)``: enqueue an event,
-        optionally delayed (Bull's ``delay`` opt) with a retry budget
-        (``attempts``) and exponential-backoff base (``backoff.delay``,
-        src/main.ts:502-507). In bull wire format the opts persist in
-        the job hash (classic Bull stores ``opts`` JSON +
-        ``attemptsMade`` there) so ``retry_job`` can honor them; in
-        payload mode the raw JSON is the token — the delay is still
-        honored via the delayed zset, but the retry budget is not
-        persisted (the reference's manual requeue paths track attempts
-        in the DATA instead, which the ``requeue_*`` helpers do).
-        Returns the queue token (job id in bull mode)."""
+    def add_job(self, data: dict, *, name: str = "__default__") -> str:
+        """``eventsQueue.add(data)``: enqueue an event at the tail of the
+        wait list and return its queue token. In bull wire format the
+        token is a new job id drawn from the ``INCR`` counter, whose
+        hash holds classic Bull's fields; its single attempt leaves
+        retries to the engine's DLQ."""
+        token = json.dumps(data)
         if self.wire_format == "bull":
-            token = self._write_bull_job(
-                data,
-                name=name,
-                attempts=attempts,
-                backoff_base_ms=backoff_base_ms,
-            )
-        else:
-            token = json.dumps(data)
-        if delay_ms > 0:
-            self.client.zadd(
-                self.delayed_key, {token: self.now_ms() + delay_ms}
-            )
-        else:
-            self.client.rpush(self.wait_key, token)
-        return token
-
-    def retry_job(self, token: str, delay_ms: int | None = None) -> int | None:
-        """Bull's failed-processor transition for a POLLED job: clear
-        it from the processing list, then either park it in the
-        delayed zset for its next attempt or exhaust it to the failed
-        key.
-
-        In bull wire format the job hash's ``attemptsMade`` is
-        incremented and compared to ``opts.attempts``; the backoff
-        delay is classic Bull's builtin exponential strategy
-        ``round((2^attemptsMade - 1) * backoff.delay)``
-        (bull lib/backoffs.js) unless ``delay_ms`` overrides it. In
-        payload mode there is no persisted budget, so ``delay_ms`` is
-        required and the job always reschedules (callers bound retries
-        via the data-level attempt counters, as the reference does).
-
-        Returns the scheduled delay in ms, or ``None`` if the job was
-        moved to the failed key (budget exhausted)."""
-        self.client.lrem(self.processing_key, 1, token)
-        if token in self._inflight:
-            idx = self._inflight.index(token)
-            self._inflight.pop(idx)
-            if idx < len(self._inflight_payloads):
-                self._inflight_payloads.pop(idx)
-        if self.wire_format == "bull":
-            fields = self._job_fields(token)
-            made = int(fields.get("attemptsMade") or 0) + 1
+            job_id = str(self.client.incr(self.id_counter_key))
             self.client.hset(
-                self._job_key(token), mapping={"attemptsMade": str(made)}
+                self._job_key(job_id),
+                mapping={
+                    "name": name,
+                    "timestamp": str(int(time.time() * 1000)),
+                    "data": token,
+                    "opts": json.dumps({"attempts": 1}),
+                    "attemptsMade": "0",
+                },
             )
-            try:
-                opts = json.loads(fields.get("opts") or "{}")
-            except ValueError:
-                opts = {}
-            budget = int(opts.get("attempts") or 1)
-            if made >= budget:
-                self.client.rpush(self.failed_key, token)
-                return None
-            if delay_ms is None:
-                base = int(
-                    (opts.get("backoff") or {}).get("delay")
-                    or FAIL_BACKOFF_BASE_MS
-                )
-                delay_ms = round((2**made - 1) * base)
-        elif delay_ms is None:
-            raise ValueError(
-                "payload wire format persists no retry budget; pass delay_ms"
-            )
-        self.client.zadd(
-            self.delayed_key, {token: self.now_ms() + delay_ms}
-        )
-        return delay_ms
-
-    # -- the reference's three delay classes --------------------------
-    def requeue_failed_event(self, event: dict) -> str:
-        """E1 batch-failure demotion (src/main.ts:486-507): re-enqueue
-        a batch-failed event for unitary retry — ``__is_single_retry:
-        true``, 2 s initial delay, 5 attempts, exponential backoff
-        base 3 s."""
-        return self.add_job(
-            {**event, "__is_single_retry": True},
-            delay_ms=FAIL_DELAY_MS,
-            attempts=FAIL_ATTEMPTS,
-            backoff_base_ms=FAIL_BACKOFF_BASE_MS,
-        )
-
-    def requeue_bulker_full(self, event: dict) -> str:
-        """Bulker-full backpressure (src/main.ts:393-415): 5 s delay;
-        the attempt counter rides the DATA (``__bulker_full_attempts``)
-        — the reference deliberately leaves Bull ``attempts`` unset
-        because retry happens by re-accepting the event."""
-        n = int(event.get("__bulker_full_attempts") or 0) + 1
-        return self.add_job(
-            {**event, "__bulker_full_attempts": n},
-            delay_ms=BULKER_FULL_DELAY_MS,
-        )
-
-    def requeue_emergency_busy(self, event: dict, rand01: float | None = None) -> str:
-        """Emergency-client-busy (src/main.ts:300-320): re-enqueue
-        with a random 2-11 s delay (``1000 + (1..10)*1000`` ms —
-        randomness injectable for tests); the attempt counter rides
-        the DATA (``__single_retry_attempts``)."""
-        if rand01 is None:
-            import random
-
-            rand01 = random.random()
-        delay_ms = 1000 + (int(rand01 * 10) + 1) * 1000
-        n = int(event.get("__single_retry_attempts") or 0) + 1
-        return self.add_job(
-            {**event, "__single_retry_attempts": n}, delay_ms=delay_ms
-        )
+            token = job_id
+        self.client.rpush(self.wait_key, token)
+        return token
 
     def run_once(self, engine, batch_id: int | str | None = None):
         """One poll -> process -> ack cycle against an ``IngestEngine``.
@@ -572,37 +413,3 @@ class RedisBullSource:
         except ValueError:
             return None
         return envelope if isinstance(envelope, dict) else None
-
-    def _write_bull_job(
-        self,
-        data: dict,
-        *,
-        name: str = "__default__",
-        attempts: int = 1,
-        backoff_base_ms: int | None = None,
-    ) -> str:
-        """Write ONLY the job hash in classic-Bull layout (the caller
-        decides whether the id goes to the wait list or the delayed
-        zset). Persists the retry budget the way classic Bull does —
-        ``opts`` JSON (``attempts`` + optional exponential ``backoff``)
-        plus an ``attemptsMade`` counter — so ``retry_job()`` can
-        replay Bull's failed-processor transition (src/main.ts:502-507
-        sets attempts=5, backoff {exponential, 3000})."""
-        job_id = str(self.client.incr(self.id_counter_key))
-        opts: dict = {"attempts": int(attempts)}
-        if backoff_base_ms is not None:
-            opts["backoff"] = {
-                "type": "exponential",
-                "delay": int(backoff_base_ms),
-            }
-        self.client.hset(
-            self._job_key(job_id),
-            mapping={
-                "name": name,
-                "timestamp": str(self.now_ms()),
-                "data": json.dumps(data),
-                "opts": json.dumps(opts),
-                "attemptsMade": "0",
-            },
-        )
-        return job_id

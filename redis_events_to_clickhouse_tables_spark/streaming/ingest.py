@@ -284,17 +284,18 @@ class IngestEngine:
     def retry_dead_letters(self, max_attempts: int = 5) -> IngestReport:
         """E2/E3: replay dead-lettered events back into their tables.
 
-        The reference re-enqueues failed events flagged
-        ``__is_single_retry`` and inserts them through the bulk path's
-        insert and schema-evolution client, with Bull retrying up to 5
-        attempts (src/main.ts:284-363, :482-511). Here the DLQ rows
-        under the attempt ceiling are parsed as one batch and written
-        like a tick: ``normalize_batch``, then ``_flush`` per table. A
-        table that fails again gets its rows back with ``attempts`` + 1,
-        or dropped for non-critical types (E4); rows at the ceiling stay
-        parked (poison). E3's busy-client mutex has no equivalent; its
-        attempt counter is kept. An interruption aborts the replay and
-        leaves the DLQ untouched.
+        The DLQ replaces the reference's re-enqueue, which puts failed
+        events back on the Redis queue flagged ``__is_single_retry`` and
+        inserts them through the bulk path's insert and schema-evolution
+        client, with Bull retrying up to 5 attempts (src/main.ts:284-363,
+        :482-511); the Redis source here never re-enqueues. Instead the
+        DLQ rows under the attempt ceiling are parsed as one batch and
+        written like a tick: ``normalize_batch``, then ``_flush`` per
+        table. A table that fails again gets its rows back with
+        ``attempts`` + 1, or dropped for non-critical types (E4); rows
+        at the ceiling stay parked (poison). E3's busy-client mutex has
+        no equivalent; its attempt counter is kept. An interruption
+        aborts the replay and leaves the DLQ untouched.
 
         Each dead-letter write group (one ``_dead_letter`` call: its
         ``target_table`` and ``dead_lettered_at``) is replayed as its own
@@ -390,8 +391,10 @@ class IngestEngine:
         """Write one event type's rows of ``batch`` to its table (P8,
         then a CDC merge when they carry every ``upsert_keys`` column,
         else an evolving append) in the configured layout, idempotent
-        per ``batch_id``. Returns None once written, or the error for
-        the caller to dead-letter (E1); an interruption re-raises."""
+        per ``batch_id``: a replay of a committed id is neither counted
+        in ``report.tables`` nor traced. Returns None once written or
+        skipped, or the error for the caller to dead-letter (E1); an
+        interruption re-raises."""
         try:
             t_append = time.perf_counter()
             rows = batch.finish(etype)
@@ -404,7 +407,7 @@ class IngestEngine:
             if keys and all(k in rows.columns for k in keys):
                 # CDC mode: MERGE on the key tuple (last-write-wins;
                 # store.upsert docstring)
-                self.store.upsert(
+                written = self.store.upsert(
                     rows,
                     etype,
                     keys=keys,
@@ -413,7 +416,7 @@ class IngestEngine:
                     sort_by=self.config.table_sort_by,
                 )
             else:
-                self.store.write(
+                written = self.store.write(
                     rows,
                     etype,
                     nullable_new=self.config.altered_column_nullable,
@@ -423,6 +426,8 @@ class IngestEngine:
                     coalesce_to=coalesce_to,
                 )
             self._phase(report, "append", time.perf_counter() - t_append)
+            if written is None:  # a replay: the commit log skipped it
+                return None
             with self._lock:
                 report.tables[etype] = report.tables.get(etype, 0) + n
             self._trace(

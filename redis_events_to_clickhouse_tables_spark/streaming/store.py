@@ -247,14 +247,16 @@ class TableStore:
         partition_by: tuple[str, ...] | None = None,
         sort_by: tuple[str, ...] | None = None,
         coalesce_to: int | None = None,
-    ) -> T.StructType:
-        """Append a batch, evolving the table schema to fit.
+    ) -> T.StructType | None:
+        """Append a batch, evolving the table schema to fit. Returns the
+        committed schema, or None when the batch was a replay.
 
         - ``batch_id``: idempotent commit — a batch id already in the
-          table's commit log is skipped entirely, so a ``foreachBatch``
-          replay after a crash never double-inserts (the exactly-once
-          half the reference approximates by clearing its prepared
-          state before exec, clickhouse-batch-client.class.ts:152-154).
+          table's commit log is skipped entirely (None), so a
+          ``foreachBatch`` replay after a crash never double-inserts
+          (the exactly-once half the reference approximates by clearing
+          its prepared state before exec,
+          clickhouse-batch-client.class.ts:152-154).
         - ``partition_by``: directory partitioning, fixed at table
           creation (later values are ignored in favor of the recorded
           layout) — the scale analog of a time-partitioned MergeTree;
@@ -275,7 +277,7 @@ class TableStore:
                     "committed_batches": [],
                 }
             elif batch_id is not None and str(batch_id) in m["committed_batches"]:
-                return existing
+                return None
             target = merge_schemas(existing, df.schema, nullable_new=nullable_new)
             m = _logged({**m, "schema": target.jsonValue()}, batch_id)
 
@@ -403,14 +405,14 @@ class TableStore:
         batch_id: int | str | None = None,
         partition_by: tuple[str, ...] | None = None,
         sort_by: tuple[str, ...] | None = None,
-    ) -> int:
+    ) -> int | None:
         """MERGE (last-write-wins by key): rows in ``df`` replace
         existing rows with the same key tuple; unmatched rows append.
-        Returns the number of rows replaced. The ReplacingMergeTree
-        analog for this store — the reference's target engine models
-        upsert exactly this way (insert + replace-on-merge by ORDER BY
-        key), this does it in one versioned rewrite that commits the
-        manifest once. Idempotent per ``batch_id`` via the same commit
+        Returns the number of rows replaced, or None when the merge was
+        a replay. The ReplacingMergeTree analog for this store — the
+        reference's target engine models upsert exactly this way
+        (insert + replace-on-merge by ORDER BY key), this does it in one
+        versioned rewrite that commits the manifest once. Idempotent per ``batch_id`` via the same commit
         log as ``write`` (a replayed merge is a no-op; the creating
         merge is a ``write`` under the same tag).
 
@@ -449,7 +451,7 @@ class TableStore:
                 )
                 return 0
             if tag is not None and tag in m["committed_batches"]:
-                return 0
+                return None
             existing = self.read(table)
             # consumed by 4 downstream plans (review r5)
             incoming = dedupe(_align(df, existing.schema)).persist()

@@ -40,6 +40,19 @@ def test_routing_and_insert(spark, tmp_path):
     )
 
 
+def test_replayed_batch_is_neither_counted_nor_traced(spark, tmp_path):
+    """A batch id already in the table's commit log writes nothing: the
+    replay's report counts no rows and the trace holds one insert."""
+    engine, store = _engine(spark, tmp_path)
+    raw = _raw(spark, [{"event_type": "t", "x": 1}, {"event_type": "t", "x": 2}])
+    assert engine.process_raw_batch(raw, batch_id=3).tables == {"t": 2}
+    assert engine.process_raw_batch(raw, batch_id=3).tables == {}
+    trace = (store.root / "_trace.jsonl").read_text().splitlines()
+    inserts = [e for e in map(json.loads, trace) if e["event"] == "insert"]
+    assert [e["table"] for e in inserts] == ["t"]
+    assert store.read("t").count() == 2
+
+
 def test_missing_routing_key_dropped(spark, tmp_path):
     # F1: no event_type value -> logged + dropped
     engine, store = _engine(spark, tmp_path)

@@ -26,7 +26,6 @@ class FakeRedis:
         self.lists: dict[str, list[bytes]] = {}
         self.hashes: dict[str, dict[bytes, bytes]] = {}
         self.counters: dict[str, int] = {}
-        self.zsets: dict[str, dict[bytes, float]] = {}
 
     def _l(self, key) -> list[bytes]:
         return self.lists.setdefault(key, [])
@@ -90,41 +89,10 @@ class FakeRedis:
     def delete(self, *keys):
         n = 0
         for key in keys:
-            n += int(
-                key in self.hashes or key in self.lists or key in self.zsets
-            )
+            n += int(key in self.hashes or key in self.lists)
             self.hashes.pop(key, None)
             self.lists.pop(key, None)
-            self.zsets.pop(key, None)
         return n
-
-    # zset commands (delayed-job set) — redis-py semantics: members
-    # bytes out, ordered by (score, member)
-    def zadd(self, key, mapping):
-        z = self.zsets.setdefault(key, {})
-        added = 0
-        for member, score in mapping.items():
-            m = self._b(member)
-            added += int(m not in z)
-            z[m] = float(score)
-        return added
-
-    def zrangebyscore(self, key, lo, hi):
-        lo = float("-inf") if lo in ("-inf", b"-inf") else float(lo)
-        hi = float("inf") if hi in ("+inf", b"+inf") else float(hi)
-        z = self.zsets.get(key, {})
-        return [
-            m
-            for m, s in sorted(z.items(), key=lambda kv: (kv[1], kv[0]))
-            if lo <= s <= hi
-        ]
-
-    def zrem(self, key, *members):
-        z = self.zsets.get(key, {})
-        return sum(int(z.pop(self._b(m), None) is not None) for m in members)
-
-    def zcard(self, key):
-        return len(self.zsets.get(key, {}))
 
 
 def _event(i, etype="event_session", **extra):
@@ -426,6 +394,38 @@ def test_bull_mode_poll_ack_parity_with_payload_mode(spark):
     assert fake.llen("bull:q:processing:worker-1") == 0
     for job_id in ids:
         assert fake.hgetall(f"bull:q:{job_id}") == {}  # hash deleted
+
+
+class _Recording:
+    """Forwards every command to a ``FakeRedis`` and logs its name."""
+
+    def __init__(self, inner):
+        self.inner = inner
+        self.calls: list[str] = []
+
+    def __getattr__(self, name):
+        self.calls.append(name.upper())
+        return getattr(self.inner, name)
+
+
+@pytest.mark.parametrize("wire_format", ["payload", "bull"])
+def test_poll_is_one_lmove_per_job_plus_one(spark, wire_format):
+    """The delivery protocol's shape: a poll that drains n < max_batch
+    jobs issues n + 1 LMOVEs (the last finds the wait list empty) and,
+    in bull format, one HGETALL per job for its payload; nothing else."""
+    fake = FakeRedis()
+    n = 3
+    for i in range(n):
+        event = {"event_type": "event_session", "n": i}
+        if wire_format == "bull":
+            _add_bull_job(fake, "q", event)
+        else:
+            fake.rpush("bull:q:wait", json.dumps(event))
+    client = _Recording(fake)
+    src = _source(spark, client, wire_format=wire_format, max_batch=10)
+    assert src.poll().count() == n
+    per_job = ["LMOVE", "HGETALL"] if wire_format == "bull" else ["LMOVE"]
+    assert client.calls == per_job * n + ["LMOVE"]
 
 
 def test_bull_mode_crash_salvage_redelivers_by_id(spark):

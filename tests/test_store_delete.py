@@ -99,7 +99,7 @@ def test_upsert_last_write_wins(spark, tmp_path):
     assert after.filter(F.col("event_id") == 1000).count() == 1
     # replayed merge (same batch id): no-op, no version churn
     v = st.data_dir("events").name
-    assert st.upsert(upd, "events", keys=("event_id",), batch_id=1) == 0
+    assert st.upsert(upd, "events", keys=("event_id",), batch_id=1) is None
     assert st.data_dir("events").name == v
     assert st.read("events").count() == 301
 
@@ -198,6 +198,6 @@ def test_upsert_creating_batch_dedupes_and_is_idempotent(spark, tmp_path):
     assert rows == {7: "b", 8: "c"}  # greatest row won, one row per key
     # replay of the CREATING batch: recognized, no second merge
     v = st.data_dir("t").name
-    assert st.upsert(up, "t", keys=("id",), batch_id=0) == 0
+    assert st.upsert(up, "t", keys=("id",), batch_id=0) is None
     assert st.data_dir("t").name == v
     assert {r["id"]: r["user"] for r in st.read("t").collect()} == rows
