@@ -34,20 +34,10 @@ class IngestConfig:
     # receives (df) post-normalization, returns df. The default adds
     # timestamp = received_at (reference: src/transform.ts:9-12).
     transform: Callable | None = None
-    # reserved/bookkeeping keys dropped from payloads (P1)
-    # (reference: clickhouse-batch-client.class.ts:197-205)
-    reserved_keys: tuple[str, ...] = (
-        "__is_single_retry",
-        "__single_retry_attempts",
-        "__is_from_old_queue",
-        "__bulker_full_attempts",
-        "__received_at",
-    )
     # storage layout fixed at table creation: directory partitioning
-    # (scale addition; the reference has none) and in-file sort order
-    # (the MergeTree ORDER BY sent_at analog, D2)
+    # (scale addition; the reference has none). The in-file sort order
+    # is always sent_at (streaming/ingest.py _SORT_BY, D2).
     table_partition_by: tuple[str, ...] = ()
-    table_sort_by: tuple[str, ...] = ("sent_at",)
     # CDC mode (scale addition; the reference appends only): when set,
     # batches MERGE into their table on this key tuple (last-write-wins
     # — the ReplacingMergeTree analog) instead of appending. Incoming
@@ -69,13 +59,6 @@ class IngestConfig:
     # ".failedsingle.error.log", ... — the outputSuffix values of
     # src/main.ts:305-491).
     trace_path: str | None = None
-    # small-files guard (scale addition): target rows per written file;
-    # the per-table append coalesces its partitions down to
-    # ceil(batch_rows / target) before writing, so a 20k-row
-    # micro-batch lands as ONE parquet file instead of one per shuffle
-    # partition — the classic small-files failure at 100 TB (and the
-    # MergeTree too-many-parts analog). 0 disables.
-    target_rows_per_file: int = 1_000_000
 
     @classmethod
     def from_env(cls, env: dict[str, str] | None = None) -> "IngestConfig":

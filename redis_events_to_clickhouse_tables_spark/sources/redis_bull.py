@@ -28,9 +28,9 @@ recognizable by a job timestamp in SECONDS (string length <= 10,
 where ms timestamps are >= 13, main.ts:428) under a configured job
 name — stamps ``__received_at`` on first sight, re-enqueues the
 payload tagged ``__is_from_old_queue: true`` (a reserved key the
-normalizer drops, config.py:42, after lineage extraction), and
-removes the legacy job. ``salvage_old_queue()`` is that loop over
-the failed list.
+normalizer drops, streaming/normalize.py ``_RESERVED_KEYS``, after
+lineage extraction), and removes the legacy job.
+``salvage_old_queue()`` is that loop over the failed list.
 
 Wire formats — ``wire_format`` selects the byte layout (both share
 the exact same at-least-once poll/ack/salvage protocol):

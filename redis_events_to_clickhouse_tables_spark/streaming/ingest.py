@@ -56,6 +56,15 @@ from .normalize import NormalizedBatch, normalize_batch, normalize_events  # noq
 from .store import TableStore, swap_dirs
 
 DLQ_TABLE = "_dlq"
+# in-file sort order of every table (the MergeTree ORDER BY sent_at
+# analog, D2)
+_SORT_BY = ("sent_at",)
+# small-files guard (scale addition): the per-table append coalesces its
+# partitions down to ceil(batch_rows / this) before writing, so a
+# 20k-row micro-batch lands as ONE parquet file instead of one per
+# shuffle partition — the classic small-files failure at 100 TB (and
+# the MergeTree too-many-parts analog)
+_TARGET_ROWS_PER_FILE = 1_000_000
 
 # Spark failure shapes that signal an interrupted/cancelled job (query
 # stop, context shutdown) rather than a bad batch — see the E1 catch.
@@ -401,8 +410,7 @@ class IngestEngine:
             # the aggregate's count holds unless a custom P8 transform
             # changes the rows
             n = rows.count() if self.config.transform else batch.decisions[etype].n_rows
-            target = self.config.target_rows_per_file
-            coalesce_to = max(1, -(-n // target)) if target and n else None
+            coalesce_to = -(-n // _TARGET_ROWS_PER_FILE) if n else None
             keys = self.config.upsert_keys
             if keys and all(k in rows.columns for k in keys):
                 # CDC mode: MERGE on the key tuple (last-write-wins;
@@ -413,7 +421,7 @@ class IngestEngine:
                     keys=keys,
                     batch_id=batch_id,
                     partition_by=self.config.table_partition_by,
-                    sort_by=self.config.table_sort_by,
+                    sort_by=_SORT_BY,
                 )
             else:
                 written = self.store.write(
@@ -422,7 +430,7 @@ class IngestEngine:
                     nullable_new=self.config.altered_column_nullable,
                     batch_id=batch_id,
                     partition_by=self.config.table_partition_by,
-                    sort_by=self.config.table_sort_by,
+                    sort_by=_SORT_BY,
                     coalesce_to=coalesce_to,
                 )
             self._phase(report, "append", time.perf_counter() - t_append)

@@ -50,6 +50,15 @@ from ..plans.evolution import widen_type
 from ..plans.inference import _is_date_string, sniff_timestamp
 
 SYSTEM_COLUMNS = ("received_at", "sent_at", "message_id")
+# reserved/bookkeeping keys dropped from payloads (P1)
+# (reference: clickhouse-batch-client.class.ts:197-205)
+_RESERVED_KEYS = (
+    "__is_single_retry",
+    "__single_retry_attempts",
+    "__is_from_old_queue",
+    "__bulker_full_attempts",
+    "__received_at",
+)
 # the routing key's column in normalize_batch's frame (snake_case never
 # yields a leading underscore, so no payload column can take the name)
 ROUTE_COLUMN = "__etype"
@@ -90,7 +99,6 @@ def _cfg_expr_sig(cfg: IngestConfig) -> tuple:
     """The cfg fields that influence the P1-P7 expression list."""
     return (
         cfg.event_type_property,
-        tuple(sorted(cfg.reserved_keys)),
         cfg.split_records_as_columns,
         cfg.split_array_items_as_columns,
     )
@@ -234,7 +242,7 @@ def _flatten(df: DataFrame, cfg: IngestConfig, route: bool) -> tuple[DataFrame, 
     renamed = df.toDF(*tmp_names)
 
     # P1: drop routing + bookkeeping keys
-    drop = {cfg.event_type_property, *cfg.reserved_keys}
+    drop = {cfg.event_type_property, *_RESERVED_KEYS}
     payload = [
         (f.name, tmp, f.dataType)
         for f, tmp in zip(df.schema.fields, tmp_names)

@@ -55,20 +55,9 @@ _MAX_TRACKED_BATCHES = 10_000
 
 
 class TableStore:
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str | os.PathLike,
-        retain_versions: int = 1,
-    ):
+    def __init__(self, spark: SparkSession, root: str | os.PathLike):
         self.spark = spark
         self.root = Path(root)
-        # Grace window for in-flight readers: how many SUPERSEDED data
-        # versions survive a commit. 1 (default) keeps exactly the
-        # version being replaced; raise it when readers may lag more
-        # than one maintenance interval behind (Delta/Iceberg
-        # vacuum-retention analog).
-        self.retain_versions = max(1, int(retain_versions))
         self.root.mkdir(parents=True, exist_ok=True)
         self._writers: dict[str, threading.RLock] = {}
         self._writers_guard = threading.Lock()
@@ -162,9 +151,9 @@ class TableStore:
     ) -> Path:
         """Write ``df`` as the table's next data version in its recorded
         layout (``partitionBy`` + ``sortWithinPartitions``), commit
-        ``manifest`` pointing at it, then GC versions older than the
-        ``retain_versions`` grace window; returns the new version's
-        directory. Call with the table's writer lock held.
+        ``manifest`` pointing at it, then GC every version but the one
+        it replaced (the in-flight readers' grace window); returns the
+        new version's directory. Call with the table's writer lock held.
 
         ``touched`` (rows carrying the partition column) prunes the
         rewrite on a single-level partitioned table: only partitions
@@ -208,22 +197,13 @@ class TableStore:
         for d in untouched:
             shutil.copytree(d, new_dir / d.name, dirs_exist_ok=True)
         self._commit(table, {**manifest, "current": new_dir.name})
-        # Version names sort lexicographically (data < data-v000001 <
-        # …), so "newest retain_versions superseded dirs" is a sort.
-        superseded = sorted(
-            (
-                d.name
-                for d in p.iterdir()
-                if d.is_dir()
+        for d in p.iterdir():
+            if (
+                d.is_dir()
                 and (d.name == "data" or d.name.startswith("data-v"))
-                and d.name != new_dir.name
-            ),
-            reverse=True,
-        )
-        keep = {prev, *superseded[: self.retain_versions]}
-        for name in superseded:
-            if name not in keep:
-                shutil.rmtree(p / name, ignore_errors=True)
+                and d.name not in (prev, new_dir.name)
+            ):
+                shutil.rmtree(d, ignore_errors=True)
         return new_dir
 
     # -- read -------------------------------------------------------------

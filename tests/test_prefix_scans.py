@@ -95,3 +95,25 @@ def test_global_rank_desc_sum_cols_matches_chained_prefix(spark):
         for r in bucketed_prefix_sums(ranked, "r", ["c"], n_buckets=5).collect()
     }
     assert chained == got
+
+
+def test_prefix_sums_all_null_bucket_adds_zero(spark):
+    """An all-NULL bucket adds 0 to later buckets' offsets, the rule
+    global_rank_desc already applies to its sum_cols; rows whose running
+    frame holds only NULLs stay NULL, exactly as in the plain window."""
+    from pyspark.sql import Window
+
+    df = _frame(spark, [(d, None if d < 50 else 1) for d in range(100)])
+    got = {
+        r["d"]: r["cum_x"]
+        for r in bucketed_prefix_sums(df, "d", ["x"], n_buckets=4).collect()
+    }
+    w = Window.orderBy("d").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    want = {
+        r["d"]: r["cum_x"]
+        for r in df.withColumn("cum_x", F.sum("x").over(w)).collect()
+    }
+    assert want == {d: None if d < 50 else d - 49 for d in range(100)}
+    assert got == want

@@ -278,24 +278,6 @@ def test_flip_sweeps_stale_pointer_temps(spark, tmp_path):
     assert store.read("t").count() == 1
 
 
-def test_version_retention_config(spark, tmp_path):
-    """retain_versions widens the reader grace window: with 2, a flip
-    keeps the active dir plus the two newest superseded versions."""
-    store = TableStore(spark, tmp_path / "warehouse", retain_versions=2)
-    for i in range(3):
-        store.write(_df(spark, [(i, "d")]), "t", batch_id=i)
-    store.compact("t")  # data -> data-v000001 (keep data)
-    store.compact("t")  # -> data-v000002 (keep v1 + data)
-    store.compact("t")  # -> data-v000003 (keep v2 + v1; GC data)
-    p = store.table_path("t")
-    versions = sorted(
-        d.name for d in p.iterdir()
-        if d.is_dir() and (d.name == "data" or d.name.startswith("data-v"))
-    )
-    assert versions == ["data-v000001", "data-v000002", "data-v000003"]
-    assert store.read("t").count() == 3
-
-
 def test_empty_shard_store_reads_cleanly(spark, tmp_path):
     """ShardStore before any batch: documents()/manifest() must return
     empty frames with the canonical schema, not throw Unable-to-infer
@@ -310,9 +292,8 @@ def test_empty_shard_store_reads_cleanly(spark, tmp_path):
 
 
 def test_small_files_guard_coalesces_appends(spark, tmp_path):
-    """A micro-batch below target_rows_per_file lands as ONE data file
-    per table (the small-files / too-many-parts guard); disabling the
-    target (0) keeps the natural partitioning."""
+    """A micro-batch below the ingest's target rows per file lands as
+    ONE data file per table (the small-files / too-many-parts guard)."""
     import json as _json
 
     from pyspark.sql import functions as F
@@ -346,18 +327,6 @@ def test_small_files_guard_coalesces_appends(spark, tmp_path):
     ]
     assert len(files) == 1, files
     assert store.read("event_small").count() == 2000
-
-    store2 = TableStore(spark, tmp_path / "w2")
-    IngestEngine(
-        spark, store2, IngestConfig(target_rows_per_file=0)
-    ).process_raw_batch(raw, 1)
-    files2 = [
-        p
-        for p in (tmp_path / "w2" / "event_small" / "data").rglob("*.parquet")
-        if p.is_file()
-    ]
-    assert len(files2) > 1, files2
-    assert store2.read("event_small").count() == 2000
 
 
 def test_concurrent_writers_of_one_table_keep_every_row(spark, tmp_path):
