@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .lineage import model_checkpoint
+
 LOCAL_FINISH_MAX_EDGES = 4_000_000
 
 _MAX_ROUNDS = 25
@@ -143,13 +145,15 @@ def connected_components(
         lut = merged.select(
             F.col("doc_id").alias("l_doc"), F.col("label").alias("l_label")
         )
-        # localCheckpoint, not persist (r10): persist leaves the round's
+        # checkpoint, not persist (r10): persist leaves the round's
         # LOGICAL plan chained through every earlier round, so Catalyst
         # re-analysis grows per round; the checkpoint keeps each round's
         # plan flat and the convergence probe reads materialized rows
-        new_labels = merged.join(lut, merged.label == lut.l_doc).select(
-            "doc_id", F.col("l_label").alias("label")
-        ).localCheckpoint(eager=True)
+        new_labels = model_checkpoint(
+            merged.join(lut, merged.label == lut.l_doc).select(
+                "doc_id", F.col("l_label").alias("label")
+            )
+        )
         new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
         labels.unpersist()
         labels = new_labels

@@ -25,6 +25,12 @@ from ..functions.temporal import epoch_us
 from ..registry import query
 from ..session import tune
 from ..sources.tables import table
+from ..streaming.histogram import (
+    BIN_WIDTH,
+    TOP_BIN,
+    bin_of,
+    weekly_percentile_bins,
+)
 
 
 @query(
@@ -1148,10 +1154,6 @@ def customer_pareto_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Mergeable histogram rollup: daily bins -> weekly percentiles
 # --------------------------------------------------------------------
 
-_HROLL_W = 25  # bin width over the observed 0..500 value range
-_HROLL_TOP = 19  # top bin open-ended
-
-
 _SQL_HIST_ROLLUP = f"""
     WITH days AS (
       SELECT CAST(date_trunc('week', ts) AS TIMESTAMP) AS week,
@@ -1159,8 +1161,8 @@ _SQL_HIST_ROLLUP = f"""
       FROM events),
     db AS (
       SELECT week, day,
-             LEAST(CAST(FLOOR(value / {_HROLL_W}) AS BIGINT),
-                   {_HROLL_TOP}) AS bin,
+             LEAST(CAST(FLOOR(value / {BIN_WIDTH}) AS BIGINT),
+                   {TOP_BIN}) AS bin,
              COUNT(*) AS cnt
       FROM days GROUP BY 1, 2, 3),
     wb AS (
@@ -1191,10 +1193,10 @@ _SQL_HIST_ROLLUP = f"""
       FROM rnk GROUP BY week)
     SELECT pb.week, tot.n, pb.p50_bin, pb.p90_bin,
            ex.p50_exact, ex.p90_exact,
-           pb.p50_bin = LEAST(CAST(FLOOR(ex.p50_exact / {_HROLL_W})
-                                   AS BIGINT), {_HROLL_TOP}) AS p50_in_bin,
-           pb.p90_bin = LEAST(CAST(FLOOR(ex.p90_exact / {_HROLL_W})
-                                   AS BIGINT), {_HROLL_TOP}) AS p90_in_bin
+           pb.p50_bin = LEAST(CAST(FLOOR(ex.p50_exact / {BIN_WIDTH})
+                                   AS BIGINT), {TOP_BIN}) AS p50_in_bin,
+           pb.p90_bin = LEAST(CAST(FLOOR(ex.p90_exact / {BIN_WIDTH})
+                                   AS BIGINT), {TOP_BIN}) AS p90_in_bin
     FROM pb JOIN tot USING (week) JOIN ex USING (week)
     ORDER BY pb.week
 """
@@ -1218,7 +1220,9 @@ def sketch_histogram_weekly_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     (``exact_quantile_values_per_group`` — never a whole-group window
     sort) and the invariant columns the oracle asserts: the exact
     percentile always lands inside the histogram's answer bin, by
-    construction of cumulative counts.
+    construction of cumulative counts. The bin grid (``bin_of``) and
+    the weekly step (``weekly_percentile_bins``) are the streaming
+    rollup's, ``streaming.histogram``.
     """
     tune(spark)
     from ..functions.quantiles import exact_quantile_values_per_group
@@ -1229,31 +1233,8 @@ def sketch_histogram_weekly_rollup(spark: SparkSession, sf_dir: str) -> DataFram
         F.to_date("ts").alias("day"),
         "value",
     )
-    bin_of = lambda c: F.least(  # noqa: E731
-        F.floor(c / _HROLL_W).cast("long"), F.lit(_HROLL_TOP).cast("long")
-    )
     db = days.groupBy("week", "day", bin_of(F.col("value")).alias("bin")).agg(
         F.count(F.lit(1)).alias("cnt")
-    )
-    wb = db.groupBy("week", "bin").agg(F.sum("cnt").cast("long").alias("w_cnt"))
-    tot = wb.groupBy("week").agg(F.sum("w_cnt").cast("long").alias("n"))
-    cum = wb.withColumn(
-        "cum",
-        F.sum("w_cnt").over(Window.partitionBy("week").orderBy("bin")),
-    )
-    pb = (
-        cum.join(F.broadcast(tot), "week")
-        .groupBy("week")
-        .agg(
-            F.min(
-                F.when(F.col("cum") >= F.expr("(n + 1) div 2"), F.col("bin"))
-            ).alias("p50_bin"),
-            F.min(
-                F.when(
-                    F.col("cum") >= F.expr("(9 * n + 9) div 10"), F.col("bin")
-                )
-            ).alias("p90_bin"),
-        )
     )
     ex = (
         exact_quantile_values_per_group(
@@ -1273,7 +1254,7 @@ def sketch_histogram_weekly_rollup(spark: SparkSession, sf_dir: str) -> DataFram
         )
     )
     return (
-        pb.join(F.broadcast(tot), "week")
+        weekly_percentile_bins(db)
         .join(F.broadcast(ex), "week")
         .select(
             "week",

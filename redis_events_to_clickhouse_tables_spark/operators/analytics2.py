@@ -42,6 +42,53 @@ _SQL_CP_EDGES = f"""
 """
 
 
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(s, d): the symmetrized co-purchase edge list. Part pairs bought
+    together in at least ``_CP_SUPPORT`` orders (one order-keyed self
+    join of the distinct (order, part) set), each pair once per
+    orientation, so every vertex's out-edges are its neighbors."""
+    li = table(spark, sf_dir, "lineitem")
+    op = li.select(
+        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
+    ).distinct()
+    a = op.select("o", F.col("p").alias("pa"))
+    b = op.select("o", F.col("p").alias("pb"))
+    e0 = (
+        a.join(b, "o")
+        .filter(F.col("pa") < F.col("pb"))
+        .groupBy("pa", "pb")
+        .agg(F.count(F.lit(1)).cast("long").alias("support"))
+        .filter(F.col("support") >= _CP_SUPPORT)
+    )
+    return e0.select(
+        F.col("pa").alias("s"), F.col("pb").alias("d")
+    ).unionAll(e0.select(F.col("pb").alias("s"), F.col("pa").alias("d")))
+
+
+def _copurchase_edge_leaf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`_copurchase_edges`, materialized once and read back as a
+    lineage leaf, for the queries that reference the graph many times.
+
+    Materialize first: several downstream branches (degrees, wedge
+    sides, the adjacency anti-join, both endpoint joins) consume the
+    frame, and an unmaterialized graph would recompute the order-pair
+    self-join once per branch (measured 4x wall at sf0.1). Then
+    checkpoint (r11, the er_part hybrid pattern): six downstream
+    references each re-embedded the ~10 KB order-pair self-join
+    subtree into a 70 KB consumer plan and Catalyst planning dominated
+    the action (1.75 s over a ~3.5k-row cached graph). Checkpointing
+    the ALREADY-CACHED frame is one cheap cache scan, and the stats
+    loss is moot: every downstream join carries an explicit broadcast
+    hint. The cache is released at once; every reference reads the
+    leaf.
+    """
+    cached = _copurchase_edges(spark, sf_dir).persist()
+    cached.count()
+    edges = model_checkpoint(cached)
+    cached.unpersist()
+    return edges
+
+
 @query(
     "graph_copurchase_jaccard_linkpred",
     oracle=_SQL_CP_EDGES
@@ -86,39 +133,7 @@ def graph_copurchase_jaccard_linkpred(
     count with id tiebreaks.
     """
     tune(spark)
-    li = table(spark, sf_dir, "lineitem")
-    op = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a = op.select("o", F.col("p").alias("pa"))
-    b = op.select("o", F.col("p").alias("pb"))
-    e0 = (
-        a.join(b, "o")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).cast("long").alias("support"))
-        .filter(F.col("support") >= _CP_SUPPORT)
-    )
-    edges = (
-        e0.select(F.col("pa").alias("s"), F.col("pb").alias("d"))
-        .unionAll(e0.select(F.col("pb").alias("s"), F.col("pa").alias("d")))
-        .persist()
-    )
-    # materialize NOW: four downstream branches (deg, wedge sides,
-    # adjacency anti-join) consume this frame inside one action, and
-    # an unmaterialized cache would recompute the order-pair self-join
-    # once per branch (measured 4x wall at sf0.1)
-    edges.count()
-    # post-materialization leaf (r11, the er_part hybrid pattern): six
-    # downstream references each re-embedded the ~10 KB order-pair
-    # self-join subtree into a 70 KB consumer plan and Catalyst
-    # planning dominated the action (1.75 s over a ~3.5k-row cached
-    # graph). Checkpointing the ALREADY-CACHED frame is one cheap
-    # cache scan, and the stats loss is moot: every downstream join
-    # carries an explicit broadcast hint.
-    cached = edges
-    edges = model_checkpoint(cached)
-    cached.unpersist()  # every reference below reads the leaf
+    edges = _copurchase_edge_leaf(spark, sf_dir)
     deg = edges.groupBy(F.col("s").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("deg")
     )
@@ -213,28 +228,7 @@ def graph_copurchase_assortativity(
     (sqrt of a product of two correctly-rounded doubles).
     """
     tune(spark)
-    li = table(spark, sf_dir, "lineitem")
-    op = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a = op.select("o", F.col("p").alias("pa"))
-    b = op.select("o", F.col("p").alias("pb"))
-    e0 = (
-        a.join(b, "o")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).cast("long").alias("support"))
-        .filter(F.col("support") >= _CP_SUPPORT)
-    )
-    edges = (
-        e0.select(F.col("pa").alias("s"), F.col("pb").alias("d"))
-        .unionAll(e0.select(F.col("pb").alias("s"), F.col("pa").alias("d")))
-        .persist()
-    )
-    edges.count()  # same multi-consumer materialization as linkpred
-    cached = edges
-    edges = model_checkpoint(cached)  # same post-cache leaf as linkpred
-    cached.unpersist()
+    edges = _copurchase_edge_leaf(spark, sf_dir)
     deg = edges.groupBy(F.col("s").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("deg")
     )
@@ -741,22 +735,7 @@ def graph_copurchase_brand_conductance(
     division.
     """
     tune(spark)
-    li = table(spark, sf_dir, "lineitem")
-    op = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a = op.select("o", F.col("p").alias("pa"))
-    b = op.select("o", F.col("p").alias("pb"))
-    e0 = (
-        a.join(b, "o")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).cast("long").alias("support"))
-        .filter(F.col("support") >= _CP_SUPPORT)
-    )
-    edges = e0.select(
-        F.col("pa").alias("s"), F.col("pb").alias("d")
-    ).unionAll(e0.select(F.col("pb").alias("s"), F.col("pa").alias("d")))
+    edges = _copurchase_edges(spark, sf_dir)
     p = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     ps = p.select(F.col("p_partkey").alias("s"), F.col("p_brand").alias("bs"))
     pd_ = p.select(

@@ -22,6 +22,7 @@ from ..functions.temporal import epoch_us
 from ..registry import query
 from ..session import tune
 from ..sources.tables import table
+from ..streaming.windows import windowed_event_counts
 
 _EVENT_TYPES = ("click", "view", "purchase", "signup", "error")
 
@@ -74,23 +75,14 @@ def events_flagship_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling event-time windows (batch image of a streaming windowed agg).
 
-    Uses ``F.window`` — the same operator a ``readStream`` variant uses
-    with a watermark (SURVEY §2.9 Layer-B consequence).
+    The query is ``streaming.windows.windowed_event_counts``, the
+    function a ``readStream`` variant runs after its watermark (SURVEY
+    §2.9 Layer-B consequence), without the window end.
     """
     tune(spark)
     e = table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(dec("value", 12)).cast("double").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+    return windowed_event_counts(e).select(
+        "window_start", "event_type", "n_events", "total_value"
     )
 
 
@@ -271,25 +263,13 @@ def events_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     event lands in two overlapping windows. The oracle derives window
     membership from first principles (epoch floor-div to the slide,
     back-shifted k slides, bounded by window length) — pinning Spark's
-    epoch-aligned window start semantics. Streaming form: identical
-    expression after withWatermark.
+    epoch-aligned window start semantics. The query is
+    ``streaming.windows.windowed_event_counts``, which a stream runs
+    after withWatermark.
     """
     tune(spark)
     e = table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(dec("value", 12)).cast("double").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
+    return windowed_event_counts(e, "1 hour", "30 minutes")
 
 
 @query(

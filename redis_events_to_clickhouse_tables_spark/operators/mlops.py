@@ -286,6 +286,22 @@ _CAL_BINS = """
 """
 
 
+def _calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(k, n, s): the Spark twin of ``_CAL_BINS`` — per predicted
+    percentage k (the discount), ``n`` lineitems, ``s`` returned."""
+    li = table(spark, sf_dir, "lineitem").select(
+        F.round(F.col("l_discount") * 100).cast("long").alias("k"),
+        F.when(F.col("l_returnflag") == "R", 1)
+        .otherwise(0)
+        .cast("long")
+        .alias("pos"),
+    )
+    return li.groupBy("k").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("pos").cast("long").alias("s"),
+    )
+
+
 @query(
     "eval_brier_decomposition",
     oracle=f"""
@@ -344,17 +360,7 @@ def eval_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan depends on corpus size.
     """
     tune(spark)
-    li = table(spark, sf_dir, "lineitem").select(
-        F.round(F.col("l_discount") * 100).cast("long").alias("k"),
-        F.when(F.col("l_returnflag") == "R", 1)
-        .otherwise(0)
-        .cast("long")
-        .alias("pos"),
-    )
-    bins = li.groupBy("k").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("pos").cast("long").alias("s"),
-    )
+    bins = _calibration_bins(spark, sf_dir)
     tot = bins.agg(
         F.sum("n").cast("long").alias("nn"),
         F.sum("s").cast("long").alias("pp"),
@@ -440,17 +446,7 @@ def eval_expected_calibration_error(
     1-row aggregate.
     """
     tune(spark)
-    li = table(spark, sf_dir, "lineitem").select(
-        F.round(F.col("l_discount") * 100).cast("long").alias("k"),
-        F.when(F.col("l_returnflag") == "R", 1)
-        .otherwise(0)
-        .cast("long")
-        .alias("pos"),
-    )
-    bins = li.groupBy("k").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("pos").cast("long").alias("s"),
-    )
+    bins = _calibration_bins(spark, sf_dir)
     err = F.abs(100 * F.col("s") - F.col("k") * F.col("n"))
     return bins.agg(
         F.sum("n").cast("long").alias("n"),

@@ -297,6 +297,31 @@ def _bucket8(col: str):
     return out
 
 
+def _bucket_pairs(e: DataFrame) -> DataFrame:
+    """Every (vec_a < vec_b) embedding pair sharing a :func:`_bucket8`
+    sign bucket, each side with its vector and norm for
+    :func:`_pair_cosine` — an equi-join on the bucket, never
+    all-pairs."""
+    a = e.select(
+        F.col("vec_id").alias("vec_a"),
+        F.col("embedding").alias("a_emb"),
+        _norm("embedding").alias("a_norm"),
+        _bucket8("embedding").alias("bucket"),
+    )
+    b = e.select(
+        F.col("vec_id").alias("vec_b"),
+        F.col("embedding").alias("b_emb"),
+        _norm("embedding").alias("b_norm"),
+        _bucket8("embedding").alias("bucket"),
+    )
+    return a.join(b, ["bucket"]).filter(F.col("vec_a") < F.col("vec_b"))
+
+
+def _pair_cosine() -> Column:
+    """Cosine of a :func:`_bucket_pairs` row."""
+    return _dot("a_emb", "b_emb") / (F.col("a_norm") * F.col("b_norm"))
+
+
 @query(
     "sim_embedding_neardup",
     oracle=f"""
@@ -326,23 +351,9 @@ def sim_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune(spark)
     e = table(spark, sf_dir, "embeddings")
-    a = e.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("a_emb"),
-        _norm("embedding").alias("a_norm"),
-        _bucket8("embedding").alias("bucket"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("b_emb"),
-        _norm("embedding").alias("b_norm"),
-        _bucket8("embedding").alias("bucket"),
-    )
-    cosine = (_dot("a_emb", "b_emb") / (F.col("a_norm") * F.col("b_norm"))).alias("cosine")
     return (
-        a.join(b, ["bucket"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", cosine)
+        _bucket_pairs(e)
+        .select("vec_a", "vec_b", _pair_cosine().alias("cosine"))
         .filter(F.col("cosine") >= 0.3)
     )
 
@@ -373,20 +384,12 @@ def _km_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _km_assign(vectors: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, v, cid): nearest centroid per vector, WITHOUT a shuffle.
-
-    The K centroids collapse to one array-of-structs row (sorted by
-    cid), broadcast to every vector; a higher-order fold computes the
-    argmin inline. Strict ``<`` keeps the first (lowest-cid) centroid
-    on distance ties — the same order the oracle's ROW_NUMBER
-    ``ORDER BY dist, cid`` picks. Per-row work is K x 3 list dots; the
-    assignment stage is embarrassingly parallel at any scale.
-    """
-    arr = cents.agg(
-        F.sort_array(F.collect_list(F.struct(F.col("cid"), F.col("c")))).alias("cents")
-    )
-    best = F.aggregate(
+def _nearest_cid() -> Column:
+    """The argmin fold over a row's ``cents`` array (cid-sorted
+    (cid, c) structs): the cid of the centroid nearest to ``v`` by
+    :func:`_dist2`. Strict ``<`` keeps the first (lowest-cid) centroid
+    on distance ties."""
+    return F.aggregate(
         F.col("cents"),
         F.struct(
             F.lit(float("inf")).alias("d"), F.lit(-1).cast("int").alias("cid")
@@ -397,8 +400,23 @@ def _km_assign(vectors: DataFrame, cents: DataFrame) -> DataFrame:
         ).otherwise(acc),
         lambda acc: acc["cid"],
     )
+
+
+def _km_assign(vectors: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, v, cid): nearest centroid per vector, WITHOUT a shuffle.
+
+    The K centroids collapse to one array-of-structs row (sorted by
+    cid), broadcast to every vector; the :func:`_nearest_cid` fold
+    computes the argmin inline, keeping the lowest cid on distance ties
+    — the same order the oracle's ROW_NUMBER ``ORDER BY dist, cid``
+    picks. Per-row work is K x 3 list dots; the assignment stage is
+    embarrassingly parallel at any scale.
+    """
+    arr = cents.agg(
+        F.sort_array(F.collect_list(F.struct(F.col("cid"), F.col("c")))).alias("cents")
+    )
     return vectors.crossJoin(F.broadcast(arr)).select(
-        "vec_id", "v", best.alias("cid")
+        "vec_id", "v", _nearest_cid().alias("cid")
     )
 
 
@@ -425,6 +443,28 @@ def _km_update(assigned: DataFrame) -> DataFrame:
             F.array_sort(F.collect_list(F.struct("pos", "x"))), lambda s: s["x"]
         ).alias("c")
     )
+
+
+def _km_fit_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v, cid): every vector assigned to its cluster after
+    ``_KM_ITERS`` deterministic Lloyd rounds (init = the K lowest
+    vec_ids)."""
+    # persist the corpus vectors once: every iteration's centroid
+    # update AND the final assignment scan this frame — without the
+    # persist each k-means round re-reads embeddings.parquet and
+    # re-casts the arrays (VERDICT r8 item 5)
+    v = _km_vectors(spark, sf_dir).persist()
+    cents = v.filter(F.col("vec_id") < _K_CLUSTERS).select(
+        F.col("vec_id").cast("int").alias("cid"), F.col("v").alias("c")
+    )
+    for _ in range(_KM_ITERS):
+        # materialize each round's centroids (K x dims doubles) with a
+        # lineage-cutting checkpoint (r10): the next assignment
+        # broadcasts them, and persist alone left every round's plan
+        # chained through all earlier rounds — Catalyst re-analysis of
+        # the growing tree cost more than the Lloyd compute
+        cents = model_checkpoint(_km_update(_km_assign(v, cents)))
+    return _km_assign(v, cents)
 
 
 def _km_fin_parts(k: int, iters: int) -> list[str]:
@@ -517,22 +557,7 @@ def sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query meets ~1/K of the corpus, the IVF promise.
     """
     tune(spark)
-    # persist the corpus vectors once: every iteration's centroid
-    # update AND the final assignment scan this frame — without the
-    # persist each k-means round re-reads embeddings.parquet and
-    # re-casts the arrays (VERDICT r8 item 5)
-    v = _km_vectors(spark, sf_dir).persist()
-    cents = v.filter(F.col("vec_id") < _K_CLUSTERS).select(
-        F.col("vec_id").cast("int").alias("cid"), F.col("v").alias("c")
-    )
-    for _ in range(_KM_ITERS):
-        # materialize each round's centroids (K x dims doubles) with a
-        # lineage-cutting checkpoint (r10): the next assignment
-        # broadcasts them, and persist alone left every round's plan
-        # chained through all earlier rounds — Catalyst re-analysis of
-        # the growing tree cost more than the Lloyd compute
-        cents = model_checkpoint(_km_update(_km_assign(v, cents)))
-    assigned = _km_assign(v, cents)
+    assigned = _km_fit_assign(spark, sf_dir)
     q = assigned.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("v").alias("q_emb"),
@@ -831,26 +856,15 @@ def _km_assign_long(sub: DataFrame, cents: DataFrame) -> DataFrame:
     """Long-form :func:`_km_assign`: vectors and centroids carry a
     subspace id ``m``; the per-``m`` centroid sets collapse to one
     array row each (sorted by cid — same tie order) and broadcast-join
-    on ``m``. The argmin fold is the identical expression, evaluated
-    per (vec_id, m) — bit-for-bit the same assignment as running
+    on ``m``. The argmin is the same :func:`_nearest_cid` fold,
+    evaluated per (vec_id, m) — bit-for-bit the same assignment as running
     ``_km_assign`` once per subspace, in ONE corpus scan instead of
     ``_PQ_M``."""
     arr = cents.groupBy("m").agg(
         F.sort_array(F.collect_list(F.struct(F.col("cid"), F.col("c")))).alias("cents")
     )
-    best = F.aggregate(
-        F.col("cents"),
-        F.struct(
-            F.lit(float("inf")).alias("d"), F.lit(-1).cast("int").alias("cid")
-        ),
-        lambda acc, ct: F.when(
-            _dist2(F.col("v"), ct["c"]) < acc["d"],
-            F.struct(_dist2(F.col("v"), ct["c"]).alias("d"), ct["cid"].alias("cid")),
-        ).otherwise(acc),
-        lambda acc: acc["cid"],
-    )
     return sub.join(F.broadcast(arr), "m").select(
-        "vec_id", "m", "v", best.alias("cid")
+        "vec_id", "m", "v", _nearest_cid().alias("cid")
     )
 
 
@@ -1287,23 +1301,9 @@ def dedup_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune(spark)
     e = table(spark, sf_dir, "embeddings")
-    a = e.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("a_emb"),
-        _norm("embedding").alias("a_norm"),
-        _bucket8("embedding").alias("bucket"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("b_emb"),
-        _norm("embedding").alias("b_norm"),
-        _bucket8("embedding").alias("bucket"),
-    )
-    cosine = _dot("a_emb", "b_emb") / (F.col("a_norm") * F.col("b_norm"))
     dropped = (
-        a.join(b, ["bucket"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter(cosine >= _SEMDEDUP_TAU)
+        _bucket_pairs(e)
+        .filter(_pair_cosine() >= _SEMDEDUP_TAU)
         .select(F.col("vec_b").alias("vec_id"))
         .distinct()
         .withColumn("__dropped", F.lit(1))
@@ -1492,8 +1492,8 @@ def sim_kmeans_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground-truth labels — the index-quality report that says whether
     the ANN clustering respects the data's semantic structure.
 
-    Reuses the identical deterministic Lloyd pipeline as
-    ``sim_ivf_kmeans_topk`` (same oracle CTE prefix via
+    Runs the deterministic Lloyd pipeline of ``sim_ivf_kmeans_topk``
+    (:func:`_km_fit_assign`; same oracle CTE prefix via
     ``_km_fin_parts``), then: contingency cells and marginals are a
     K x |labels| model-level frame; every entropy/MI log2 is
     floor-quantized per CELL (quantize-the-model doctrine), the dot
@@ -1502,17 +1502,7 @@ def sim_kmeans_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     training inside.
     """
     tune(spark)
-    # persist the corpus vectors once across the Lloyd iterations
-    # (same discipline as sim_ivf_kmeans_topk, VERDICT r8 item 5)
-    v = _km_vectors(spark, sf_dir).persist()
-    cents = v.filter(F.col("vec_id") < _K_CLUSTERS).select(
-        F.col("vec_id").cast("int").alias("cid"), F.col("v").alias("c")
-    )
-    for _ in range(_KM_ITERS):
-        # checkpoint per round (r10): flat per-round plans, see
-        # sim_ivf_kmeans_topk
-        cents = model_checkpoint(_km_update(_km_assign(v, cents)))
-    assigned = _km_assign(v, cents)
+    assigned = _km_fit_assign(spark, sf_dir)
     e = table(spark, sf_dir, "embeddings").select("vec_id", "label")
     cont = model_checkpoint(
         # labels are corpus-sized — a broadcast here would ship the
@@ -1982,7 +1972,8 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("q_emb"), _norm("embedding").alias("q_norm")
         )
     )
-    cand = (
+    # r10: leaf plans for the rounds
+    cand = model_checkpoint(
         e.filter(F.col("vec_id") != 0)
         .crossJoin(q)
         .select(
@@ -1995,7 +1986,6 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("cosine"), "c_id")
         .limit(_MMR_POOL)
-        .localCheckpoint(eager=True)  # r10: leaf plans for the rounds
     )
     ca = cand.select(
         F.col("c_id").alias("x"),
@@ -2004,14 +1994,12 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = cand.select(
         F.col("c_id").alias("y"), F.col("embedding").alias("eb")
     )
-    pc = (
-        ca.join(F.broadcast(cb), F.col("x") != F.col("y"))
-        .select(
+    pc = model_checkpoint(
+        ca.join(F.broadcast(cb), F.col("x") != F.col("y")).select(
             "x",
             "y",
             (_dot("ea", "eb") / (_norm("ea") * _norm("eb"))).alias("cos"),
         )
-        .localCheckpoint(eager=True)
     )
     lam, oml = F.lit(0.7), F.lit(0.3)
     # Greedy rounds materialize ONE row each to the driver (an O(k)
@@ -2122,11 +2110,10 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     # checkpoint (r10): the ground-truth frame feeds both sweep points;
     # a leaf keeps the brute-force lineage out of their plans
-    ex = (
+    ex = model_checkpoint(
         sim_bruteforce_topk(spark, sf_dir)
         .filter(F.col("rk") <= 3)
         .select("q_id", "c_id")
-        .localCheckpoint(eager=True)
     )
     e = table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < _N_QUERIES).select(

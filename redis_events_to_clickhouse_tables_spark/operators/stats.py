@@ -27,7 +27,7 @@ performs).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import DUCKDB_MD5_LONG, md5_long
@@ -147,20 +147,13 @@ _SQL_CHI2 = """
 """
 
 
-@query("stats_chi2_nation_segment", oracle=_SQL_CHI2)
-def stats_chi2_nation_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square statistic for independence of customer nation and
-    market segment, from the contingency table.
-
-    Order-free summation: each cell's (obs-exp)²/exp is a
-    deterministic double, floor-scaled to int64 (x1e6) before the SUM
-    so the reduction is exact and partitioning-independent (summing
-    raw doubles would flap at the ulp level across 1000 executors).
-    Scale: one groupBy over customer to a |nations|x|segments| cell
-    frame; marginals are re-aggregations of that tiny frame,
-    broadcast back — the big table is scanned exactly once.
-    """
-    tune(spark)
+def _chi2_cells(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, Column]:
+    """The nation x segment contingency table as (cells, term): one row
+    per (nk, seg) cell with ``obs``, its marginals ``rtot``/``ctot``
+    and the totals ``n``/``nr``/``nc``; ``term`` is the cell's
+    (obs-exp)^2/exp double."""
     cells = (
         table(spark, sf_dir, "customer")
         .groupBy(
@@ -183,7 +176,25 @@ def stats_chi2_nation_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exp = (F.col("rtot") * F.col("ctot")).cast("double") / F.col("n")
     d = F.col("obs").cast("double") - exp
-    term = d * d / exp
+    return j, d * d / exp
+
+
+@query("stats_chi2_nation_segment", oracle=_SQL_CHI2)
+def stats_chi2_nation_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Chi-square statistic for independence of customer nation and
+    market segment, from the contingency table.
+
+    Order-free summation: each cell's (obs-exp)²/exp is a
+    deterministic double, floor-scaled to int64 (x1e6) before the SUM
+    so the reduction is exact and partitioning-independent (summing
+    raw doubles would flap at the ulp level across 1000 executors).
+    Scale (:func:`_chi2_cells`): one groupBy over customer to a
+    |nations|x|segments| cell frame; marginals are re-aggregations of
+    that tiny frame, broadcast back — the big table is scanned exactly
+    once.
+    """
+    tune(spark)
+    j, term = _chi2_cells(spark, sf_dir)
     return j.agg(
         F.count(F.lit(1)).alias("n_cells"),
         ((F.min("nr") - 1) * (F.min("nc") - 1))
@@ -772,6 +783,31 @@ def stats_winsorized_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KS_A = "1-URGENT"
 _KS_B = "5-LOW"
 
+
+def _ks_value_counts(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """URGENT vs LOW order values in exact int64 cents as (dv, tot):
+    per distinct value its count in each sample (``a``, ``b``), and the
+    1-row sample sizes (``na``, ``nb``)."""
+    o = table(spark, sf_dir, "orders")
+    rows = o.filter(
+        F.col("o_orderpriority").isin(_KS_A, _KS_B)
+    ).select(
+        (dec("o_totalprice", 14) * 100).cast("long").alias("cents"),
+        F.when(F.col("o_orderpriority") == _KS_A, 1).otherwise(0).alias("ia"),
+    )
+    dv = rows.groupBy("cents").agg(
+        F.sum("ia").cast("long").alias("a"),
+        (F.count(F.lit(1)) - F.sum("ia")).cast("long").alias("b"),
+    )
+    tot = dv.agg(
+        F.sum("a").cast("long").alias("na"),
+        F.sum("b").cast("long").alias("nb"),
+    )
+    return dv, tot
+
+
 _SQL_KS = f"""
     WITH rows_ AS (
       SELECT CAST(CAST(o_totalprice AS DECIMAL(14,2)) * 100 AS BIGINT)
@@ -820,22 +856,8 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     from ..functions.ranks import bucketed_prefix_sums
 
-    o = table(spark, sf_dir, "orders")
-    rows = o.filter(
-        F.col("o_orderpriority").isin(_KS_A, _KS_B)
-    ).select(
-        (dec("o_totalprice", 14) * 100).cast("long").alias("cents"),
-        F.when(F.col("o_orderpriority") == _KS_A, 1).otherwise(0).alias("ia"),
-    )
-    dv = rows.groupBy("cents").agg(
-        F.sum("ia").cast("long").alias("a"),
-        (F.count(F.lit(1)) - F.sum("ia")).cast("long").alias("b"),
-    )
+    dv, tot = _ks_value_counts(spark, sf_dir)
     cum = bucketed_prefix_sums(dv, "cents", ["a", "b"])
-    tot = dv.agg(
-        F.sum("a").cast("long").alias("na"),
-        F.sum("b").cast("long").alias("nb"),
-    )
     return (
         cum.crossJoin(F.broadcast(tot))
         .groupBy("na", "nb")
@@ -1073,8 +1095,9 @@ def stats_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     U = #(a > b pairs) + #(ties)/2, computed WITHOUT ranking rows:
     per distinct value v, a_v * (2*cum_b(<v) + b_v) summed — exact
-    int64 via the same ``bucketed_prefix_sums`` scan as the KS test
-    (tied values contribute half in the doubled domain, so arithmetic
+    int64 via a ``bucketed_prefix_sums`` scan over the KS test's
+    per-value counts, :func:`_ks_value_counts` (tied values contribute
+    half in the doubled domain, so arithmetic
     stays integral). z_approx is the no-tie-correction normal
     approximation, one fixed IEEE tail identical in both engines;
     halves are exactly representable so u_stat is bit-exact.
@@ -1082,17 +1105,7 @@ def stats_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     from ..functions.ranks import bucketed_prefix_sums
 
-    o = table(spark, sf_dir, "orders")
-    rows = o.filter(
-        F.col("o_orderpriority").isin(_KS_A, _KS_B)
-    ).select(
-        (dec("o_totalprice", 14) * 100).cast("long").alias("cents"),
-        F.when(F.col("o_orderpriority") == _KS_A, 1).otherwise(0).alias("ia"),
-    )
-    dv = rows.groupBy("cents").agg(
-        F.sum("ia").cast("long").alias("a"),
-        (F.count(F.lit(1)) - F.sum("ia")).cast("long").alias("b"),
-    )
+    dv, tot = _ks_value_counts(spark, sf_dir)
     cum = bucketed_prefix_sums(dv, "cents", ["b"])
     s = cum.agg(
         F.sum(
@@ -1101,10 +1114,6 @@ def stats_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("two_u")
-    )
-    tot = dv.agg(
-        F.sum("a").cast("long").alias("na"),
-        F.sum("b").cast("long").alias("nb"),
     )
     na, nb = F.col("na").cast("double"), F.col("nb")
     u = F.col("two_u").cast("double") / 2
@@ -1885,34 +1894,13 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     different shape. A curation pipeline uses V to rank which
     metadata columns actually stratify the corpus.
 
-    Scale/determinism: identical contingency plan to the chi2 query
-    (one scan to a 125-cell frame, broadcast marginals, floor-scaled
-    int64 term sum); V adds one sqrt on the single result row.
+    Scale/determinism: the contingency table is :func:`_chi2_cells`,
+    the chi2 query's builder (one scan to a 125-cell frame, broadcast
+    marginals), with the same floor-scaled int64 term sum; V adds one
+    sqrt on the single result row.
     """
     tune(spark)
-    cells = (
-        table(spark, sf_dir, "customer")
-        .groupBy(
-            F.col("c_nationkey").alias("nk"),
-            F.col("c_mktsegment").alias("seg"),
-        )
-        .agg(F.count(F.lit(1)).alias("obs"))
-    )
-    rt = cells.groupBy("nk").agg(F.sum("obs").alias("rtot"))
-    ct = cells.groupBy("seg").agg(F.sum("obs").alias("ctot"))
-    tot = cells.agg(
-        F.sum("obs").alias("n"),
-        F.countDistinct("nk").alias("nr"),
-        F.countDistinct("seg").alias("nc"),
-    )
-    j = (
-        cells.join(F.broadcast(rt), "nk")
-        .join(F.broadcast(ct), "seg")
-        .crossJoin(F.broadcast(tot))
-    )
-    exp = (F.col("rtot") * F.col("ctot")).cast("double") / F.col("n")
-    d = F.col("obs").cast("double") - exp
-    term = d * d / exp
+    j, term = _chi2_cells(spark, sf_dir)
     chi = j.agg(
         F.min("n").cast("long").alias("n"),
         F.least(F.min("nr") - 1, F.min("nc") - 1)

@@ -608,6 +608,45 @@ def stats_durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LB_MAX_LAG = 7
 
 
+def _daily_autocovariances(
+    spark: SparkSession, sf_dir: str, max_lag: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """n-scaled autocovariances of the daily event counts as (tot, ak,
+    a0): the 1-row (n days, s events), sum((x_d*n - s)(x_{d+k}*n - s))
+    per lag k in 1..max_lag, and the 1-row lag-0 sum, each summed
+    exactly in DECIMAL(38,0) and turned into one double."""
+    e = table(spark, sf_dir, "events")
+    daily = e.groupBy(
+        F.expr("datediff(to_date(ts), date'1970-01-01')").alias("d")
+    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
+    tot = daily.agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("x").cast("long").alias("s"),
+    )
+    da = daily.crossJoin(F.broadcast(tot)).select(
+        "d", (F.col("x") * F.col("n") - F.col("s")).alias("ca")
+    )
+    db = da.select(F.col("d").alias("d2"), F.col("ca").alias("cb"))
+    lags = spark.range(1, max_lag + 1).select(F.col("id").alias("k"))
+    ak = (
+        F.broadcast(lags)
+        .join(da, F.lit(True))
+        .join(db, F.col("d2") == F.col("d") + F.col("k"))
+        .groupBy("k")
+        .agg(
+            F.sum(F.col("ca").cast("decimal(38,0)") * F.col("cb"))
+            .cast("double")
+            .alias("ak")
+        )
+    )
+    a0 = da.agg(
+        F.sum(F.col("ca").cast("decimal(38,0)") * F.col("ca"))
+        .cast("double")
+        .alias("a0")
+    )
+    return tot, ak, a0
+
+
 @query(
     "stats_ljung_box_daily_counts",
     oracle=f"""
@@ -659,35 +698,7 @@ def stats_ljung_box_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; no global window.
     """
     tune(spark)
-    e = table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        F.expr("datediff(to_date(ts), date'1970-01-01')").alias("d")
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    tot = daily.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("s"),
-    )
-    lags = spark.range(1, _LB_MAX_LAG + 1).select(F.col("id").alias("k"))
-    da = daily.crossJoin(F.broadcast(tot)).select(
-        "d", ((F.col("x") * F.col("n")) - F.col("s")).alias("ca"), "n", "s"
-    )
-    db = da.select(F.col("d").alias("d2"), F.col("ca").alias("cb"))
-    ak = (
-        F.broadcast(lags)
-        .join(da, F.lit(True))
-        .join(db, F.col("d2") == F.col("d") + F.col("k"))
-        .groupBy("k")
-        .agg(
-            F.sum(F.col("ca").cast("decimal(38,0)") * F.col("cb"))
-            .cast("double")
-            .alias("ak")
-        )
-    )
-    a0 = da.agg(
-        F.sum(F.col("ca").cast("decimal(38,0)") * F.col("ca"))
-        .cast("double")
-        .alias("a0")
-    )
+    tot, ak, a0 = _daily_autocovariances(spark, sf_dir, _LB_MAX_LAG)
     terms = (
         ak.crossJoin(F.broadcast(a0))
         .crossJoin(F.broadcast(tot))
@@ -882,6 +893,25 @@ _Z_ALPHA2 = 1.959963984540054  # two-sided 5%
 _Z_BETA = 0.8416212335729143  # 80% power
 
 
+def _urgent_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(c_custkey, grp, hit) per customer: ``grp`` = AUTOMOBILE segment,
+    ``hit`` = placed at least one URGENT order (0 without orders)."""
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders")
+    return (
+        c.join(o, c["c_custkey"] == o["o_custkey"], "left")
+        .groupBy(
+            "c_custkey", (F.col("c_mktsegment") == "AUTOMOBILE").alias("grp")
+        )
+        .agg(
+            F.coalesce(
+                F.max(F.when(F.col("o_orderpriority") == "1-URGENT", 1)),
+                F.lit(0),
+            ).alias("hit")
+        )
+    )
+
+
 @query(
     "stats_sample_size_two_prop",
     oracle=f"""
@@ -931,20 +961,7 @@ def stats_sample_size_two_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an exact small integer either way.
     """
     tune(spark)
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders")
-    flags = (
-        c.join(o, c["c_custkey"] == o["o_custkey"], "left")
-        .groupBy(
-            "c_custkey", (F.col("c_mktsegment") == "AUTOMOBILE").alias("grp")
-        )
-        .agg(
-            F.coalesce(
-                F.max(F.when(F.col("o_orderpriority") == "1-URGENT", 1)),
-                F.lit(0),
-            ).alias("hit")
-        )
-    )
+    flags = _urgent_flags(spark, sf_dir)
     s = flags.agg(
         F.count(F.when(F.col("grp"), 1)).cast("long").alias("n1"),
         F.sum(F.when(F.col("grp"), F.col("hit")).otherwise(0))
@@ -1319,20 +1336,7 @@ def stats_fisher_exact_logp(spark: SparkSession, sf_dir: str) -> DataFrame:
     four 1-row driver scalars (the repo's O(1)-scalar budget).
     """
     tune(spark)
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders")
-    flags = (
-        c.join(o, c["c_custkey"] == o["o_custkey"], "left")
-        .groupBy(
-            "c_custkey", (F.col("c_mktsegment") == "AUTOMOBILE").alias("grp")
-        )
-        .agg(
-            F.coalesce(
-                F.max(F.when(F.col("o_orderpriority") == "1-URGENT", 1)),
-                F.lit(0),
-            ).alias("hit")
-        )
-    )
+    flags = _urgent_flags(spark, sf_dir)
     cells = flags.agg(
         F.sum(F.when(F.col("grp") & (F.col("hit") == 1), 1).otherwise(0))
         .cast("long")

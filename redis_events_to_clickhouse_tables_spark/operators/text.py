@@ -480,18 +480,13 @@ def _bm25_term_col(i: int) -> Column:
     return idf * norm
 
 
-@query("text_bm25_score", oracle=_bm25_sql())
-def text_bm25_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 relevance of every matching document for a fixed query.
-
-    Two distributed passes over one scan shape: (1) a global 1-row
-    aggregate of document frequencies and average length (map-side
-    partials, ~24 bytes shuffled per partition), broadcast back; (2) a
-    per-row score — tf via JVM higher-order ``filter`` inside codegen,
-    no explode and no shuffle of the corpus. At 100 TB the corpus
-    never repartitions; only the 1-row stats frame moves.
-    """
-    tune(spark)
+def _bm25_frames(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The BM25 corpus stage as (per_doc, stats): per document its
+    query-term frequencies and length (doc_id, tf0.., dl), and the
+    1-row corpus aggregate (n, df0.., avgdl) that every BM25 query
+    broadcasts back onto ``per_doc``."""
     d = table(spark, sf_dir, "documents")
     tk = _toks()
     per_doc = d.select(
@@ -515,6 +510,44 @@ def text_bm25_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.count(F.lit(1)).cast("double")
         ).alias("avgdl"),
     )
+    return per_doc, stats
+
+
+def _bm25_long(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, term, score, tf): one row per (document, query term)
+    with tf > 0 and that term's BM25 score, over :func:`_bm25_frames`
+    (stats broadcast, the corpus never shuffles)."""
+    per_doc, stats = _bm25_frames(spark, sf_dir)
+    rows = [
+        F.struct(
+            F.lit(t).alias("term"),
+            _bm25_term_col(i).alias("score"),
+            F.col(f"tf{i}").alias("tf"),
+        )
+        for i, t in enumerate(_BM25_TERMS)
+    ]
+    return (
+        per_doc.join(F.broadcast(stats))
+        .select("doc_id", F.explode(F.array(*rows)).alias("e"))
+        .select("doc_id", "e.*")
+        .filter(F.col("tf") > 0)
+    )
+
+
+@query("text_bm25_score", oracle=_bm25_sql())
+def text_bm25_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 relevance of every matching document for a fixed query.
+
+    Two distributed passes over one scan shape: (1) a global 1-row
+    aggregate of document frequencies and average length (map-side
+    partials, ~24 bytes shuffled per partition), broadcast back; (2) a
+    per-row score — tf via JVM higher-order ``filter`` inside codegen,
+    no explode and no shuffle of the corpus. At 100 TB the corpus
+    never repartitions; only the 1-row stats frame moves. The two
+    frames come from :func:`_bm25_frames`.
+    """
+    tune(spark)
+    per_doc, stats = _bm25_frames(spark, sf_dir)
     score = None
     for i in range(len(_BM25_TERMS)):
         term = _bm25_term_col(i)
@@ -617,52 +650,16 @@ def eval_ndcg_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     build (``index_inverted_postings``, ``text_bm25_score``) is
     evaluated with.
 
-    Scale: the corpus-wide stage is the same two-pass broadcast shape
-    as ``text_bm25_score`` (no corpus shuffle); the per-term top-10
-    goes through :func:`topk_by_value_per_group`, so no single task
-    sorts a whole term's match list. DCG discounts are import-time
+    Scale: the corpus-wide stage is :func:`_bm25_long`, the two-pass
+    broadcast shape ``text_bm25_score`` also builds on (no corpus
+    shuffle); the per-term top-10 goes through
+    :func:`topk_by_value_per_group`, so no single task sorts a whole
+    term's match list. DCG discounts are import-time
     integer constants — the only runtime float is the bit-identical
     BM25 score itself; gains and discounted sums are exact int64.
     """
     tune(spark)
-    d = table(spark, sf_dir, "documents")
-    tk = _toks()
-    per_doc = d.select(
-        "doc_id",
-        *[
-            F.size(F.filter(tk, _eq_term(t))).cast("long").alias(f"tf{i}")
-            for i, t in enumerate(_BM25_TERMS)
-        ],
-        F.size(tk).cast("long").alias("dl"),
-    )
-    stats = per_doc.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0))
-            .cast("long")
-            .alias(f"df{i}")
-            for i in range(len(_BM25_TERMS))
-        ],
-        (
-            F.sum("dl").cast("long").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avgdl"),
-    )
-    rows = [
-        F.struct(
-            F.lit(t).alias("term"),
-            _bm25_term_col(i).alias("score"),
-            F.col(f"tf{i}").alias("tf"),
-        )
-        for i, t in enumerate(_BM25_TERMS)
-    ]
-    long = (
-        per_doc.join(F.broadcast(stats))
-        .select("doc_id", F.explode(F.array(*rows)).alias("e"))
-        .select("doc_id", "e.*")
-        .filter(F.col("tf") > 0)
-    )
-    long = long.persist()
+    long = _bm25_long(spark, sf_dir).persist()
     gain = F.when(F.least(F.col("tf"), F.lit(3)) == 1, 1).when(
         F.least(F.col("tf"), F.lit(3)) == 2, 3
     ).otherwise(7)
@@ -1958,50 +1955,14 @@ def eval_mrr_recall_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     judgments). Metrics are exact rationals: 1/first-rank and
     hits/|relevant|, one IEEE division each.
 
-    Scale: identical two-pass broadcast shape as ``text_bm25_score``
-    (corpus never shuffles; the 1-row stats frame broadcasts), and
+    Scale: the corpus stage is :func:`_bm25_long`, built on the same
+    two-pass broadcast frames as ``text_bm25_score`` (corpus never
+    shuffles; the 1-row stats frame broadcasts), and
     the per-term top-10 rides :func:`topk_by_value_per_group` — no
     whole-term window sorts.
     """
     tune(spark)
-    d = table(spark, sf_dir, "documents")
-    tk = _toks()
-    per_doc = d.select(
-        "doc_id",
-        *[
-            F.size(F.filter(tk, _eq_term(t))).cast("long").alias(f"tf{i}")
-            for i, t in enumerate(_BM25_TERMS)
-        ],
-        F.size(tk).cast("long").alias("dl"),
-    )
-    stats = per_doc.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0))
-            .cast("long")
-            .alias(f"df{i}")
-            for i in range(len(_BM25_TERMS))
-        ],
-        (
-            F.sum("dl").cast("long").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avgdl"),
-    )
-    rows = [
-        F.struct(
-            F.lit(t).alias("term"),
-            _bm25_term_col(i).alias("score"),
-            F.col(f"tf{i}").alias("tf"),
-        )
-        for i, t in enumerate(_BM25_TERMS)
-    ]
-    long = (
-        per_doc.join(F.broadcast(stats))
-        .select("doc_id", F.explode(F.array(*rows)).alias("e"))
-        .select("doc_id", "e.*")
-        .filter(F.col("tf") > 0)
-        .persist()
-    )
+    long = _bm25_long(spark, sf_dir).persist()
     rel = (
         long.filter(F.col("tf") >= 2)
         .groupBy("term")

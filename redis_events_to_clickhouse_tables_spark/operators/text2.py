@@ -93,6 +93,19 @@ def text_mattr_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _source_type_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(source, w, m): each source's token types and their frequency."""
+    d = table(spark, sf_dir, "documents")
+    return (
+        d.select(
+            "source", F.explode(F.split(F.col("text"), " ")).alias("w")
+        )
+        .filter(F.col("w") != "")
+        .groupBy("source", "w")
+        .agg(F.count(F.lit(1)).cast("long").alias("m"))
+    )
+
+
 @query(
     "text_yule_k_by_source",
     oracle="""
@@ -125,15 +138,7 @@ def text_yule_k_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     double tail. Shuffle keys: (source, token) then source.
     """
     tune(spark)
-    d = table(spark, sf_dir, "documents")
-    f = (
-        d.select(
-            "source", F.explode(F.split(F.col("text"), " ")).alias("w")
-        )
-        .filter(F.col("w") != "")
-        .groupBy("source", "w")
-        .agg(F.count(F.lit(1)).cast("long").alias("m"))
-    )
+    f = _source_type_freqs(spark, sf_dir)
     s = f.groupBy("source").agg(
         F.sum("m").cast("long").alias("n"),
         F.count(F.lit(1)).cast("long").alias("v"),
@@ -338,15 +343,7 @@ def text_simpson_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact integer sums, one shared double tail per source.
     """
     tune(spark)
-    d = table(spark, sf_dir, "documents")
-    f = (
-        d.select(
-            "source", F.explode(F.split(F.col("text"), " ")).alias("w")
-        )
-        .filter(F.col("w") != "")
-        .groupBy("source", "w")
-        .agg(F.count(F.lit(1)).cast("long").alias("m"))
-    )
+    f = _source_type_freqs(spark, sf_dir)
     s = f.groupBy("source").agg(
         F.sum("m").cast("long").alias("n"),
         F.sum(F.col("m").cast("decimal(38,0)") * (F.col("m") - 1)).alias(

@@ -25,7 +25,7 @@ time-series operators; Layer-B north-star surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dec
@@ -34,6 +34,7 @@ from ..functions.lineage import model_checkpoint
 from ..registry import query
 from ..session import tune
 from ..sources.tables import table
+from .stats2 import _daily_autocovariances
 
 _CENTS = "CAST(CAST(value AS DECIMAL(10,2)) * 100 AS BIGINT)"
 _DAY = "date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))"
@@ -432,6 +433,30 @@ def timeseries_peak_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _daily_count_arrays(
+    spark: SparkSession, sf_dir: str, xs_type: str, *aggs: Column
+) -> DataFrame:
+    """(event_type, xs, *aggs): each type's daily counts as one array
+    in day order (elements cast to ``xs_type``), with ``aggs`` over the
+    same (event_type, d, x) day rows."""
+    e = table(spark, sf_dir, "events")
+    daily = e.groupBy(
+        "event_type",
+        F.expr("datediff(to_date(ts), date'1970-01-01')").alias("d"),
+    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
+    return daily.groupBy("event_type").agg(
+        F.transform(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(F.col("d").alias("d"), F.col("x").alias("x"))
+                )
+            ),
+            lambda s: s.getField("x").cast(xs_type),
+        ).alias("xs"),
+        *aggs,
+    )
+
+
 @query(
     "timeseries_ses_level",
     oracle=f"""
@@ -463,20 +488,10 @@ def timeseries_ses_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     count); the fold is JVM-side codegen, not Python.
     """
     tune(spark)
-    e = table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.expr("datediff(to_date(ts), date'1970-01-01')").alias("d"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    arr = daily.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("d").alias("d"), F.col("x").alias("x"))
-                )
-            ),
-            lambda s: s.getField("x").cast("double"),
-        ).alias("xs"),
+    arr = _daily_count_arrays(
+        spark,
+        sf_dir,
+        "double",
         F.count(F.lit(1)).cast("long").alias("n_days"),
         F.sum("x").cast("long").alias("total"),
     )
@@ -531,39 +546,12 @@ def timeseries_pacf_lag2(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw r_k curve this corrects).
 
     Autocovariances are n-scaled exact integers (DECIMAL(38,0)/
-    HUGEINT) from day-offset self-joins; r1/r2/pacf are one shared
-    IEEE expression tree.
+    HUGEINT) from day-offset self-joins, the Ljung-Box builder
+    :func:`_daily_autocovariances` at two lags; r1/r2/pacf are one
+    shared IEEE expression tree.
     """
     tune(spark)
-    e = table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        F.expr("datediff(to_date(ts), date'1970-01-01')").alias("d")
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    tot = daily.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("s"),
-    )
-    da = daily.crossJoin(F.broadcast(tot)).select(
-        "d", (F.col("x") * F.col("n") - F.col("s")).alias("ca")
-    )
-    db = da.select(F.col("d").alias("d2"), F.col("ca").alias("cb"))
-    lags = spark.range(1, 3).select(F.col("id").alias("k"))
-    ak = (
-        F.broadcast(lags)
-        .join(da, F.lit(True))
-        .join(db, F.col("d2") == F.col("d") + F.col("k"))
-        .groupBy("k")
-        .agg(
-            F.sum(F.col("ca").cast("decimal(38,0)") * F.col("cb"))
-            .cast("double")
-            .alias("ak")
-        )
-    )
-    a0 = da.agg(
-        F.sum(F.col("ca").cast("decimal(38,0)") * F.col("ca"))
-        .cast("double")
-        .alias("a0")
-    )
+    _, ak, a0 = _daily_autocovariances(spark, sf_dir, 2)
     r = ak.crossJoin(F.broadcast(a0)).agg(
         (
             F.max(F.when(F.col("k") == 1, F.col("ak"))) / F.max("a0")
@@ -825,20 +813,10 @@ def timeseries_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     never event counts; the fold is JVM-side codegen.
     """
     tune(spark)
-    e = table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.expr("datediff(to_date(ts), date'1970-01-01')").alias("d"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    arr = daily.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("d").alias("d"), F.col("x").alias("x"))
-                )
-            ),
-            lambda s: s.getField("x").cast("double"),
-        ).alias("xs"),
+    arr = _daily_count_arrays(
+        spark,
+        sf_dir,
+        "double",
         F.count(F.lit(1)).cast("long").alias("n_days"),
     )
     x1 = F.element_at(F.col("xs"), 1)
@@ -1335,21 +1313,8 @@ def timeseries_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the calendar day count per type.
     """
     tune(spark)
-    e = table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.expr("datediff(to_date(ts), date'1970-01-01')").alias("d"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    arr = daily.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("d").alias("d"), F.col("x").alias("x"))
-                )
-            ),
-            lambda s: s.getField("x"),
-        ).alias("xs"),
-        F.count(F.lit(1)).cast("long").alias("n"),
+    arr = _daily_count_arrays(
+        spark, sf_dir, "long", F.count(F.lit(1)).cast("long").alias("n")
     ).filter(F.col("n") >= 3)
     n = F.col("n")
     st = (n * (n + 1) / 2).cast("long")

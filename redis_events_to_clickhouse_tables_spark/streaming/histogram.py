@@ -26,8 +26,8 @@ from pyspark.sql import functions as F
 
 from .partials import PartialStore
 
-BIN_WIDTH = 25  # same fixed grid as the batch rollup / value histogram
-TOP_BIN = 19
+BIN_WIDTH = 25  # bin width over the observed 0..500 value range
+TOP_BIN = 19  # top bin open-ended
 
 _PARTIAL_SCHEMA = (
     "week timestamp, event_day timestamp, bin long, cnt long"
@@ -35,6 +35,8 @@ _PARTIAL_SCHEMA = (
 
 
 def bin_of(c: F.Column) -> F.Column:
+    """The fixed histogram bin of a value column (the batch rollup
+    ``sketch_histogram_weekly_rollup`` bins with it too)."""
     return F.least(
         F.floor(c / BIN_WIDTH).cast("long"), F.lit(TOP_BIN).cast("long")
     )
@@ -56,9 +58,11 @@ def _merge_partial_rows(partials: DataFrame) -> DataFrame:
 
 
 def weekly_percentile_bins(partials: DataFrame) -> DataFrame:
-    """(week, n, p50_bin, p90_bin) from merged histogram partials:
-    the first bin whose running total reaches ceil(q*n) — identical
-    arithmetic to the batch query, so parity is exact."""
+    """(week, p50_bin, p90_bin, n) from (week, bin, cnt) histogram
+    partials (other columns are ignored): the first bin whose running
+    total reaches ceil(q*n). The batch query
+    ``sketch_histogram_weekly_rollup`` reads its weekly bins from this
+    function too, so streamed and batch answers share one definition."""
     wb = partials.groupBy("week", "bin").agg(
         F.sum("cnt").cast("long").alias("w_cnt")
     )
@@ -66,9 +70,9 @@ def weekly_percentile_bins(partials: DataFrame) -> DataFrame:
     cum = wb.withColumn(
         "cum", F.sum("w_cnt").over(Window.partitionBy("week").orderBy("bin"))
     )
-    return (
+    pb = (
         cum.join(F.broadcast(tot), "week")
-        .groupBy("week", "n")
+        .groupBy("week")
         .agg(
             F.min(
                 F.when(F.col("cum") >= F.expr("(n + 1) div 2"), F.col("bin"))
@@ -80,6 +84,7 @@ def weekly_percentile_bins(partials: DataFrame) -> DataFrame:
             ).alias("p90_bin"),
         )
     )
+    return pb.join(F.broadcast(tot), "week")
 
 
 class HistogramAggregate(PartialStore):

@@ -2,10 +2,11 @@
 
 The reference has no event-time processing (SURVEY §2.9); this is the
 Layer-B streaming surface: tumbling/sliding windows with watermarked
-late-data handling. The same function serves the batch image (the
-``events_hourly_windows`` oracle query) and a streaming file source —
-which is the point of Structured Streaming's unified model: the query
-shape is identical, only the source/sink differ.
+late-data handling. The same function serves the batch images (the
+``events_hourly_windows`` and ``events_sliding_windows`` oracle
+queries call it) and a streaming file source — which is the point of
+Structured Streaming's unified model: the query shape is identical,
+only the source/sink differ.
 
 Scale: windowed aggregation shuffles on (window, event_type) — bounded
 keys; the watermark bounds state size (windows older than

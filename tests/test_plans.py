@@ -155,6 +155,18 @@ def test_bm25_never_shuffles_the_corpus(spark):
     assert "hashpartitioning" not in plan, plan[:3000]
 
 
+@pytest.mark.parametrize("name", ["eval_ndcg_bm25", "eval_mrr_recall_bm25"])
+def test_bm25_eval_corpus_stage_broadcasts_stats(spark, name):
+    """The BM25 evaluation queries build their per-term rows on the
+    same corpus stage as ``text_bm25_score``: the 1-row stats frame
+    broadcasts onto the per-document scan, and the corpus never
+    sort-merge joins. Their per-term top-k does hash-partition the
+    per-term rows, so hashpartitioning is allowed here."""
+    plan = _plan(spark, name)
+    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan[:3000]
+    assert "SortMergeJoin" not in plan, plan[:3000]
+
+
 def test_incremental_snapshot_dedup_is_digest_anti_join(spark):
     """The snapshot membership test must plan as a hash anti-join on
     the digest (broadcast or shuffled-hash — never sort-merge, and

@@ -3,6 +3,9 @@
 Usage: python tools/profile_queries.py name1 name2 ... [options]
   --sf=DIR        data dir (default /root/testdata/sf0.1)
   --plans=DIR     if set, write <name>_<suffix>.txt explain("formatted")
+                  and <name>_<suffix>.logical.txt, the optimized logical
+                  plan normalized so that an unchanged plan diffs
+                  byte-for-byte between two builds (see logical_plan)
   --suffix=before explain file suffix (before/after)
   --reps=2        timing repetitions (min is reported)
   --noop          time via noop sink (materializes every column) instead
@@ -32,6 +35,7 @@ without a profiler.
 from __future__ import annotations
 
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -89,6 +93,31 @@ def cpu_split(jvm_pid: int) -> dict[str, float]:
     ticks["jvm_other"] = other
     hz = os.sysconf("SC_CLK_TCK")
     return {k: v * 1000 / hz for k, v in ticks.items()}
+
+
+def logical_plan(df) -> str:
+    """The optimized logical plan of ``df`` with its per-build counters
+    normalized: expression ids (``#123`` -> ``#N``), ``plan_id=7`` ->
+    ``plan_id=N``, and PySpark's numbered lambda variables (``x_2``,
+    ``acc_31``; the counter is process-global) -> ``x_N``, ``acc_N``.
+    A cached frame prints its executed physical plan, whose codegen
+    stage ids (``*(3)``), query stage ids and object hashes
+    (``UnsafeArrayData@2ce9e250``) follow execution order and memory;
+    they become ``*(N)``, ``QueryStage N`` and ``@N``.
+
+    Two builds can still differ where Spark orders by expression hash:
+    the Expand groups of a multi-distinct aggregate are one case."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+    plan = re.sub(r"#\d+", "#N", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    plan = re.sub(r"\*\(\d+\)", "*(N)", plan)
+    plan = re.sub(r"QueryStage \d+", "QueryStage N", plan)
+    plan = re.sub(r"@[0-9a-f]+\b", "@N", plan)
+    names = set(re.findall(r"lambda (\w+?_)\d+\b", plan))
+    if names:
+        alt = "|".join(re.escape(n) for n in sorted(names))
+        plan = re.sub(rf"\b({alt})\d+\b", r"\1N", plan)
+    return plan
 
 
 def main() -> int:
@@ -170,6 +199,10 @@ def main() -> int:
             )
             with open(os.path.join(plans_dir, f"{name}_{suffix}.txt"), "w") as fh:
                 fh.write(plan)
+            with open(
+                os.path.join(plans_dir, f"{name}_{suffix}.logical.txt"), "w"
+            ) as fh:
+                fh.write(logical_plan(df))
     spark.stop()
     return 0
 
