@@ -13,11 +13,13 @@ commit only after the batch succeeds). What remains engine-level is
 dead-lettering: a table whose write fails gets its events appended to
 the ``_dlq`` table with attempt counters and the error (E1), and
 events of non-critical types that have already failed once are
-dropped (E4/F2). ``retry_dead_letters`` replays the DLQ through the
-tick's own normalize and per-table flush (``_flush``), each table
-under a content-hash batch id, so a crashed replay reruns into the
-store's commit log instead of duplicating rows (E2/E3). ``_trace`` is
-the JSONL side-output (K4).
+dropped (E4/F2). The DLQ is a ``TableStore`` table on the event
+store's root, with the event tables' commit protocol and writer lock.
+``retry_dead_letters`` replays it through the tick's own normalize and
+per-table flush (``_flush``) under content-hash batch ids, then
+replaces it with what is left in one commit, so a replay killed at any
+point reruns into the commit logs instead of losing or duplicating
+rows (E2/E3). ``_trace`` is the JSONL side-output (K4).
 
 Scale note: a tick's fixed cost does not grow with its number of
 event types T. The batch is flattened once and every table's columns
@@ -35,10 +37,8 @@ from __future__ import annotations
 
 import json
 import re
-import shutil
 import threading
 import time
-import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -53,7 +53,7 @@ from ..plans.inference import parse_events
 # normalize_events is not called here; the benchmark's traced runs bind
 # it as ``ingest.normalize_events`` (perfbench/spans.py)
 from .normalize import NormalizedBatch, normalize_batch, normalize_events  # noqa: F401
-from .store import TableStore, swap_dirs
+from .store import TableStore
 
 DLQ_TABLE = "_dlq"
 # in-file sort order of every table (the MergeTree ORDER BY sent_at
@@ -167,6 +167,16 @@ def _is_interruption(exc: BaseException) -> bool:
     return any(_CANCEL_MSG_RE.search(m or "") for m in messages)
 
 
+class _DeadLetterStore(TableStore):
+    """A store whose one table is ``DLQ_TABLE``, a name the event store
+    rejects: no event type routes into it."""
+
+    def table_path(self, table: str) -> Path:
+        if table != DLQ_TABLE:
+            raise ValueError(f"illegal table name: {table!r}")
+        return self.root / table
+
+
 class StoreUnavailableError(RuntimeError):
     """B4: raised when the destination health probe fails — the batch
     is not processed, and (in streaming) source offsets are not
@@ -205,14 +215,7 @@ class IngestEngine:
         self.store = store
         self.config = config or IngestConfig()
         self._lock = threading.Lock()
-        # serializes every writer of the _dlq directory: concurrent
-        # appends to ONE output path share the FileOutputCommitter
-        # _temporary staging dir, and the first job's commit deletes
-        # it — a multi-table failure dead-lettering from the
-        # ThreadPoolExecutor could silently lose events (ADVICE r1).
-        # Also taken for the whole retry replay+swap so a concurrent
-        # dead-letter can't append into a dir about to be swapped away.
-        self._dlq_lock = threading.Lock()
+        self._dlq = _DeadLetterStore(spark, store.root)
         # interruption replay cap (see _is_interruption): counts
         # interruption-shaped re-raises per (batch_id, table) so a
         # disguised poison batch can't replay forever. Bounded by the
@@ -243,20 +246,19 @@ class IngestEngine:
             report.phase_seconds[name] = report.phase_seconds.get(name, 0.0) + sec
 
     # -- E1/E4: dead-letter ----------------------------------------------
-    def _drop_non_critical(
-        self, dlq: DataFrame, table: str, report: IngestReport
-    ) -> DataFrame:
+    def _drop_non_critical(self, dlq: DataFrame, table: str) -> tuple[DataFrame, int]:
         """E4/F2: DLQ rows of a non-critical type that have already
-        failed once are dropped instead of dead-lettered again."""
+        failed once are dropped instead of dead-lettered again; returns
+        the rows kept and the number dropped."""
         if table not in self.config.non_critical_event_types:
-            return dlq
+            return dlq, 0
         again = F.col("attempts") > 1
-        dropped = dlq.filter(again).count()
-        with self._lock:
-            report.n_dropped_non_critical += dropped
-        return dlq.filter(~again)
+        return dlq.filter(~again), dlq.filter(again).count()
 
     def _dead_letter(self, events: DataFrame, table: str, error: str, report: IngestReport):
+        """E1: append ``events`` to the DLQ under the batch id
+        ``<report.batch_id>/<table>``: a replayed tick's dead letters are
+        neither written, counted nor traced twice."""
         attempts = (
             F.col("__single_retry_attempts").cast("long")
             if "__single_retry_attempts" in events.columns
@@ -271,15 +273,13 @@ class IngestEngine:
             (attempts + 1).alias("attempts"),
             F.current_timestamp().alias("dead_lettered_at"),
         )
-        dlq = self._drop_non_critical(dlq, table, report)
-        # the DLQ write bypasses evolution (fixed schema) — append
-        # directly, one writer at a time (see _dlq_lock)
-        data_dir = self.store.root / DLQ_TABLE / "data"
-        with self._dlq_lock:
-            data_dir.mkdir(parents=True, exist_ok=True)
-            dlq.write.mode("append").parquet(str(data_dir))
+        dlq, dropped = self._drop_non_critical(dlq, table)
+        batch_id = None if report.batch_id is None else f"{report.batch_id}/{table}"
+        if self._dlq.write(dlq, DLQ_TABLE, batch_id=batch_id) is None:
+            return
         n = dlq.count()
         with self._lock:
+            report.n_dropped_non_critical += dropped
             report.n_dead_lettered += n
         self._trace(
             {"event": "dead_letter", "table": table, "rows": n, "error": error},
@@ -287,8 +287,8 @@ class IngestEngine:
         )
 
     def read_dlq(self) -> DataFrame:
-        data_dir = self.store.root / DLQ_TABLE / "data"
-        return self.spark.read.parquet(str(data_dir))
+        """The dead letters; KeyError before the first one."""
+        return self._dlq.read(DLQ_TABLE)
 
     def retry_dead_letters(self, max_attempts: int = 5) -> IngestReport:
         """E2/E3: replay dead-lettered events back into their tables.
@@ -298,8 +298,8 @@ class IngestEngine:
         inserts them through the bulk path's insert and schema-evolution
         client, with Bull retrying up to 5 attempts (src/main.ts:284-363,
         :482-511); the Redis source here never re-enqueues. Instead the
-        DLQ rows under the attempt ceiling are parsed as one batch and
-        written like a tick: ``normalize_batch``, then ``_flush`` per
+        DLQ rows under the attempt ceiling are parsed and written like a
+        tick: ``normalize_batch``, then ``_flush`` per
         table. A table that fails again gets its rows back with
         ``attempts`` + 1, or dropped for non-critical types (E4); rows
         at the ceiling stay parked (poison). E3's busy-client mutex has
@@ -310,30 +310,20 @@ class IngestEngine:
         ``target_table`` and ``dead_lettered_at``) is replayed as its own
         batch: parsed, normalized and flushed under the batch id ``dlq-``
         + 24 hex digits of the sha256 of its table, its dead-letter time
-        and its sorted payloads, so one write job per group. A replay
-        that crashed before the DLQ swap left the DLQ as it was, plus
-        whatever ticks dead-lettered since; its rerun gets the same ids
-        for the groups it wrote, and the store's commit log skips them.
-        (An id over a whole table's DLQ rows changed when a tick
-        dead-lettered into that table in between, and the rerun wrote
-        the crashed replay's rows again.)
+        and its sorted payloads, so one write job per group. What is
+        left (parked rows, and rows that failed again) then replaces the
+        DLQ in one ``TableStore.overwrite``; the DLQ's writer lock is
+        held from the read to that commit, so a tick dead-lettering
+        meanwhile waits. A replay killed before that commit left the DLQ
+        as it was, plus whatever ticks dead-lettered since; its rerun
+        gets the same ids for the groups it wrote, and the store's
+        commit log skips them.
         """
         report = IngestReport(batch_id=-1)
-        data_dir = self.store.root / DLQ_TABLE / "data"
-        # hold the DLQ lock for the whole replay: a concurrent batch
-        # dead-lettering into data_dir between our read and the swap
-        # below would be deleted with the old directory otherwise
-        with self._dlq_lock:
-            if not data_dir.exists():
+        with self._dlq._writer(DLQ_TABLE):  # noqa: SLF001 — the DLQ's own lock
+            if not self._dlq.table_exists(DLQ_TABLE):
                 return report
-            # survivors of a replay that died before its swap: the live
-            # dir still holds all their rows. (A .old-* dir stays: a
-            # crash inside swap_dirs may leave the only copy there.)
-            for stale in data_dir.parent.glob(".retry-*"):
-                shutil.rmtree(stale, ignore_errors=True)
-            if not any(data_dir.glob("*.parquet")):
-                return report
-            dlq = self.spark.read.parquet(str(data_dir)).persist()
+            dlq = self._dlq.read(DLQ_TABLE).persist()
             try:
                 eligible = dlq.filter(F.col("attempts") < max_attempts)
                 parked = dlq.filter(F.col("attempts") >= max_attempts)
@@ -374,21 +364,16 @@ class IngestEngine:
                         {"event": "dlq_retry_fail", "table": t, "error": err},
                         suffix=".failedsingle.error.log",
                     )
-                    again = (
+                    again, dropped = self._drop_non_critical(
                         rows.withColumn("attempts", F.col("attempts") + 1)
                         .withColumn("error", F.lit(err))
-                        .withColumn("dead_lettered_at", F.current_timestamp())
+                        .withColumn("dead_lettered_at", F.current_timestamp()),
+                        t,
                     )
-                    remaining = remaining.unionByName(
-                        self._drop_non_critical(again, t, report)
-                    )
-                # atomic DLQ replacement: write survivors to a fresh
-                # dir, then crash-safe swap (old dir renamed aside
-                # before deletion — streaming/store.py swap_dirs)
+                    report.n_dropped_non_critical += dropped
+                    remaining = remaining.unionByName(again)
                 report.n_dead_lettered = remaining.count()
-                tmp = self.store.root / DLQ_TABLE / f".retry-{uuid.uuid4().hex[:8]}"
-                remaining.write.mode("overwrite").parquet(str(tmp))
-                swap_dirs(tmp, data_dir)
+                self._dlq.overwrite(DLQ_TABLE, remaining)
                 return report
             finally:
                 dlq.unpersist()
@@ -527,7 +512,9 @@ class IngestEngine:
                         "rows": report.n_missing_routing_key,
                     }
                 )
-            types = [t for t in counts if t is not None]
+            types = sorted(t for t in counts if t is not None)
+            if not types:
+                return report
 
             def _process_type(etype: str) -> None:
                 err = self._flush(batch, etype, batch_id, report)
@@ -545,21 +532,13 @@ class IngestEngine:
             # caller. Wrap per task: one wrapper hands every thread the
             # same Properties object, and a property one task sets
             # would leak into the others.
-            if len(types) <= 1:
-                for etype in sorted(types):
-                    _process_type(etype)
-            else:
-                with ThreadPoolExecutor(
-                    max_workers=min(8, len(types))
-                ) as pool:
-                    futures = [
-                        pool.submit(
-                            inheritable_thread_target(self.spark)(_process_type), etype
-                        )
-                        for etype in sorted(types)
-                    ]
-                    for fut in futures:
-                        fut.result()
+            with ThreadPoolExecutor(max_workers=min(8, len(types))) as pool:
+                futures = [
+                    pool.submit(inheritable_thread_target(self.spark)(_process_type), etype)
+                    for etype in types
+                ]
+                for fut in futures:
+                    fut.result()
             return report
         finally:
             batch.unpersist()

@@ -17,15 +17,17 @@ same contract over parquet directories + one manifest per table:
   slots in behind the same interface.
 
 A table's whole state lives in ``<table>/_table.json``: its schema,
-partition and sort layout, the active data version and the batch-id
-commit log. Like the live ClickHouse table, it is changed in one step:
-every store write lands its data first, then commits the manifest once
-(tmp file + ``os.replace``), so a reader or a crash sees either the old
-table or the new one, never a schema that does not match the rows.
+partition and sort layout, the active data version, the parquet files
+of that version and the batch-id commit log. Like the live ClickHouse
+table, it is changed in one step: every store write lands its data
+first, then commits the manifest once (tmp file + ``os.replace``), so a
+reader or a crash sees either the old table or the new one, never a
+schema that does not match the rows.
 
 Appends are directories of parquet files — the micro-batch pattern:
 each batch writes new files, never rewrites old ones (K2's multi-row
-INSERT amortization).
+INSERT amortization). A file no commit names is an append that died
+before its commit: reads skip it and the next write deletes it.
 
 Sink-protocol details of the reference with no Spark-side counterpart
 (out of correctness scope, per SURVEY §2.6-2.7): D6's textual DDL
@@ -118,10 +120,12 @@ class TableStore:
         return None if m is None else T.StructType.fromJson(m["schema"])
 
     def tables(self) -> list[str]:
+        """The event tables; ``_``-prefixed directories (the DLQ) are
+        not among them."""
         return sorted(
             d.name
             for d in self.root.iterdir()
-            if d.is_dir() and (d / _MANIFEST).exists()
+            if d.is_dir() and not d.name.startswith("_") and (d / _MANIFEST).exists()
         )
 
     # -- versioned data layout -------------------------------------------
@@ -180,6 +184,7 @@ class TableStore:
                 F.col(pc).isin([v for v in affected if v is not None])
                 | (F.col(pc).isNull() if None in affected else F.lit(False))
             )
+            _drop_uncommitted(p / prev, manifest)  # not copied along
             untouched = [
                 d
                 for d in sorted((p / prev).iterdir())
@@ -196,7 +201,7 @@ class TableStore:
         writer.parquet(str(new_dir))
         for d in untouched:
             shutil.copytree(d, new_dir / d.name, dirs_exist_ok=True)
-        self._commit(table, {**manifest, "current": new_dir.name})
+        self._commit(table, {**manifest, "current": new_dir.name, "files": _listing(new_dir)})
         for d in p.iterdir():
             if (
                 d.is_dir()
@@ -213,9 +218,15 @@ class TableStore:
             raise KeyError(f"no such table: {table}")
         schema = T.StructType.fromJson(m["schema"])
         data = self.table_path(table) / m["current"]
-        if not data.exists() or not any(data.rglob("*.parquet")):
+        on_disk = _listing(data)
+        files = m.get("files", on_disk)  # a manifest from before file lists
+        if not files:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(str(data))
+        # with an uncommitted append's files in the dir, name the committed ones
+        paths = [data] if files == on_disk else [data / f for f in files]
+        return self.spark.read.schema(schema).option("basePath", str(data)).parquet(
+            *map(str, paths)
+        )
 
     # -- write (D2/D3/D4 + K2) -------------------------------------------
     def write(
@@ -254,6 +265,7 @@ class TableStore:
                     "partition_by": list(partition_by or ()),
                     "sort_by": list(sort_by or ()),
                     "current": "data",
+                    "files": [],
                     "committed_batches": [],
                 }
             elif batch_id is not None and str(batch_id) in m["committed_batches"]:
@@ -285,12 +297,22 @@ class TableStore:
                 aligned = aligned.sortWithinPartitions(*part_cols, *sort_cols)
             data_dir = self.table_path(table) / m["current"]
             data_dir.mkdir(parents=True, exist_ok=True)
+            _drop_uncommitted(data_dir, m)
             writer = aligned.write.mode("append")
             if part_cols:
                 writer = writer.partitionBy(*part_cols)
             writer.parquet(str(data_dir))
-            self._commit(table, m)
+            self._commit(table, {**m, "files": _listing(data_dir)})
             return target
+
+    def overwrite(self, table: str, df: DataFrame) -> Path:
+        """Replace the table's rows with ``df`` (in the table's schema)
+        as one new data version; returns its directory."""
+        with self._writer(table):
+            m = self._manifest(table)
+            if m is None:
+                raise KeyError(f"no such table: {table}")
+            return self._publish(table, m, df)
 
     # -- maintenance ------------------------------------------------------
     def compact(self, table: str, target_file_bytes: int = 128 * 1024 * 1024) -> tuple[int, int]:
@@ -319,7 +341,7 @@ class TableStore:
             # co-locate each partition's rows so partitionBy emits one file
             # per (task, partition-value) — repartition on the keys
             df = self.read(table).repartition(int(n_target), *m["partition_by"])
-            new_dir = self._publish(table, m, df)
+            new_dir = self.overwrite(table, df)
             return (n_before, len(list(new_dir.rglob("*.parquet"))))
 
     def _partition_dir_names(self, values_df, pc: str) -> set[str]:
@@ -464,22 +486,19 @@ def _logged(manifest: dict, batch_id) -> dict:
     return {**manifest, "committed_batches": log[-_MAX_TRACKED_BATCHES:]}
 
 
-def swap_dirs(tmp: Path, live: Path) -> None:
-    """Replace ``live`` with ``tmp`` without a window where the data is
-    gone-for-good: the old dir is renamed aside (one atomic rename)
-    before the new one takes its place, and only then deleted. A crash
-    between the renames leaves a ``.old-*`` sibling holding the full
-    previous contents — recoverable by hand — instead of the
-    rmtree-then-rename shape whose mid-crash state loses the table
-    outright (ADVICE r1)."""
-    old = live.with_name(f".old-{uuid.uuid4().hex[:8]}")
-    live.rename(old)
-    try:
-        tmp.rename(live)
-    except OSError:
-        old.rename(live)  # roll back; tmp is left for inspection
-        raise
-    shutil.rmtree(old)
+def _listing(data: Path) -> list[str]:
+    """The parquet files a scan of ``data`` reads, relative to it and
+    sorted (Spark skips ``_``/``.`` names, but not ``k=v`` dirs)."""
+    rels = (f.relative_to(data) for f in data.rglob("*.parquet"))
+    keep = (r for r in rels if not any(n[0] in "_." and "=" not in n for n in r.parts))
+    return sorted(r.as_posix() for r in keep)
+
+
+def _drop_uncommitted(data: Path, manifest: dict) -> None:
+    """Delete the files of an append that died before its commit."""
+    on_disk = _listing(data)
+    for f in set(on_disk) - set(manifest.get("files", on_disk)):
+        (data / f).unlink()
 
 
 def _align(df: DataFrame, target: T.StructType) -> DataFrame:

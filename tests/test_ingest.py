@@ -577,12 +577,15 @@ def test_each_extra_type_costs_one_job(spark, tmp_path):
     assert jobs(6) - jobs(3) == 3
 
 
-def _failing(store, method, message="down"):
-    """Replace ``store.<method>`` with one that always raises; returns
-    the original so the test can heal the sink."""
+def _failing(store, method, message="down", table=None):
+    """Replace ``store.<method>`` with one that raises (for ``table``
+    only, when given); returns the original so the test can heal the
+    sink."""
     original = getattr(store, method)
 
-    def fail(*args, **kw):
+    def fail(df, name, *args, **kw):
+        if table not in (None, name):
+            return original(df, name, *args, **kw)
         raise RuntimeError(message)
 
     setattr(store, method, fail)
@@ -621,12 +624,11 @@ def test_dlq_replay_creates_table_in_configured_layout(spark, tmp_path):
 
 
 def test_dlq_replay_crashed_before_swap_inserts_once(spark, tmp_path, monkeypatch):
-    """A replay that dies after writing the table and before swapping
-    the DLQ leaves the DLQ as it was; rerun, it writes under the same
-    content-hash batch id and the commit log skips the rows."""
+    """A replay that dies after writing the table and before committing
+    the DLQ's replacement leaves the DLQ as it was; rerun, it writes
+    under the same content-hash batch id and the commit log skips the
+    rows."""
     import pytest
-
-    from redis_events_to_clickhouse_tables_spark.streaming import ingest
 
     engine, store = _engine(spark, tmp_path)
     engine.process_raw_batch(_raw(spark, [{"event_type": "t", "x": 0}]))
@@ -634,11 +636,11 @@ def test_dlq_replay_crashed_before_swap_inserts_once(spark, tmp_path, monkeypatc
     engine.process_raw_batch(_raw(spark, [{"event_type": "t", "x": 1}]))
     store.write = original
 
-    def crash(tmp, live):
-        raise RuntimeError("process died before the DLQ swap")
+    def crash(table, manifest):
+        raise RuntimeError("process died before the DLQ commit")
 
-    monkeypatch.setattr(ingest, "swap_dirs", crash)
-    with pytest.raises(RuntimeError, match="DLQ swap"):
+    monkeypatch.setattr(engine._dlq, "_commit", crash)
+    with pytest.raises(RuntimeError, match="DLQ commit"):
         engine.retry_dead_letters()
     assert engine.read_dlq().count() == 1
     monkeypatch.undo()
@@ -650,10 +652,11 @@ def test_dlq_replay_crashed_before_swap_inserts_once(spark, tmp_path, monkeypatc
     assert restarted.read_dlq().count() == 0
 
 
-def test_dlq_replay_sweeps_retry_dir_of_crashed_replay(spark, tmp_path, monkeypatch):
-    """A replay that dies before swapping the DLQ leaves its survivors
-    in a ``.retry-*`` dir; the next replay deletes it, since the live
-    ``data`` dir holds every row of it."""
+def test_dlq_replay_rerun_leaves_no_orphan_version_dir(spark, tmp_path, monkeypatch):
+    """A replay that dies before committing the DLQ's replacement leaves
+    that version's directory uncommitted; the rerun writes its own
+    version in its place, so the DLQ holds only its current version and
+    the one it replaced."""
     import pytest
 
     from redis_events_to_clickhouse_tables_spark.streaming import ingest
@@ -663,18 +666,27 @@ def test_dlq_replay_sweeps_retry_dir_of_crashed_replay(spark, tmp_path, monkeypa
     engine.process_raw_batch(_raw(spark, [{"event_type": "t", "x": 1}]))
     store.write = original
 
-    def crash(tmp, live):
-        raise RuntimeError("process died before the DLQ swap")
+    def crash(table, manifest):
+        raise RuntimeError("process died before the DLQ commit")
 
-    monkeypatch.setattr(ingest, "swap_dirs", crash)
-    with pytest.raises(RuntimeError, match="DLQ swap"):
+    monkeypatch.setattr(engine._dlq, "_commit", crash)
+    with pytest.raises(RuntimeError, match="DLQ commit"):
         engine.retry_dead_letters()
     monkeypatch.undo()
     dlq_root = store.root / ingest.DLQ_TABLE
-    assert any(d.name.startswith(".retry-") for d in dlq_root.iterdir())
+    assert sorted(d.name for d in dlq_root.iterdir() if d.is_dir()) == [
+        "data",
+        "data-v000001",
+    ]
 
-    IngestEngine(spark, store, IngestConfig()).retry_dead_letters()
-    assert [d.name for d in dlq_root.iterdir()] == ["data"]
+    rerun = IngestEngine(spark, store, IngestConfig())
+    rerun.retry_dead_letters()
+    current = rerun._dlq.data_dir(ingest.DLQ_TABLE)
+    assert sorted(d.name for d in dlq_root.iterdir() if d.is_dir()) == [
+        "data",
+        current.name,
+    ]
+    assert rerun.read_dlq().count() == 0
     assert [r["x"] for r in store.read("t").collect()] == [1]
 
 
@@ -727,18 +739,16 @@ def test_dlq_rerun_after_interleaved_dead_letter_inserts_once(spark, tmp_path, m
     replay wrote and lands only the new one."""
     import pytest
 
-    from redis_events_to_clickhouse_tables_spark.streaming import ingest
-
     engine, store = _engine(spark, tmp_path)
     original = _failing(store, "write")
     engine.process_raw_batch(_raw(spark, [{"event_type": "t", "x": 1}]))
     store.write = original
 
-    def crash(tmp, live):
-        raise RuntimeError("process died before the DLQ swap")
+    def crash(table, manifest):
+        raise RuntimeError("process died before the DLQ commit")
 
-    monkeypatch.setattr(ingest, "swap_dirs", crash)
-    with pytest.raises(RuntimeError, match="DLQ swap"):
+    monkeypatch.setattr(engine._dlq, "_commit", crash)
+    with pytest.raises(RuntimeError, match="DLQ commit"):
         engine.retry_dead_letters()
     monkeypatch.undo()
     assert [r["x"] for r in store.read("t").collect()] == [1]
@@ -751,3 +761,96 @@ def test_dlq_rerun_after_interleaved_dead_letter_inserts_once(spark, tmp_path, m
     IngestEngine(spark, store, IngestConfig()).retry_dead_letters()
     assert sorted(r["x"] for r in store.read("t").collect()) == [1, 2]
     assert engine.read_dlq().count() == 0
+
+
+def test_dead_letters_land_in_the_dlq_tables_first_version(spark, tmp_path):
+    """The DLQ is a table of its own store on the event store's root:
+    until the first replay its files sit in ``_dlq/data``, the event
+    store still lists and names no ``_dlq`` table."""
+    import pytest
+
+    from redis_events_to_clickhouse_tables_spark.streaming.ingest import DLQ_TABLE
+
+    engine, store = _engine(spark, tmp_path)
+    _failing(store, "write", table="poison")
+    engine.process_raw_batch(
+        _raw(spark, [{"event_type": "poison", "x": 7}, {"event_type": "ok", "x": 1}])
+    )
+    assert list((store.root / DLQ_TABLE / "data").glob("*.parquet"))
+    assert store.tables() == ["ok"]
+    with pytest.raises(ValueError):
+        store.table_path(DLQ_TABLE)
+
+
+def test_replayed_tick_dead_letters_once(spark, tmp_path):
+    """A tick id processed twice, with the same table failing both times,
+    dead-letters its rows once: the DLQ's commit log holds
+    ``<batch id>/<table>``, and the replay counts and traces nothing."""
+    engine, store = _engine(spark, tmp_path)
+    _failing(store, "write")
+    raw = _raw(spark, [{"event_type": "t", "x": 1}])
+    assert engine.process_raw_batch(raw, batch_id=5).n_dead_lettered == 1
+    report = engine.process_raw_batch(raw, batch_id=5)
+    assert report.n_dead_lettered == 0
+    assert engine.read_dlq().count() == 1
+    trace = (store.root / "_trace.jsonl").read_text().splitlines()
+    assert [e["event"] for e in map(json.loads, trace)].count("dead_letter") == 1
+
+
+class _Killed(BaseException):
+    """A process death: no ``except Exception`` on the way catches it."""
+
+
+def test_dlq_replay_killed_at_any_rename_keeps_each_dead_letter_once(
+    spark, tmp_path, monkeypatch
+):
+    """A replay killed at its k-th ``os.replace``/``Path.rename``, for
+    every k it makes: a fresh engine's replay then leaves every dead
+    letter exactly once, in its table or in the DLQ."""
+    import os
+    import pathlib
+    import shutil
+
+    seed = tmp_path / "seed"
+    engine = IngestEngine(spark, TableStore(spark, seed))
+    _failing(engine.store, "write")
+    for x, etype in ((1, "t"), (2, "t"), (3, "u")):
+        engine.process_raw_batch(_raw(spark, [{"event_type": etype, "x": x}]))
+    real = {"replace": os.replace, "rename": pathlib.Path.rename}
+    kills = 0
+    for k in range(1, 10):
+        root = tmp_path / f"k{k}"
+        shutil.copytree(seed, root)
+        store = TableStore(spark, root)
+        # u fails again in the killed replay, so it rewrites the DLQ
+        _failing(store, "write", "still down", table="u")
+        calls = []
+
+        def kill_at_k(fn):
+            def call(*args, **kw):
+                calls.append(fn)
+                if len(calls) == k:
+                    raise _Killed
+                return fn(*args, **kw)
+
+            return call
+
+        monkeypatch.setattr(os, "replace", kill_at_k(real["replace"]))
+        monkeypatch.setattr(pathlib.Path, "rename", kill_at_k(real["rename"]))
+        try:
+            IngestEngine(spark, store).retry_dead_letters()
+        except _Killed:
+            kills += 1
+        finally:
+            monkeypatch.undo()
+        fresh_store = TableStore(spark, root)
+        fresh = IngestEngine(spark, fresh_store)
+        fresh.retry_dead_letters()
+        landed = [
+            r["x"] for t in fresh_store.tables() for r in fresh_store.read(t).collect()
+        ]
+        waiting = [json.loads(r["payload"])["x"] for r in fresh.read_dlq().collect()]
+        assert sorted(landed + waiting) == [1, 2, 3], (k, landed, waiting)
+        if len(calls) < k:  # the replay made fewer than k renames: all covered
+            break
+    assert kills >= 3  # two table commits and the DLQ's

@@ -315,3 +315,55 @@ def test_expression_cache_reuse_and_correctness(spark):
         b1, IngestConfig(split_records_as_columns=True)
     ).collect()
     assert len(N._EXPR_CACHE) > grew
+
+
+@pytest.mark.parametrize("split", [False, True])
+def test_tick_grouped_normalize_matches_normalize_events(spark, split):
+    """The tick normalizes with ``normalize_batch``; every golden test
+    above drives ``normalize_events``. On one batch of three types whose
+    keys and array lengths differ, every type's rows come out of the
+    grouped normalize as ``normalize_events`` makes them from that
+    type's rows, apart from the stamped columns (``received_at`` and
+    ``timestamp`` too, for a type that carries no ``__received_at``)."""
+    from pyspark.sql import functions as F
+
+    from redis_events_to_clickhouse_tables_spark.streaming.normalize import (
+        normalize_batch,
+    )
+
+    cfg = IngestConfig(split_records_as_columns=split, split_array_items_as_columns=split)
+    events = _events(
+        spark,
+        [
+            FIX1,
+            dict(FIX2, event_type="event_nested"),
+            dict(
+                FIX2,
+                event_type="event_nested",
+                manger=["dupain", "beurre", "confiture"],
+                objectMoche={"profond": 2},
+            ),
+            {
+                "event_type": "event_carried",
+                "manger": ["a", "b"],
+                "zozo": "x",
+                "__received_at": "2020-01-02T03:04:05.000Z",
+            },
+        ],
+    )
+    batch = normalize_batch(events, cfg)
+    try:
+        assert sorted(batch.counts) == ["event_carried", "event_nested", "event_session"]
+        for t in batch.counts:
+            got = batch.finish(t)
+            want = normalize_events(events.filter(F.col("event_type") == t), cfg)
+            assert got.dtypes == want.dtypes, t
+            stamped = {"sent_at", "message_id"}
+            if t != "event_carried":
+                stamped |= {"received_at", "timestamp"}
+            keep = [c for c in got.columns if c not in stamped]
+            assert sorted(map(str, got.select(keep).collect())) == sorted(
+                map(str, want.select(keep).collect())
+            ), t
+    finally:
+        batch.unpersist()

@@ -114,19 +114,55 @@ def test_engine_streaming_batches_idempotent(spark, tmp_path):
     assert store.read("e").count() == 1
 
 
-def test_swap_dirs_rolls_back_when_replacement_missing(spark, tmp_path):
-    # crash-safety: swap never has a window where the live data is
-    # deleted before the replacement is in place
+class _Killed(BaseException):
+    """A process death: no ``except Exception`` on the way catches it."""
+
+
+def _killed(*args, **kw):
+    raise _Killed
+
+
+def test_append_killed_before_its_commit_stays_invisible(spark, tmp_path, monkeypatch):
+    """An append whose process dies after its files land and before its
+    manifest commit is no part of the table: reads skip its files, and
+    the rerun of its batch id deletes them and lands the rows once."""
+    import os
+
     import pytest
 
-    from redis_events_to_clickhouse_tables_spark.streaming.store import swap_dirs
+    def on_disk():
+        return sorted(f.name for f in store.data_dir("t").glob("*.parquet"))
 
-    live = tmp_path / "data"
-    live.mkdir()
-    (live / "part-0.parquet").write_text("payload")
-    with pytest.raises(OSError):
-        swap_dirs(tmp_path / "does-not-exist", live)
-    assert (live / "part-0.parquet").read_text() == "payload"
+    store = _store(spark, tmp_path)
+    store.write(_df(spark, [(0, "d")]), "t", batch_id=0)
+    committed = on_disk()
+    monkeypatch.setattr(os, "replace", _killed)
+    with pytest.raises(_Killed):
+        store.write(_df(spark, [(1, "d")]), "t", batch_id=1)
+    monkeypatch.undo()
+    assert set(on_disk()) > set(committed)  # the killed append's files
+    assert [r["k"] for r in store.read("t").collect()] == [0]
+    store.write(_df(spark, [(1, "d")]), "t", batch_id=1)
+    assert sorted(r["k"] for r in store.read("t").collect()) == [0, 1]
+    assert on_disk() == store._manifest("t")["files"]
+
+
+def test_pruned_rewrite_leaves_a_killed_appends_files_behind(spark, tmp_path, monkeypatch):
+    """A partition-pruned rewrite copies the partitions it does not
+    touch as they are, but not the files of an append killed before its
+    commit."""
+    import os
+
+    import pytest
+
+    store = _store(spark, tmp_path)
+    store.write(_df(spark, [(0, "d1"), (1, "d2")]), "t", partition_by=("day",))
+    monkeypatch.setattr(os, "replace", _killed)
+    with pytest.raises(_Killed):
+        store.write(_df(spark, [(2, "d1")]), "t")
+    monkeypatch.undo()
+    assert store.delete_where("t", "day = 'd2'") == 1
+    assert [r["k"] for r in store.read("t").collect()] == [0]
 
 
 def test_compaction_leaves_no_old_dirs(spark, tmp_path):

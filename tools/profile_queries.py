@@ -15,9 +15,9 @@ Times build+action exactly like bench.py (count action, clearCache
 between reps) so numbers are comparable to the BENCH records, and
 optionally via the noop sink to see full-column materialization cost.
 
-Each line also shows the jobs of the build phase (eager driver actions
-and schema inference while the query is built) and of the action, and
-the codegen classes compiled in each rep (a warm rep should compile
+Each line also shows, per rep, the jobs of the build phase (eager
+driver actions and schema inference while the query is built) and of
+the action, and the codegen classes compiled (a warm rep should compile
 none; a nonzero count there is a recompile: a codegen cache too small,
 or a query whose generated source changes from build to build).
 
@@ -30,6 +30,10 @@ read from /proc for this process tree) by where it ran:
   py_workers  the Python workers under the JVM (mapInArrow/mapInPandas)
 A Python worker that grows expensive per task shows in py_workers
 without a profiler.
+
+Profiles the current directory's checkout when it holds the package,
+else the checkout this tool sits in; the first line names the package
+path it imported.
 """
 
 from __future__ import annotations
@@ -40,8 +44,14 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(
+    0,
+    os.getcwd()
+    if os.path.isdir("redis_events_to_clickhouse_tables_spark")
+    else os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+)
 
+import redis_events_to_clickhouse_tables_spark
 from redis_events_to_clickhouse_tables_spark.registry import load_all
 from redis_events_to_clickhouse_tables_spark.session import get_spark
 
@@ -136,6 +146,7 @@ def main() -> int:
             suffix = a.split("=", 1)[1]
         elif a.startswith("--reps="):
             reps = int(a.split("=", 1)[1])
+    print(f"package: {os.path.dirname(redis_events_to_clickhouse_tables_spark.__file__)}")
     reg = load_all()
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
@@ -188,7 +199,7 @@ def main() -> int:
             f" (build {build_secs[best]:.3f}s,"
             f" action {attempts[best] - build_secs[best]:.3f}s;"
             f" all {[round(a, 3) for a in attempts]})"
-            f" build_jobs={build_jobs[best]} action_jobs={action_jobs[best]}"
+            f" build_jobs={build_jobs} action_jobs={action_jobs}"
             f" compiles={compiles}"
         )
         print(f"  cpu_ms per rep: {cpu}")
