@@ -14,12 +14,9 @@ dead-lettering: a table whose write fails gets its events appended to
 the ``_dlq`` table with attempt counters and the error (E1), and
 events of non-critical types that have already failed once are
 dropped (E4/F2). The DLQ is a ``TableStore`` table on the event
-store's root, with the event tables' commit protocol and writer lock.
-``retry_dead_letters`` replays it through the tick's own normalize and
-per-table flush (``_flush``) under content-hash batch ids, then
-replaces it with what is left in one commit, so a replay killed at any
-point reruns into the commit logs instead of losing or duplicating
-rows (E2/E3). ``_trace`` is the JSONL side-output (K4).
+store's root, with the event tables' commit protocol and writer lock;
+``retry_dead_letters`` replays it through the tick's own flush
+(E2/E3). ``_trace`` is the JSONL side-output (K4).
 
 Scale note: a tick's fixed cost does not grow with its number of
 event types T. The batch is flattened once and every table's columns
@@ -53,9 +50,14 @@ from ..plans.inference import parse_events
 # normalize_events is not called here; the benchmark's traced runs bind
 # it as ``ingest.normalize_events`` (perfbench/spans.py)
 from .normalize import NormalizedBatch, normalize_batch, normalize_events  # noqa: F401
-from .store import TableStore
+from .store import TableStore, _listing
 
 DLQ_TABLE = "_dlq"
+# the columns _dead_letter writes
+_DLQ_SCHEMA = (
+    "target_table string, payload string, error string, attempts bigint,"
+    " dead_lettered_at timestamp"
+)
 # in-file sort order of every table (the MergeTree ORDER BY sent_at
 # analog, D2)
 _SORT_BY = ("sent_at",)
@@ -68,10 +70,9 @@ _TARGET_ROWS_PER_FILE = 1_000_000
 
 # Spark failure shapes that signal an interrupted/cancelled job (query
 # stop, context shutdown) rather than a bad batch — see the E1 catch.
-# Classification is structural (ADVICE r4: the old blind substring
-# match over str(exc) also scanned offending ROW VALUES that Spark
-# quotes in data errors, so a poison value containing "cancelled"
-# would re-raise forever and stall ingestion):
+# Classification is structural, not a substring match over str(exc):
+# Spark quotes ROW VALUES in data errors, and a poison value reading
+# "cancelled" would re-raise forever and stall ingestion:
 #  - exception CLASS names along the python AND java cause chains;
 #  - Spark error conditions that name a cancellation (conditions are
 #    Spark-generated and never quote row data);
@@ -169,7 +170,20 @@ def _is_interruption(exc: BaseException) -> bool:
 
 class _DeadLetterStore(TableStore):
     """A store whose one table is ``DLQ_TABLE``, a name the event store
-    rejects: no event type routes into it."""
+    rejects: no event type routes into it. Opening a root without that
+    table commits it, adopting any dead letters appended to
+    ``<root>/_dlq/data`` before the DLQ had a manifest; as the table
+    exists before the first dead letter lands, the files of one killed
+    before its commit are never adopted."""
+
+    def __init__(self, spark: SparkSession, root):
+        super().__init__(spark, root)
+        if not self.table_exists(DLQ_TABLE):
+            data = self.root / DLQ_TABLE / "data"
+            data.mkdir(parents=True, exist_ok=True)
+            schema = spark.createDataFrame([], _DLQ_SCHEMA).schema.jsonValue()
+            layout = {"partition_by": [], "sort_by": [], "current": "data", "committed_batches": []}
+            self._commit(DLQ_TABLE, {**layout, "schema": schema, "files": _listing(data)})
 
     def table_path(self, table: str) -> Path:
         if table != DLQ_TABLE:
@@ -194,8 +208,8 @@ class IngestReport:
     n_dropped_non_critical: int = 0
     tables: dict[str, int] = field(default_factory=dict)
     errors: dict[str, str] = field(default_factory=dict)
-    # Wall seconds per pipeline phase (BENCH r6 item 6: a depressed
-    # ingest headline must self-attribute). parse_infer is the JSON
+    # Wall seconds per pipeline phase, so a slow tick says where its
+    # time went. parse_infer is the JSON
     # schema inference; normalize is the serial batch-level flatten plus
     # the grouped decision aggregate (which is also the routing table);
     # append is the SUM across the concurrent per-table flushes (P8 +
@@ -287,42 +301,33 @@ class IngestEngine:
         )
 
     def read_dlq(self) -> DataFrame:
-        """The dead letters; KeyError before the first one."""
+        """The dead letters."""
         return self._dlq.read(DLQ_TABLE)
 
     def retry_dead_letters(self, max_attempts: int = 5) -> IngestReport:
         """E2/E3: replay dead-lettered events back into their tables.
 
-        The DLQ replaces the reference's re-enqueue, which puts failed
-        events back on the Redis queue flagged ``__is_single_retry`` and
-        inserts them through the bulk path's insert and schema-evolution
-        client, with Bull retrying up to 5 attempts (src/main.ts:284-363,
-        :482-511); the Redis source here never re-enqueues. Instead the
-        DLQ rows under the attempt ceiling are parsed and written like a
-        tick: ``normalize_batch``, then ``_flush`` per
-        table. A table that fails again gets its rows back with
-        ``attempts`` + 1, or dropped for non-critical types (E4); rows
-        at the ceiling stay parked (poison). E3's busy-client mutex has
-        no equivalent; its attempt counter is kept. An interruption
-        aborts the replay and leaves the DLQ untouched.
+        The DLQ replaces the reference's re-enqueue of failed events
+        onto the Redis queue, flagged ``__is_single_retry``, with Bull
+        retrying up to 5 attempts (src/main.ts:284-363, :482-511). DLQ
+        rows under the attempt ceiling are written like a tick
+        (``normalize_batch``, then ``_flush``); a table that fails again
+        gets its rows back with ``attempts`` + 1, or drops them for
+        non-critical types (E4); rows at the ceiling stay parked
+        (poison). E3's busy-client mutex has no equivalent. An
+        interruption aborts the replay and leaves the DLQ untouched.
 
         Each dead-letter write group (one ``_dead_letter`` call: its
-        ``target_table`` and ``dead_lettered_at``) is replayed as its own
-        batch: parsed, normalized and flushed under the batch id ``dlq-``
-        + 24 hex digits of the sha256 of its table, its dead-letter time
-        and its sorted payloads, so one write job per group. What is
-        left (parked rows, and rows that failed again) then replaces the
-        DLQ in one ``TableStore.overwrite``; the DLQ's writer lock is
-        held from the read to that commit, so a tick dead-lettering
-        meanwhile waits. A replay killed before that commit left the DLQ
-        as it was, plus whatever ticks dead-lettered since; its rerun
-        gets the same ids for the groups it wrote, and the store's
-        commit log skips them.
+        ``target_table`` and ``dead_lettered_at``) is flushed as its own
+        batch under the id ``dlq-`` + 24 hex digits of the sha256 of its
+        table, time and sorted payloads. What is left then replaces the
+        DLQ in one ``TableStore.overwrite``, under the DLQ's writer lock
+        held since the read. A replay killed before that commit left the
+        DLQ as it was; its rerun gets the same ids for the groups it
+        wrote, and the commit logs skip them.
         """
         report = IngestReport(batch_id=-1)
         with self._dlq._writer(DLQ_TABLE):  # noqa: SLF001 — the DLQ's own lock
-            if not self._dlq.table_exists(DLQ_TABLE):
-                return report
             dlq = self._dlq.read(DLQ_TABLE).persist()
             try:
                 eligible = dlq.filter(F.col("attempts") < max_attempts)
@@ -431,17 +436,12 @@ class IngestEngine:
         except Exception as exc:  # noqa: BLE001 — E1: the caller dead-letters
             if _is_interruption(exc):
                 # A stop()/shutdown interrupt mid-flush is NOT a bad
-                # batch: demoting it would let the micro-batch "succeed",
-                # commit its offsets, and strand the events in the DLQ
-                # (observed: a maintenance restart racing an in-flight
-                # batch silently dropped a row to the DLQ forever).
-                # Re-raise so the batch aborts uncommitted and replays
-                # on restart — the idempotent batch-id log absorbs any
-                # partial table writes. The detection errs toward
-                # re-raise: a false positive costs one replay — and only
-                # up to the replay cap, so a deterministic poison batch
-                # whose error text mimics a cancellation still reaches
-                # the DLQ instead of stalling ingestion (ADVICE r4).
+                # batch: demoting it would commit the micro-batch's
+                # offsets and strand its events in the DLQ. Re-raise, so
+                # it replays on restart into the batch-id logs. A false
+                # positive costs one replay, up to the replay cap, so a
+                # poison batch whose error mimics a cancellation still
+                # reaches the DLQ instead of stalling ingestion.
                 capped = False
                 if batch_id is not None:
                     key = (batch_id, etype)

@@ -136,10 +136,7 @@ class TableStore:
     # contract of a table format (Delta/Iceberg keep old files until
     # vacuum for the same reason): a reader that planned its scan
     # against version N keeps valid file paths while the commit of N+1
-    # happens, for at least one full maintenance interval. The earlier
-    # rename-aside swap invalidated in-flight readers' paths at the
-    # instant of the swap (observed: FileNotFoundException in a monitor
-    # query racing compact()).
+    # happens, for at least one full maintenance interval.
 
     def data_dir(self, table: str) -> Path:
         """The ACTIVE data directory (resolve before every scan)."""
@@ -305,14 +302,14 @@ class TableStore:
             self._commit(table, {**m, "files": _listing(data_dir)})
             return target
 
-    def overwrite(self, table: str, df: DataFrame) -> Path:
+    def overwrite(self, table: str, df: DataFrame) -> None:
         """Replace the table's rows with ``df`` (in the table's schema)
-        as one new data version; returns its directory."""
+        as one new data version."""
         with self._writer(table):
             m = self._manifest(table)
             if m is None:
                 raise KeyError(f"no such table: {table}")
-            return self._publish(table, m, df)
+            self._publish(table, m, df)
 
     # -- maintenance ------------------------------------------------------
     def compact(self, table: str, target_file_bytes: int = 128 * 1024 * 1024) -> tuple[int, int]:
@@ -332,17 +329,17 @@ class TableStore:
             if m is None:
                 return (0, 0)
             data_dir = self.table_path(table) / m["current"]
-            files = list(data_dir.rglob("*.parquet")) if data_dir.exists() else []
+            files = m.get("files", _listing(data_dir))  # the committed files
             if not files:
                 return (0, 0)
             n_before = len(files)
-            total = sum(f.stat().st_size for f in files)
+            total = sum((data_dir / f).stat().st_size for f in files)
             n_target = max(1, -(-total // target_file_bytes))  # ceil
             # co-locate each partition's rows so partitionBy emits one file
             # per (task, partition-value) — repartition on the keys
             df = self.read(table).repartition(int(n_target), *m["partition_by"])
-            new_dir = self.overwrite(table, df)
-            return (n_before, len(list(new_dir.rglob("*.parquet"))))
+            self.overwrite(table, df)
+            return (n_before, len(self._manifest(table)["files"]))
 
     def _partition_dir_names(self, values_df, pc: str) -> set[str]:
         """Exact Spark-rendered partition directory names for the
@@ -455,7 +452,7 @@ class TableStore:
             if tag is not None and tag in m["committed_batches"]:
                 return None
             existing = self.read(table)
-            # consumed by 4 downstream plans (review r5)
+            # consumed by 4 downstream plans
             incoming = dedupe(_align(df, existing.schema)).persist()
             matched = existing.join(
                 incoming.select(*keys), list(keys), "left_semi"

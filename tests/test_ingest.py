@@ -854,3 +854,57 @@ def test_dlq_replay_killed_at_any_rename_keeps_each_dead_letter_once(
         if len(calls) < k:  # the replay made fewer than k renames: all covered
             break
     assert kills >= 3  # two table commits and the DLQ's
+
+
+def test_dlq_without_manifest_is_adopted(spark, tmp_path):
+    """Dead letters appended to ``_dlq/data`` before the DLQ had a
+    manifest become its first version: a later dead letter keeps them,
+    and one replay lands both."""
+    import shutil
+
+    from redis_events_to_clickhouse_tables_spark.streaming.ingest import DLQ_TABLE
+
+    old, _ = _engine(spark, tmp_path / "old")
+    _failing(old.store, "write")
+    old.process_raw_batch(_raw(spark, [{"event_type": "t", "x": 1}]))
+    store = TableStore(spark, tmp_path / "warehouse")
+    legacy = store.root / DLQ_TABLE / "data"
+    shutil.copytree(old.store.root / DLQ_TABLE / "data", legacy)
+    assert not store.root.joinpath(DLQ_TABLE, "_table.json").exists()
+
+    engine = IngestEngine(spark, store, IngestConfig())
+    assert engine.read_dlq().count() == 1
+    original = _failing(store, "write")
+    engine.process_raw_batch(_raw(spark, [{"event_type": "t", "x": 2}]))
+    store.write = original
+    assert engine.read_dlq().count() == 2
+    engine.retry_dead_letters()
+    assert sorted(r["x"] for r in store.read("t").collect()) == [1, 2]
+    assert engine.read_dlq().count() == 0
+
+
+def test_first_dead_letter_killed_before_its_commit_lands_once(spark, tmp_path, monkeypatch):
+    """The DLQ is committed before its first dead letter lands: when
+    that one dies before committing its rows, a fresh engine does not
+    adopt them, and the rerun tick dead-letters them once."""
+    import pytest
+
+    engine, store = _engine(spark, tmp_path)
+    _failing(store, "write")
+    commit = engine._dlq._commit
+
+    def rows_commit_dies(table, manifest):
+        if manifest["files"]:
+            raise _Killed
+        commit(table, manifest)
+
+    monkeypatch.setattr(engine._dlq, "_commit", rows_commit_dies)
+    raw = _raw(spark, [{"event_type": "t", "x": 1}])
+    with pytest.raises(_Killed):
+        engine.process_raw_batch(raw, batch_id=1)
+    monkeypatch.undo()
+
+    restarted = IngestEngine(spark, store, IngestConfig())
+    assert restarted.read_dlq().count() == 0
+    assert restarted.process_raw_batch(raw, batch_id=1).n_dead_lettered == 1
+    assert restarted.read_dlq().count() == 1
